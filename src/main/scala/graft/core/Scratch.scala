@@ -23,11 +23,7 @@ object Scratch {
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
       import scala.jdk.CollectionConverters._
       dirs.asScala.foreach { d =>
-        try {
-          val s = Files.walk(d)
-          try s.iterator().asScala.toSeq.reverse.foreach(p => Files.deleteIfExists(p))
-          finally s.close()
-        } catch { case _: Throwable => () }
+        try Fs.deleteTree(d) catch { case _: Throwable => () }
       }
     }, "graft-scratch-cleanup"))
   }

@@ -35,13 +35,6 @@ import org.apache.spark.sql.types._
   * for every declared query; the null keeps the kernel total instead of
   * wiring an internal error class.
   */
-object AdcScore {
-  /** Column helper mirroring VecDot.dotCol: one shared cast-and-call site. */
-  def adcCol(lut: org.apache.spark.sql.Column,
-      codes: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    org.apache.spark.sql.functions.call_function("adc_score", lut, codes)
-}
-
 case class AdcScore(left: Expression, right: Expression)
   extends BinaryExpression {
 

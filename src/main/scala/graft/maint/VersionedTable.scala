@@ -9,6 +9,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.core.Fs
+
 /** Versioned parquet table — the engine's stand-in for the reference's
   * Delta maintenance surface (SURVEY.md §2.11: DESCRIBE HISTORY M2,
   * time-travel S6, RESTORE M3, VACUUM M4, OPTIMIZE compaction M5,
@@ -34,78 +36,9 @@ import org.apache.spark.sql.types._
   */
 final class VersionedTable(spark: SparkSession, root: String) {
 
-  private def manifestPath: Path = Paths.get(root, "_manifest")
+  import VersionedTable.Commit
 
-  private def manifestLines: Seq[String] =
-    if (Files.exists(manifestPath))
-      Files.readAllLines(manifestPath, StandardCharsets.UTF_8).asScala.toSeq
-    else Seq.empty
-
-  private case class Commit(
-      version: Long, operation: String, rows: Long,
-      location: Option[String], statsLocation: Option[String],
-      ts: Option[String], deletePredicates: Seq[String],
-      partitionBy: Seq[String])
-
-  private def parse(line: String): Commit = {
-    // {"version":N,"operation":"...","rows":N[,"location":"...",
-    //  "statsLocation":"...","ts":"...","deletePredicates":["...",...],
-    //  "partitionBy":["...",...]]}
-    val v = """"version":(\d+)""".r.findFirstMatchIn(line).get.group(1).toLong
-    val op = """"operation":"([^"]*)"""".r.findFirstMatchIn(line).get.group(1)
-    val rows = """"rows":(\d+)""".r.findFirstMatchIn(line).get.group(1).toLong
-    val loc = """"location":"([^"]*)"""".r.findFirstMatchIn(line).map(_.group(1))
-    val sloc = """"statsLocation":"([^"]*)"""".r.findFirstMatchIn(line).map(_.group(1))
-    val ts = """"ts":"([^"]*)"""".r.findFirstMatchIn(line).map(_.group(1))
-    def strList(field: String): Seq[String] =
-      (s""""$field":\\[([^\\]]*)\\]""").r.findFirstMatchIn(line)
-        .map(_.group(1)).filter(_.nonEmpty)
-        .map(_.split("\",\"").map(_.stripPrefix("\"").stripSuffix("\"")).toSeq)
-        .getOrElse(Seq.empty)
-    Commit(v, op, rows, loc, sloc, ts,
-      strList("deletePredicates"), strList("partitionBy"))
-  }
-
-  private def commits: Seq[Commit] = manifestLines.map(parse)
-
-  /** The ONE manifest-line serializer. Four commit paths write lines;
-    * the regex parser is field-order-independent, but hand-rolled copies
-    * had already drifted comma conventions between sites — a new field
-    * gets added here or nowhere. */
-  private def manifestLine(version: Long, operation: String, rows: Long,
-      ts: Option[String] = None,
-      location: Option[String] = None, statsLocation: Option[String] = None,
-      deletePredicates: Seq[String] = Nil,
-      partitionBy: Seq[String] = Nil): String = {
-    // the ONE serializer is also the ONE validator: the regex parser
-    // above does no unescaping, so a '"' in any string field would break
-    // the line, and strList's [^\]]* would silently truncate a list
-    // element containing ']' (e.g. tags[1]) — logically deleted rows
-    // would resurrect on read. Reject both at write time, loudly.
-    val strFields = Seq(operation) ++ ts ++ location ++ statsLocation ++
-      deletePredicates ++ partitionBy
-    require(strFields.forall(s => !s.contains("\"")),
-      s"manifest string fields must not contain '\"' (unescaped format): $strFields")
-    // a newline/CR would SPLIT the appended line: the fragment fails the
-    // version regex on every later read and bricks the table permanently
-    require(strFields.forall(s => !s.exists(c => c == '\n' || c == '\r')),
-      s"manifest string fields must not contain line breaks: $strFields")
-    require((deletePredicates ++ partitionBy).forall(s => !s.contains("]")),
-      "manifest list elements must not contain ']' (regex list parser " +
-        s"would truncate): ${deletePredicates ++ partitionBy}")
-    val sb = new StringBuilder(
-      s"""{"version":$version,"operation":"$operation","rows":$rows""")
-    ts.foreach(t => sb.append(s""","ts":"$t""""))
-    location.foreach(l => sb.append(s""","location":"$l""""))
-    statsLocation.foreach(l => sb.append(s""","statsLocation":"$l""""))
-    if (deletePredicates.nonEmpty)
-      sb.append(deletePredicates.map(p => s""""$p"""")
-        .mkString(""","deletePredicates":[""", ",", "]"))
-    if (partitionBy.nonEmpty)
-      sb.append(partitionBy.map(c => s""""$c"""")
-        .mkString(""","partitionBy":[""", ",", "]"))
-    sb.append("}\n").toString
-  }
+  private def commits: Seq[Commit] = VersionedTable.manifest(root).getOrElse(Nil)
 
   /** Data directory of a committed version — local `v=N` unless the
     * manifest entry points elsewhere (shallow clone). */
@@ -195,18 +128,9 @@ final class VersionedTable(spark: SparkSession, root: String) {
   /** Single commit path with optimistic concurrency (the Delta protocol's
     * shape: uniquely named staging + a conditional commit). Per attempt:
     * write data + stats into a uniquely named staging dir (fully
-    * concurrent), then under the table's commit lock RE-CHECK that `next`
-    * is still unclaimed, clear any orphaned `_changes/v=next` (left by a
-    * writer that died pre-manifest — a later commit must not adopt a
-    * stale feed), derive and stage this commit's feed, rename staging
-    * into place, and append the manifest line. The feed MUST stage inside
-    * the critical section: its diff basis (version next-1) and the
-    * `_changes/v=next` slot are only stable while holding the commit, and
-    * a racing loser could otherwise clobber a winner's committed feed.
-    * The manifest append is the commit point, so data, stats, and feed
-    * become visible together or not at all. A writer that lost the race
-    * cleans its staging and retries against the new head — the behavior
-    * of Delta's ConcurrentAppend resolution.
+    * concurrent), then publish it as `next` through [[publishVersion]].
+    * A writer that lost the race retries against the new head — the
+    * behavior of Delta's ConcurrentAppend resolution.
     */
   private def commit(df: DataFrame, operation: String,
       stageFeed: Option[(Long, String) => Unit], commitTs: Option[String] = None,
@@ -218,8 +142,7 @@ final class VersionedTable(spark: SparkSession, root: String) {
     // make a constraint expression fail analysis with a worse error
     enforceSchema(df, mergeSchema, overwriteSchema)
     validateConstraints(df)
-    var attempt = 0
-    while (true) {
+    retrying("commit of") {
       val next = latestVersion.map(_ + 1).getOrElse(0L)
       // Schema enforcement must see the head THIS attempt commits onto: a
       // loser's retry lands on the winner's schema, and validating only
@@ -228,7 +151,7 @@ final class VersionedTable(spark: SparkSession, root: String) {
       // error). Re-checking per attempt against the head `next` derives
       // from is the local analogue of Delta's ConcurrentWrite metadata-
       // conflict resolution: the conflicting retry FAILS instead. The
-      // lock's head re-check below guarantees no commit lands on a head
+      // lock's head re-check guarantees no commit lands on a head
       // this validation didn't see. (Yes, the first attempt re-validates
       // what the entry check already saw — but the constraint pass
       // between them is a full Spark job, ample time for a concurrent
@@ -245,68 +168,83 @@ final class VersionedTable(spark: SparkSession, root: String) {
       // and this parquet stand-in has no log-recorded schema to give such
       // a version — the schema-less stats read below would otherwise die
       // with an opaque 'unable to infer schema'
-      if (stagedDataFiles(stage).isEmpty) {
-        deleteTree(Paths.get(stage))
+      if (Fs.dataFiles(Paths.get(s"$stage/data")).isEmpty) {
+        Fs.deleteTree(Paths.get(stage))
         sys.error(s"commit of $root staged zero data files (empty snapshot" +
           " with partitionBy?): a readable version needs at least one" +
           " schema-bearing parquet file")
       }
       val rows = writeStats(s"$stage/data", s"$stage/stats")
-      val won = VersionedTable.commitLock(root).synchronized {
-        val headNow = latestVersion
-        if (headNow.map(_ + 1).getOrElse(0L) != next) false
-        else {
-          // clear a crashed writer's orphans for this slot: a staged feed
-          // must not become this version's CDC rows, and an orphaned data/
-          // stats dir (death between move and manifest append) would make
-          // Files.move throw forever — the manifest proves neither is
-          // committed, so both are safe to remove under the lock
-          deleteTree(Paths.get(s"$root/_changes/v=$next"))
-          deleteTree(Paths.get(s"$root/v=$next"))
-          deleteTree(Paths.get(s"$root/_stats/v=$next"))
-          // the feed derives from the STAGED data (still at $stage/data —
-          // the move below happens after), so the writer's upstream
-          // pipeline is never re-executed for the diff
-          stageFeed.foreach(f => f(next, s"$stage/data"))
-          Files.createDirectories(Paths.get(root))
-          Files.createDirectories(Paths.get(s"$root/_stats"))
-          Files.move(Paths.get(s"$stage/data"), Paths.get(s"$root/v=$next"))
-          Files.move(Paths.get(s"$stage/stats"), Paths.get(s"$root/_stats/v=$next"))
-          // partition columns are recorded in the commit (the stand-in
-          // for Delta's log schema): readers of the manifest know them
-          // without trusting partition-dir type inference
-          Files.writeString(
-            manifestPath,
-            manifestLine(next, operation, rows, ts = commitTs,
-              partitionBy = partitionBy),
-            StandardOpenOption.CREATE, StandardOpenOption.APPEND)
-          true
-        }
-      }
-      deleteTree(Paths.get(stage))
-      if (won) {
-        // registered bloom indexes ride with the commit (advisory: a
-        // reader between manifest append and index write just prunes less)
-        maintainBloomIndexes(next)
-        return next
-      }
-      // under k-writer contention a commit can lose at most k-1 races
-      // (every loss means someone else committed), so a generous cap only
-      // guards against a pathological livelock
-      attempt += 1
-      if (attempt > 20) throw new IllegalStateException(
-        s"commit of $root contended $attempt times; giving up")
+      // partition columns are recorded in the commit (the stand-in
+      // for Delta's log schema): readers of the manifest know them
+      // without trusting partition-dir type inference
+      val line = Commit(next, operation, rows, ts = commitTs,
+        partitionBy = partitionBy).line
+      // the feed derives from the STAGED data (still at $stage/data —
+      // publishVersion moves it after), so the writer's upstream
+      // pipeline is never re-executed for the diff
+      val won = publishVersion(next, line, Some(stage),
+        stageFeed.map(f => () => f(next, s"$stage/data")))
+      // registered bloom indexes ride with the commit (advisory: a
+      // reader between manifest append and index write just prunes less)
+      if (won) maintainBloomIndexes(next)
+      Option.when(won)(next)
     }
-    -1L // unreachable
   }
 
-  private def deleteTree(p: Path): Unit =
-    if (Files.exists(p)) {
-      val s = Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => Files.delete(f))
-      finally s.close()
+  /** The ONE commit critical section. Under the table's commit lock:
+    * RE-CHECK that `next` is still unclaimed; clear a crashed writer's
+    * orphans for the slot (a staged `_changes/v=next` must not become
+    * this version's CDC rows, and an orphaned data/stats dir — death
+    * between move and manifest append — would make the move throw
+    * forever; the manifest proves none is committed, so all are safe to
+    * remove under the lock); stage the change feed; rename the staged
+    * `data`/`stats` (if any) into place; append the manifest `line`.
+    * The feed MUST stage inside the critical section: its diff basis
+    * (version next-1) and the `_changes/v=next` slot are only stable
+    * while holding the commit, and a racing loser could otherwise
+    * clobber a winner's committed feed. The manifest append is the
+    * commit point, so data, stats, and feed become visible together or
+    * not at all. Returns false if another writer claimed `next`; the
+    * staging dir is removed either way. */
+  private def publishVersion(next: Long, line: String,
+      stage: Option[String] = None, stageFeed: Option[() => Unit] = None): Boolean = {
+    val won = VersionedTable.commitLock(root).synchronized {
+      if (latestVersion.map(_ + 1).getOrElse(0L) != next) false
+      else {
+        Fs.deleteTree(Paths.get(s"$root/_changes/v=$next"))
+        Fs.deleteTree(Paths.get(s"$root/v=$next"))
+        Fs.deleteTree(Paths.get(s"$root/_stats/v=$next"))
+        stageFeed.foreach(_())
+        stage.foreach { s =>
+          Files.createDirectories(Paths.get(s"$root/_stats"))
+          Files.move(Paths.get(s"$s/data"), Paths.get(s"$root/v=$next"))
+          Files.move(Paths.get(s"$s/stats"), Paths.get(s"$root/_stats/v=$next"))
+        }
+        VersionedTable.appendManifest(root, line)
+        true
+      }
     }
+    stage.foreach(s => Fs.deleteTree(Paths.get(s)))
+    won
+  }
+
+  /** The ONE optimistic-concurrency retry loop: re-run `attempt` against
+    * the current head until it commits (Some). Under k-writer contention
+    * a commit can lose at most k-1 races (every loss means someone else
+    * committed), so a generous cap only guards against a pathological
+    * livelock. */
+  private def retrying[A](what: String)(attempt: => Option[A]): A = {
+    var losses = 0
+    var result = attempt
+    while (result.isEmpty) {
+      losses += 1
+      if (losses > 20) throw new IllegalStateException(
+        s"$what $root contended $losses times; giving up")
+      result = attempt
+    }
+    result.get
+  }
 
   // ---- CHECK constraints (Delta ALTER TABLE ADD CONSTRAINT parity) ----
 
@@ -475,16 +413,16 @@ final class VersionedTable(spark: SparkSession, root: String) {
       s""""fpp_ppm":${math.round(fpp * 1000000)}}"""
     // the replace is a read-modify-write of the whole file (no longer a
     // pure append), so serialize it under the table's commit lock —
-    // concurrent registrations of DIFFERENT columns must not lose lines
+    // concurrent registrations of DIFFERENT columns must not lose lines.
+    // Committers read the file OUTSIDE the lock (bloomConfigs), so the
+    // rewrite is an atomic replace: never an empty file or a partial line
     VersionedTable.commitLock(root).synchronized {
       val others =
         if (!Files.exists(bloomConfigPath)) Seq.empty
         else Files.readAllLines(bloomConfigPath, StandardCharsets.UTF_8).asScala.toSeq
           .filterNot(l =>
             """"column":"([^"]*)"""".r.findFirstMatchIn(l).exists(_.group(1) == column))
-      Files.writeString(bloomConfigPath, (others :+ cfg).mkString("", "\n", "\n"),
-        StandardOpenOption.CREATE, StandardOpenOption.WRITE,
-        StandardOpenOption.TRUNCATE_EXISTING)
+      Fs.writeAtomic(bloomConfigPath, (others :+ cfg).mkString("", "\n", "\n"))
     }
     latestVersion.foreach(v => buildBloomFor(v, column, bits, hashes, fpp))
   }
@@ -529,7 +467,7 @@ final class VersionedTable(spark: SparkSession, root: String) {
         // version has no max (NULL) — no rows, nothing to index
         val dense = densestDistinct(df, column)
         if (dense.isEmpty) {
-          deleteTree(Paths.get(s"$root/_bloom/$column/v=$v"))
+          Fs.deleteTree(bloomDir(column, v))
           return
         }
         val n = math.max(1L, dense.get)
@@ -541,21 +479,24 @@ final class VersionedTable(spark: SparkSession, root: String) {
     writeBloomDir(bloomRows(df, column, bits, hashes), column, v)
   }
 
-  /** Land a bloom index dir ATOMICALLY (stage + rename): index writes
+  /** Land a bloom index dir ATOMICALLY ([[Fs.publishDir]]): index writes
     * happen after the commit point, so a concurrent committer's
     * incremental maintenance may read the PREVIOUS version's index while
     * it is being written — with a plain overwrite it could see a
     * _temporary-only or partial dir. An atomic dir rename means readers
     * observe either no dir (→ full-rebuild fallback) or a complete one,
     * never a torn index. */
-  private def writeBloomDir(rows: DataFrame, column: String, v: Long): Unit = {
-    val tmp = s"$root/_bloom/$column/.stage-${java.util.UUID.randomUUID()}"
-    rows.coalesce(1).write.mode("overwrite").parquet(tmp)
-    val dest = Paths.get(s"$root/_bloom/$column/v=$v")
-    deleteTree(dest)
-    Files.move(Paths.get(tmp), dest,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
+  private def writeBloomDir(rows: DataFrame, column: String, v: Long): Unit =
+    Fs.publishDir(bloomDir(column, v))(tmp =>
+      rows.coalesce(1).write.mode("overwrite").parquet(tmp.toString))
+
+  /** Carry a version's bloom index dir to another version (or a clone's
+    * v0) — same complete-or-absent landing as [[writeBloomDir]]. */
+  private def carryBloomDir(src: Path, dest: Path): Unit =
+    if (Files.isDirectory(src)) Fs.publishDir(dest)(Fs.copyTree(src, _))
+
+  private def bloomDir(column: String, v: Long): Path =
+    Paths.get(s"$root/_bloom/$column/v=$v")
 
   /** Densest per-file distinct count of `column` over `df` — the sizing
     * statistic shared by [[buildBloomFor]]'s auto-sizer and the
@@ -609,7 +550,7 @@ final class VersionedTable(spark: SparkSession, root: String) {
     val dir = Paths.get(dataDir(next)).toAbsolutePath.toString
     configs.foreach { case (c, b0, h0, fpp) =>
       if (nextCols.contains(c)) {
-        val prevIdx = Paths.get(s"$root/_bloom/$c/v=$prev")
+        val prevIdx = bloomDir(c, prev)
         // the prev index may be mid-write by the previous committer or
         // mid-delete by a concurrent vacuum; its WRITES are atomic (dir
         // rename), so the only failure shape is absence — but guard the
@@ -677,23 +618,6 @@ final class VersionedTable(spark: SparkSession, root: String) {
     }.toMap
   }
 
-  /** Recursive dir copy — shallow-clone and deleteWhere both carry tiny
-    * index/stats trees forward with it (shared: [[VersionedTable.copyTree]]).
-    */
-  private def copyTree(src: Path, dest: Path): Unit =
-    VersionedTable.copyTree(src, dest)
-
-  /** [[copyTree]] landing ATOMICALLY (stage + rename) — bloom index dirs
-    * carried after a commit point must appear complete-or-absent, the
-    * same invariant [[writeBloomDir]] keeps for freshly built ones: a
-    * crash or racing reader mid-copy must never observe a torn index. */
-  private def copyTreeAtomic(src: Path, dest: Path): Unit = {
-    val tmp = dest.resolveSibling(s".stage-${java.util.UUID.randomUUID()}")
-    copyTree(src, tmp)
-    deleteTree(dest)
-    Files.move(tmp, dest, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
-
   /** General predicate-pruned read — [[readWhere]]'s single-column range
     * generalized to arbitrary AND/OR/comparison/IN predicates via
     * [[StatsPruning]] (the Delta DataSkippingReader shape): the predicate
@@ -753,13 +677,12 @@ final class VersionedTable(spark: SparkSession, root: String) {
     // delete predicates travel with the clone (its v0 must read the same
     // logical rows as the source head)
     Files.createDirectories(Paths.get(destRoot))
-    Files.writeString(
-      Paths.get(destRoot, "_manifest"),
-      manifestLine(0L, s"clone_of:$root@v$v", src.rows,
+    val claimed = dest.publishVersion(0L,
+      Commit(0L, s"clone_of:$root@v$v", src.rows,
         location = Some(dataLoc), statsLocation = Some(statsLoc),
         deletePredicates = src.deletePredicates,
-        partitionBy = src.partitionBy),
-      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+        partitionBy = src.partitionBy).line)
+    require(claimed, s"clone target $destRoot is not empty")
     // table metadata travels with the clone: CHECK constraints keep
     // enforcing on the clone's own commits (Delta CLONE copies properties)
     if (Files.exists(constraintsPath))
@@ -769,9 +692,7 @@ final class VersionedTable(spark: SparkSession, root: String) {
     if (Files.exists(bloomConfigPath)) {
       Files.copy(bloomConfigPath, Paths.get(destRoot, "_bloom_config"))
       bloomConfigs.foreach { case (c, _, _, _) =>
-        val srcIdx = Paths.get(s"$root/_bloom/$c/v=$v")
-        if (Files.isDirectory(srcIdx))
-          copyTreeAtomic(srcIdx, Paths.get(s"$destRoot/_bloom/$c/v=0"))
+        carryBloomDir(bloomDir(c, v), dest.bloomDir(c, 0L))
       }
     }
     dest
@@ -871,8 +792,7 @@ final class VersionedTable(spark: SparkSession, root: String) {
   def deleteWhere(condition: String, commitTs: Option[String] = None): Long = {
     require(!condition.contains("\"") && !condition.contains("]"),
       "delete predicates use single quotes and no ']'")
-    var attempt = 0
-    while (true) {
+    retrying("deleteWhere of") {
       val v = latestVersion.getOrElse(sys.error(s"empty table at $root"))
       val next = v + 1
       val base = commits.find(_.version == v).get
@@ -881,40 +801,22 @@ final class VersionedTable(spark: SparkSession, root: String) {
         .filter(!coalesce(expr(condition), lit(false))).count()
       val dataLoc = Paths.get(dataDir(v)).toAbsolutePath.toString
       val statsLoc = Paths.get(statsDir(v)).toAbsolutePath.toString
-      val won = VersionedTable.commitLock(root).synchronized {
-        if (latestVersion.map(_ + 1).getOrElse(0L) != next) false
-        else {
-          // a dead writer's orphaned feed for this slot must not become
-          // this (feed-less) version's CDC rows
-          deleteTree(Paths.get(s"$root/_changes/v=$next"))
-          // record the commit timestamp like write() does — without it a
-          // readAsOf(ts) after the delete resolves to the last ts-bearing
-          // PRE-delete version and resurrects logically deleted rows
-          Files.writeString(
-            manifestPath,
-            manifestLine(next, "delete_where", rows, ts = commitTs,
-              location = Some(dataLoc), statsLocation = Some(statsLoc),
-              deletePredicates = preds, partitionBy = base.partitionBy),
-            StandardOpenOption.CREATE, StandardOpenOption.APPEND)
-          true
-        }
-      }
-      if (won) {
+      // record the commit timestamp like write() does — without it a
+      // readAsOf(ts) after the delete resolves to the last ts-bearing
+      // PRE-delete version and resurrects logically deleted rows
+      val line = Commit(next, "delete_where", rows, ts = commitTs,
+        location = Some(dataLoc), statsLocation = Some(statsLoc),
+        deletePredicates = preds, partitionBy = base.partitionBy).line
+      Option.when(publishVersion(next, line)) {
         // the new head references the SAME files — position sets stay
         // valid, so carry them forward instead of an O(data) rebuild
         // (deleteWhere must stay O(metadata))
         bloomConfigs.foreach { case (c, _, _, _) =>
-          val prev = Paths.get(s"$root/_bloom/$c/v=$v")
-          if (Files.isDirectory(prev))
-            copyTreeAtomic(prev, Paths.get(s"$root/_bloom/$c/v=$next"))
+          carryBloomDir(bloomDir(c, v), bloomDir(c, next))
         }
-        return next
+        next
       }
-      attempt += 1
-      if (attempt > 20) throw new IllegalStateException(
-        s"deleteWhere of $root contended $attempt times; giving up")
     }
-    -1L // unreachable
   }
 
   /** TIMESTAMP AS OF time travel (S6): the latest version whose recorded
@@ -1024,8 +926,7 @@ final class VersionedTable(spark: SparkSession, root: String) {
   def clusterWhere(predicate: String, cols: Seq[String], numFiles: Int = 4): Long = {
     val refs = spark.sessionState.sqlParser.parseExpression(predicate)
       .references.map(_.name).toSet
-    var attempt = 0
-    while (true) {
+    retrying("clusterWhere of") {
       val head = latestVersion.getOrElse(sys.error(s"empty table at $root"))
       val hc = commits.find(_.version == head).get
       val parts = hc.partitionBy
@@ -1047,51 +948,24 @@ final class VersionedTable(spark: SparkSession, root: String) {
         .collect()
         .map(r => VersionedTable.rawFsPath(r.getString(0)).stripPrefix(s"$dir/"))
         .toSet
-      if (matchedRel.isEmpty) return head
-      val carriedRel = dataFilesRel(head).filterNot(matchedRel)
-      val stage = s"$root/_staging/${java.util.UUID.randomUUID()}"
-      val keys = (parts ++ cols).map(col)
-      base.filter(expr(predicate))
-        .repartitionByRange(numFiles, keys: _*)
-        .sortWithinPartitions(keys: _*)
-        .write.mode("overwrite").partitionBy(parts: _*).parquet(s"$stage/data")
-      commitWithCarry(head, stage, carriedRel, "cluster_where", parts) match {
-        case Some(v) => return v
-        case None =>
-          attempt += 1
-          if (attempt > 20) throw new IllegalStateException(
-            s"clusterWhere of $root contended $attempt times; giving up")
+      if (matchedRel.isEmpty) Some(head)
+      else {
+        val carriedRel = dataFilesRel(head).filterNot(matchedRel)
+        val stage = s"$root/_staging/${java.util.UUID.randomUUID()}"
+        val keys = (parts ++ cols).map(col)
+        base.filter(expr(predicate))
+          .repartitionByRange(numFiles, keys: _*)
+          .sortWithinPartitions(keys: _*)
+          .write.mode("overwrite").partitionBy(parts: _*).parquet(s"$stage/data")
+        commitWithCarry(head, stage, carriedRel, "cluster_where", parts)
       }
     }
-    -1L // unreachable
-  }
-
-  /** Data files currently staged under `$stage/data` (absolute paths). */
-  private def stagedDataFiles(stage: String): Vector[String] = {
-    val base = Paths.get(s"$stage/data")
-    if (!Files.isDirectory(base)) return Vector.empty
-    val s = Files.walk(base)
-    try s.iterator().asScala
-      .filter(p => Files.isRegularFile(p) &&
-        !p.getFileName.toString.startsWith("_") &&
-        !p.getFileName.toString.startsWith("."))
-      .map(_.toAbsolutePath.toString).toVector
-    finally s.close()
   }
 
   /** Data files of a committed version, RELATIVE to its data dir (empty
     * if the version's files are gone, e.g. vacuumed). */
-  private def dataFilesRel(v: Long): Vector[String] = {
-    val dir = Paths.get(dataDir(v)).toAbsolutePath
-    if (!Files.isDirectory(dir)) return Vector.empty
-    val s = Files.walk(dir)
-    try s.iterator().asScala
-      .filter(p => Files.isRegularFile(p) &&
-        !p.getFileName.toString.startsWith("_") &&
-        !p.getFileName.toString.startsWith("."))
-      .map(p => p.toAbsolutePath.toString.stripPrefix(s"$dir/")).toVector
-    finally s.close()
-  }
+  private def dataFilesRel(v: Long): Vector[String] =
+    Fs.dataFiles(Paths.get(dataDir(v)))
 
   /** Shared tail of every partial-rewrite commit ([[clusterWhere]],
     * [[append]], [[clusterIncremental]]): freshly written files are
@@ -1099,9 +973,8 @@ final class VersionedTable(spark: SparkSession, root: String) {
     * hard-link in byte-identical (copy is the cross-device fallback)
     * with their stats rows riding forward from the head's stats table —
     * ONE stats scan over the new files only, never the carried data.
-    * Commits under the table lock with the same orphan-clearing critical
-    * section as [[commit]]; returns None if `head` moved (caller
-    * re-derives its file sets against the new head and retries). */
+    * Commits through [[publishVersion]]; returns None if `head` moved
+    * (caller re-derives its file sets against the new head and retries). */
   private def commitWithCarry(head: Long, stage: String,
       carriedRel: Seq[String], operation: String, parts: Seq[String],
       commitTs: Option[String] = None,
@@ -1116,7 +989,8 @@ final class VersionedTable(spark: SparkSession, root: String) {
     val headSchema = spark.read.parquet(dir).schema
     // capture the freshly WRITTEN files before carried links join them in
     // the same dir — a feed must derive from the new rows only
-    val newFilesAbs: Seq[String] = stagedDataFiles(stage)
+    val stagedData = Paths.get(s"$stage/data").toAbsolutePath
+    val newFilesAbs = Fs.dataFiles(stagedData).map(r => s"$stagedData/$r")
     val rewrittenRows =
       writeStats(s"$stage/data", s"$stage/stats_new", Some(headSchema))
     val carriedStats = spark.read.parquet(statsDir(head))
@@ -1137,7 +1011,7 @@ final class VersionedTable(spark: SparkSession, root: String) {
           s"${carriedStats.schema.simpleString}")
     newStats.unionByName(carriedStats)
       .coalesce(1).write.mode("overwrite").parquet(s"$stage/stats")
-    deleteTree(Paths.get(s"$stage/stats_new"))
+    Fs.deleteTree(Paths.get(s"$stage/stats_new"))
     carriedRel.foreach { rel =>
       val src = Paths.get(dir, rel)
       val dst = Paths.get(s"$stage/data", rel)
@@ -1158,30 +1032,12 @@ final class VersionedTable(spark: SparkSession, root: String) {
           Files.copy(src, dst)
       }
     }
-    val rows = rewrittenRows + carriedRows
-    val won = VersionedTable.commitLock(root).synchronized {
-      if (latestVersion.map(_ + 1).getOrElse(0L) != next) false
-      else {
-        deleteTree(Paths.get(s"$root/_changes/v=$next"))
-        deleteTree(Paths.get(s"$root/v=$next"))
-        deleteTree(Paths.get(s"$root/_stats/v=$next"))
-        stageFeed.foreach(f => f(next, s"$stage/data", newFilesAbs))
-        Files.createDirectories(Paths.get(s"$root/_stats"))
-        Files.move(Paths.get(s"$stage/data"), Paths.get(s"$root/v=$next"))
-        Files.move(Paths.get(s"$stage/stats"), Paths.get(s"$root/_stats/v=$next"))
-        Files.writeString(
-          manifestPath,
-          manifestLine(next, operation, rows, ts = commitTs,
-            partitionBy = parts),
-          StandardOpenOption.CREATE, StandardOpenOption.APPEND)
-        true
-      }
-    }
-    deleteTree(Paths.get(stage))
-    if (won) {
-      maintainBloomIndexesIncremental(head, next, carriedRel.toSet)
-      Some(next)
-    } else None
+    val line = Commit(next, operation, rewrittenRows + carriedRows,
+      ts = commitTs, partitionBy = parts).line
+    val won = publishVersion(next, line, Some(stage),
+      stageFeed.map(f => () => f(next, s"$stage/data", newFilesAbs)))
+    if (won) maintainBloomIndexesIncremental(head, next, carriedRel.toSet)
+    Option.when(won)(next)
   }
 
   /** Append-only commit (Delta `mode("append")` — the reference's Bronze
@@ -1231,8 +1087,7 @@ final class VersionedTable(spark: SparkSession, root: String) {
       commitTs: Option[String],
       stageFeed: Option[(Long, String, Seq[String]) => Unit]): Long = {
     validateConstraints(df)
-    var attempt = 0
-    while (true) {
+    retrying("append to") {
       latestVersion match {
         case None =>
           // Bootstrap under the commit lock: two concurrent appends that
@@ -1250,10 +1105,11 @@ final class VersionedTable(spark: SparkSession, root: String) {
           // first batch, not a grown table. Every subsequent commit holds
           // the lock only for the check-move-append critical section.
           VersionedTable.commitLock(root).synchronized {
-            if (latestVersion.isEmpty)
-              return if (stageFeed.isEmpty) write(df, operation, commitTs)
+            Option.when(latestVersion.isEmpty) {
+              if (stageFeed.isEmpty) write(df, operation, commitTs)
               else writeWithChangeFeed(df, Seq.empty, operation,
                 commitTs.getOrElse("2001-09-01 00:00:00"))
+            }
           }
         case Some(head) =>
           enforceSchema(df, mergeSchema = false, overwriteSchema = false)
@@ -1270,21 +1126,13 @@ final class VersionedTable(spark: SparkSession, root: String) {
           // dynamic-partition writer creates files per row): appending
           // nothing is a no-op, not a new version — and the schema-less
           // staged read below could not even infer a stats schema
-          if (stagedDataFiles(stage).isEmpty) {
-            deleteTree(Paths.get(stage))
-            return head
-          }
-          commitWithCarry(head, stage, dataFilesRel(head), operation, parts,
-            commitTs, stageFeed) match {
-            case Some(v) => return v
-            case None =>
-              attempt += 1
-              if (attempt > 20) throw new IllegalStateException(
-                s"append to $root contended $attempt times; giving up")
-          }
+          if (Fs.dataFiles(Paths.get(s"$stage/data")).isEmpty) {
+            Fs.deleteTree(Paths.get(stage))
+            Some(head)
+          } else commitWithCarry(head, stage, dataFilesRel(head), operation,
+            parts, commitTs, stageFeed)
       }
     }
-    -1L // unreachable
   }
 
   /** Incremental clustering (M7 — liquid-clustering maintenance
@@ -1313,8 +1161,7 @@ final class VersionedTable(spark: SparkSession, root: String) {
     // aliasing risk (a_b vs a,b) is confined to legacy manifests.
     val legacy = Set(s"cluster_inc_${cols.mkString("_")}",
       s"cluster_${cols.mkString("_")}")
-    var attempt = 0
-    while (true) {
+    retrying("clusterIncremental of") {
       val head = latestVersion.getOrElse(sys.error(s"empty table at $root"))
       val hc = commits.find(_.version == head).get
       val parts = hc.partitionBy
@@ -1332,28 +1179,23 @@ final class VersionedTable(spark: SparkSession, root: String) {
         .map(v => dataFilesRel(v).toSet & headFiles)
         .getOrElse(Set.empty[String])
       val unclustered = (headFiles -- clusteredRel).toVector.sorted
-      if (unclustered.isEmpty) return head
-      val dir = Paths.get(dataDir(head)).toAbsolutePath.toString
-      val keys = (parts ++ cols).map(col)
-      // read ONLY the unclustered files (basePath keeps partition columns)
-      val fresh = spark.read.option("basePath", dir)
-        .parquet(unclustered.map(r => s"$dir/$r"): _*)
-        .repartitionByRange(numFiles, keys: _*)
-        .sortWithinPartitions(keys: _*)
-      val stage = s"$root/_staging/${java.util.UUID.randomUUID()}"
-      val w = fresh.write.mode("overwrite")
-      (if (parts.nonEmpty) w.partitionBy(parts: _*) else w)
-        .parquet(s"$stage/data")
-      commitWithCarry(head, stage, clusteredRel.toVector.sorted, marker,
-        parts) match {
-        case Some(v) => return v
-        case None =>
-          attempt += 1
-          if (attempt > 20) throw new IllegalStateException(
-            s"clusterIncremental of $root contended $attempt times; giving up")
+      if (unclustered.isEmpty) Some(head)
+      else {
+        val dir = Paths.get(dataDir(head)).toAbsolutePath.toString
+        val keys = (parts ++ cols).map(col)
+        // read ONLY the unclustered files (basePath keeps partition columns)
+        val fresh = spark.read.option("basePath", dir)
+          .parquet(unclustered.map(r => s"$dir/$r"): _*)
+          .repartitionByRange(numFiles, keys: _*)
+          .sortWithinPartitions(keys: _*)
+        val stage = s"$root/_staging/${java.util.UUID.randomUUID()}"
+        val w = fresh.write.mode("overwrite")
+        (if (parts.nonEmpty) w.partitionBy(parts: _*) else w)
+          .parquet(s"$stage/data")
+        commitWithCarry(head, stage, clusteredRel.toVector.sorted, marker,
+          parts)
       }
     }
-    -1L // unreachable
   }
 
   /** OPTIMIZE ZORDER BY (M6, the real space-filling curve): rewrite the
@@ -1400,12 +1242,12 @@ final class VersionedTable(spark: SparkSession, root: String) {
       deletable(dataDir(v), keptDataDirs)
     }
     removed.foreach { v =>
-      deleteTree(Paths.get(dataDir(v)))
+      Fs.deleteTree(Paths.get(dataDir(v)))
       if (deletable(statsDir(v), keptStatsDirs))
-        deleteTree(Paths.get(statsDir(v)))
+        Fs.deleteTree(Paths.get(statsDir(v)))
       // bloom indexes are per-version derivatives of the removed data
       bloomConfigs.foreach { case (c, _, _, _) =>
-        deleteTree(Paths.get(s"$root/_bloom/$c/v=$v"))
+        Fs.deleteTree(bloomDir(c, v))
       }
     }
     // retention applies to the CHANGE FEED too (the Delta posture: CDC
@@ -1417,47 +1259,25 @@ final class VersionedTable(spark: SparkSession, root: String) {
     val droppedFeeds = removed
       .filter(v => Files.isDirectory(Paths.get(s"$root/_changes/v=$v")))
     if (droppedFeeds.nonEmpty) {
-      // tombstone FIRST, atomically (temp + move — the watermark-write
-      // pattern): a crash between the two steps must leave the
+      // tombstone FIRST, atomically (Fs.writeAtomic): a crash between the two steps must leave the
       // CONSERVATIVE state — mark advanced while dirs still exist, so
       // consumers refuse and a vacuum re-run finishes the deletes —
       // never deleted dirs with no mark, which would reopen the exact
       // silent hole the consumer guards close. And a torn non-atomic
       // write would NumberFormatException every consumer and every
       // future vacuum (feedVacuumedThrough parses the file).
-      val tomb = Paths.get(s"$root/_changes/_vacuumed_through")
-      Files.createDirectories(tomb.getParent)
       val prev = VersionedTable.feedVacuumedThrough(root)
-      val tmp = Files.createTempFile(tomb.getParent, ".vacuumed", ".tmp")
-      Files.writeString(tmp, math.max(prev, droppedFeeds.max).toString)
-      Files.move(tmp, tomb,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      droppedFeeds.foreach(v => deleteTree(Paths.get(s"$root/_changes/v=$v")))
+      Fs.writeAtomic(Paths.get(s"$root/_changes/_vacuumed_through"),
+        math.max(prev, droppedFeeds.max).toString)
+      droppedFeeds.foreach(v => Fs.deleteTree(Paths.get(s"$root/_changes/v=$v")))
     }
     // crashed writers' leftover staging — but never an IN-FLIGHT writer's:
     // staging happens outside the commit lock by design, so only reclaim
-    // dirs whose ENTIRE subtree is untouched for over an hour. The
-    // top-level mtime alone is not enough: a long-running write lands
-    // parquet files under <uuid>/data/ without refreshing the <uuid> dir
-    // itself, and reclaiming it mid-flight would make the writer's commit
-    // rename fail on a missing source.
-    val staging = Paths.get(s"$root/_staging")
-    if (Files.isDirectory(staging)) {
-      val cutoff = System.currentTimeMillis() - 60L * 60 * 1000
-      def newestMtime(p: Path): Long = {
-        val w = Files.walk(p)
-        try w.iterator().asScala
-          .map(f => Files.getLastModifiedTime(f).toMillis)
-          .foldLeft(Long.MinValue)(math.max)
-        finally w.close()
-      }
-      val s = Files.list(staging)
-      try s.iterator().asScala.toSeq
-        .filter(p => newestMtime(p) < cutoff)
-        .foreach(deleteTree)
-      finally s.close()
-    }
+    // dirs whose ENTIRE subtree is untouched for over an hour (a
+    // long-running write lands parquet files under <uuid>/data/ without
+    // refreshing the <uuid> dir itself)
+    Fs.sweepStale(Paths.get(s"$root/_staging"), java.time.Duration.ofHours(1),
+      keep = _ => false)
     removed
   }
 
@@ -1466,12 +1286,9 @@ final class VersionedTable(spark: SparkSession, root: String) {
   def detail(): DataFrame = {
     import spark.implicits._
     val v = latestVersion.getOrElse(sys.error("empty table"))
-    val s = Files.walk(Paths.get(dataDir(v)))
-    val files =
-      try s.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
-      finally s.close()
-    Seq((root, v, files.size.toLong, files.map(Files.size).sum))
+    val dir = Paths.get(dataDir(v))
+    val files = Fs.dataFiles(dir).filter(_.endsWith(".parquet"))
+    Seq((root, v, files.size.toLong, files.map(f => Files.size(dir.resolve(f))).sum))
       .toDF("location", "version", "num_files", "size_bytes")
   }
 }
@@ -1486,21 +1303,130 @@ object VersionedTable {
     if (Files.isRegularFile(tomb)) Files.readString(tomb).trim.toLong else -1L
   }
 
-  /** Recursive dir copy into a fresh destination — THE tree copy for
-    * version/index artifacts (shallow clones, deleteWhere stats carries,
-    * IvfIndex twins): one definition, so the copy semantics can't drift
-    * between the table layer and the index layer. Not atomic — callers
-    * that publish the copy must stage + rename ([[copyTreeAtomic]] /
-    * IvfIndex's moveIntoPlace). */
-  private[graft] def copyTree(src: java.nio.file.Path,
-      dest: java.nio.file.Path): Unit = {
-    val s = Files.walk(src)
-    try s.iterator().asScala.toSeq.foreach { p =>
-      val tgt = dest.resolve(src.relativize(p))
-      if (Files.isDirectory(p)) Files.createDirectories(tgt)
-      else Files.copy(p, tgt)
-    } finally s.close()
+  // ---- the manifest format: read and written here and nowhere else ----
+
+  /** One committed version — a manifest line. */
+  private[maint] final case class Commit(
+      version: Long, operation: String, rows: Long,
+      ts: Option[String] = None,
+      location: Option[String] = None, statsLocation: Option[String] = None,
+      deletePredicates: Seq[String] = Nil,
+      partitionBy: Seq[String] = Nil) {
+
+    /** The ONE manifest-line serializer. Every commit path writes lines;
+      * the regex parser is field-order-independent, but hand-rolled copies
+      * had already drifted comma conventions between sites — a new field
+      * gets added here or nowhere. */
+    def line: String = {
+      // the ONE serializer is also the ONE validator: the regex parser
+      // does no unescaping, so a '"' in any string field would break
+      // the line, and strList's [^\]]* would silently truncate a list
+      // element containing ']' (e.g. tags[1]) — logically deleted rows
+      // would resurrect on read. Reject both at write time, loudly.
+      val strFields = Seq(operation) ++ ts ++ location ++ statsLocation ++
+        deletePredicates ++ partitionBy
+      require(strFields.forall(s => !s.contains("\"")),
+        s"manifest string fields must not contain '\"' (unescaped format): $strFields")
+      // a newline/CR would SPLIT the appended line: the fragment fails the
+      // version regex on every later read and bricks the table permanently
+      require(strFields.forall(s => !s.exists(c => c == '\n' || c == '\r')),
+        s"manifest string fields must not contain line breaks: $strFields")
+      require((deletePredicates ++ partitionBy).forall(s => !s.contains("]")),
+        "manifest list elements must not contain ']' (regex list parser " +
+          s"would truncate): ${deletePredicates ++ partitionBy}")
+      val sb = new StringBuilder(
+        s"""{"version":$version,"operation":"$operation","rows":$rows""")
+      ts.foreach(t => sb.append(s""","ts":"$t""""))
+      location.foreach(l => sb.append(s""","location":"$l""""))
+      statsLocation.foreach(l => sb.append(s""","statsLocation":"$l""""))
+      if (deletePredicates.nonEmpty)
+        sb.append(deletePredicates.map(p => s""""$p"""")
+          .mkString(""","deletePredicates":[""", ",", "]"))
+      if (partitionBy.nonEmpty)
+        sb.append(partitionBy.map(c => s""""$c"""")
+          .mkString(""","partitionBy":[""", ",", "]"))
+      sb.append("}\n").toString
+    }
   }
+
+  private def parse(line: String): Commit = {
+    // {"version":N,"operation":"...","rows":N[,"location":"...",
+    //  "statsLocation":"...","ts":"...","deletePredicates":["...",...],
+    //  "partitionBy":["...",...]]}
+    val v = """"version":(\d+)""".r.findFirstMatchIn(line).get.group(1).toLong
+    val op = """"operation":"([^"]*)"""".r.findFirstMatchIn(line).get.group(1)
+    val rows = """"rows":(\d+)""".r.findFirstMatchIn(line).get.group(1).toLong
+    def str(field: String): Option[String] =
+      s""""$field":"([^"]*)"""".r.findFirstMatchIn(line).map(_.group(1))
+    def strList(field: String): Seq[String] =
+      (s""""$field":\\[([^\\]]*)\\]""").r.findFirstMatchIn(line)
+        .map(_.group(1)).filter(_.nonEmpty)
+        .map(_.split("\",\"").map(_.stripPrefix("\"").stripSuffix("\"")).toSeq)
+        .getOrElse(Seq.empty)
+    Commit(v, op, rows, str("ts"), str("location"), str("statsLocation"),
+      strList("deletePredicates"), strList("partitionBy"))
+  }
+
+  private def manifestPath(root: String): Path = Paths.get(root, "_manifest")
+
+  /** The ONE manifest reader: the table's commits in order, or None when
+    * `root` has no manifest (not a versioned table). A trailing fragment
+    * without its '\n' is a writer that died mid-append — its commit call
+    * never returned, so it is not a commit. It is skipped (with a
+    * warning) rather than failing every later read of the table; the
+    * next commit truncates it. */
+  private def manifest(root: String): Option[Seq[Commit]] = {
+    val p = manifestPath(root)
+    if (!Files.isRegularFile(p)) return None
+    val text = Files.readString(p)
+    val end = text.lastIndexOf('\n')
+    if (end < text.length - 1)
+      org.slf4j.LoggerFactory.getLogger(getClass).warn(
+        s"ignoring torn manifest tail at $p (a writer died mid-append): " +
+          text.substring(end + 1))
+    Some(if (end < 0) Seq.empty else text.substring(0, end).split('\n').toSeq.map(parse))
+  }
+
+  /** Append one serialized commit line — call only inside the table's
+    * commit critical section. A torn tail left by a crashed append is
+    * truncated first, so the new line never fuses with the fragment. */
+  private def appendManifest(root: String, line: String): Unit = {
+    val p = manifestPath(root)
+    val ch = java.nio.channels.FileChannel.open(p,
+      StandardOpenOption.CREATE, StandardOpenOption.READ, StandardOpenOption.WRITE)
+    try {
+      val size = ch.size
+      val last = java.nio.ByteBuffer.allocate(1)
+      if (size > 0 && ch.read(last, size - 1) == 1 && last.get(0) != '\n') {
+        val bytes = Files.readAllBytes(p)
+        ch.truncate(bytes.lastIndexOf('\n'.toByte) + 1L)
+      }
+      ch.position(ch.size)
+      val buf = java.nio.ByteBuffer.wrap(line.getBytes(StandardCharsets.UTF_8))
+      while (buf.hasRemaining) ch.write(buf)
+    } finally ch.close()
+  }
+
+  /** Committed versions of the table at `root` (None: no manifest) — for
+    * readers that address a provider root by path without constructing a
+    * table (the sharing layer's committed-feed listing). */
+  private[graft] def committedVersions(root: String): Option[Seq[Long]] =
+    manifest(root).map(_.map(_.version))
+
+  /** Re-anchor the data/stats `location`s of the table at `root` that
+    * point under `from` onto `to`: commits record ABSOLUTE version dirs
+    * (the shallow-clone contract), so a table built under a scratch dir
+    * and then renamed into place must be rebased before it is published
+    * (IvfIndex.deriveTwin). Locations elsewhere are left as-is; no-op
+    * without a manifest. */
+  private[graft] def rebaseLocations(root: String, from: String, to: String): Unit =
+    manifest(root).foreach { cs =>
+      def rebase(l: Option[String]) = l.map(x =>
+        if (x == from || x.startsWith(s"$from/")) to + x.stripPrefix(from) else x)
+      Fs.writeAtomic(manifestPath(root), cs.map(c => c.copy(
+        location = rebase(c.location),
+        statsLocation = rebase(c.statsLocation)).line).mkString)
+    }
 
   /** Per-root commit locks — the stand-in for the storage layer's
     * conditional put. In-process writers serialize the tiny
@@ -1512,8 +1438,8 @@ object VersionedTable {
     locks.computeIfAbsent(root, _ => new Object)
 
   /** One key space for file names: `input_file_name()` returns a
-    * percent-encoded URI while every `Files.walk`-derived listing is a
-    * raw filesystem name — a partition value with a space would
+    * percent-encoded URI while every [[graft.core.Fs.dataFiles]] listing
+    * is a raw filesystem name — a partition value with a space would
     * otherwise produce stats/bloom keys (`p=a%20b/…`) that no carry
     * join or re-anchored read can match. Strip the anchor, then decode
     * %XX exactly; a literal '+' is pre-escaped so URLDecoder's
@@ -1566,18 +1492,10 @@ object VersionedTable {
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     def fail(): Nothing = throw new FooterUnsupported
     val base = Paths.get(dataDir).toAbsolutePath
-    if (!Files.isDirectory(base)) return None
-    val walk = Files.walk(base)
-    val files =
-      try walk.iterator().asScala
-        .filter(p => Files.isRegularFile(p) &&
-          !p.getFileName.toString.startsWith("_") &&
-          !p.getFileName.toString.startsWith("."))
-        .toVector.sortBy(_.toString)
-      finally walk.close()
-    if (files.isEmpty) return None
-    val rels = files.map(p => base.relativize(p).toString)
+    val rels = Fs.dataFiles(base)
+    if (rels.isEmpty) return None
     if (rels.exists(_.contains("="))) return None // partitioned layout
+    val files = rels.map(base.resolve)
     val conf = spark.sparkContext.hadoopConfiguration
 
     // raw chunk bounds normalized to one comparable carrier per Spark

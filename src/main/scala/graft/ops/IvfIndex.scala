@@ -1,6 +1,6 @@
 package graft.ops
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
@@ -8,7 +8,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Fs, Tables}
 import graft.maint.VersionedTable
 import graft.queries.Embeddings
 
@@ -341,6 +341,9 @@ object IvfIndex {
 
   // ------------------------------------------------------------ lifecycle
 
+  /** The index's [[VersionedTable]]s, each a subdir of the index root. */
+  private val IndexTables = Seq("cells", "centroids", "groups", "codebook", "cellstats")
+
   /** Corpus identity for the index cache: path + size + mtime of every
     * embeddings parquet file, so a driver-regenerated corpus gets a fresh
     * index instead of a silently stale one. */
@@ -348,12 +351,8 @@ object IvfIndex {
     val p = Paths.get(corpusDir, "embeddings.parquet")
     require(Files.exists(p), s"no embeddings.parquet under $corpusDir")
     val files =
-      if (Files.isDirectory(p)) {
-        val s = Files.walk(p)
-        try s.iterator().asScala.filter(Files.isRegularFile(_)).toVector
-          .sortBy(_.toString)
-        finally s.close()
-      } else Vector(p)
+      if (Files.isDirectory(p)) Fs.dataFiles(p).map(p.resolve)
+      else Vector(p)
     val sig = files
       .map(f => s"$f:${Files.size(f)}:${Files.getLastModifiedTime(f).toMillis}")
       .mkString("|")
@@ -385,7 +384,7 @@ object IvfIndex {
       catch { case _: java.io.IOException => () } // hygiene only
     } else {
       val tmp = root + s".build-${ProcessHandle.current().pid()}"
-      deleteRecursively(tmp)
+      Fs.deleteTree(Paths.get(tmp))
       build(spark, corpusDir, tmp)
       Files.createFile(Paths.get(tmp, "_COMPLETE"))
       Files.createDirectories(Paths.get(root).getParent)
@@ -395,7 +394,7 @@ object IvfIndex {
     root
   }
 
-  /** Publish a completed build: ATOMIC_MOVE `tmp` → `root`. Failure
+  /** Publish a completed build: atomic rename `tmp` → `root`. Failure
     * handling, in order: a root that gained `_COMPLETE` is a LOST RACE
     * (another process finished first — deterministic build, its index is
     * identical), so discard `tmp`; a root present WITHOUT the marker is
@@ -410,17 +409,16 @@ object IvfIndex {
     var retriedDebris = false
     while (true) {
       try {
-        Files.move(Paths.get(tmp), Paths.get(root),
-          StandardCopyOption.ATOMIC_MOVE)
+        Fs.moveAtomic(Paths.get(tmp), Paths.get(root))
         return
       } catch {
         case e: java.nio.file.FileSystemException =>
           if (Files.exists(Paths.get(root, "_COMPLETE"))) {
-            deleteRecursively(tmp)
+            Fs.deleteTree(Paths.get(tmp))
             return
           } else if (!retriedDebris && Files.exists(Paths.get(root))) {
             retriedDebris = true
-            deleteRecursively(root)
+            Fs.deleteTree(Paths.get(root))
           } else throw e
       }
     }
@@ -429,24 +427,13 @@ object IvfIndex {
   /** Cache hygiene: each corpus regeneration fingerprints to a fresh
     * root, and a crashed build orphans its scratch dir — without pruning,
     * /tmp accumulates a full normalized-corpus copy per generation.
-    * Runs after a successful build only; anything touched in the last
-    * 6 hours is left alone (a concurrent process may be using or
-    * building it). */
+    * Runs after a successful build only; an index root or build dir
+    * with anything touched in the last 6 hours is left alone (a
+    * concurrent process may be using or building it). */
   private def pruneStale(keepRoot: String): Unit = {
-    val parent = Paths.get(keepRoot).getParent
-    if (parent == null || !Files.isDirectory(parent)) return
-    val cutoff = System.currentTimeMillis() - 6L * 3600 * 1000
-    val s = Files.list(parent)
-    try s.iterator().asScala
-      .filter(p => p.toString != keepRoot)
-      .filter(p => p.getFileName.toString.startsWith("idx-"))
-      .filter(p =>
-        try Files.getLastModifiedTime(p).toMillis < cutoff
-        catch { case _: java.io.IOException => false })
-      .foreach(p =>
-        try deleteRecursively(p.toString)
-        catch { case _: java.io.IOException => () }) // best-effort hygiene
-    finally s.close()
+    val keep = Paths.get(keepRoot)
+    Fs.sweepStale(keep.getParent, java.time.Duration.ofHours(6),
+      keep = p => p == keep || !p.getFileName.toString.startsWith("idx-"))
   }
 
   /** Full build into `root`: centroid sample, PQ codebook, and every
@@ -792,26 +779,19 @@ object IvfIndex {
       catch { case _: java.io.IOException => () } // hygiene only
     } else {
       val tmp = root + s".build-${ProcessHandle.current().pid()}"
-      deleteRecursively(tmp)
-      copyTree(base, tmp)
+      Fs.deleteTree(Paths.get(tmp))
+      Fs.copyTree(Paths.get(base), Paths.get(tmp))
       Files.deleteIfExists(Paths.get(tmp, "_COMPLETE"))
       body(tmp)
       val tmpAbs = Paths.get(tmp).toAbsolutePath.toString
       val rootAbs = Paths.get(root).toAbsolutePath.toString
-      val walk = Files.walk(Paths.get(tmp))
-      try walk.iterator().asScala
-        .filter(p => p.getFileName.toString == "_manifest")
-        .foreach(m => Files.writeString(m,
-          Files.readString(m).replace(tmpAbs, rootAbs)))
-      finally walk.close()
+      IndexTables.foreach(t =>
+        VersionedTable.rebaseLocations(s"$tmp/$t", tmpAbs, rootAbs))
       Files.createFile(Paths.get(tmp, "_COMPLETE"))
       moveIntoPlace(tmp, root)
     }
     root
   }
-
-  private def copyTree(from: String, to: String): Unit =
-    VersionedTable.copyTree(Paths.get(from), Paths.get(to))
 
   /** Incremental add: assign `vecs` (vec_id, embedding) against the
     * PINNED centroid set and append them to the inverted lists as a new
@@ -1487,7 +1467,7 @@ object IvfIndex {
     * dropped dir). Returns the dropped versions per table. */
   def vacuumIndex(spark: SparkSession, root: String,
       keepLast: Int = 3): Map[String, Seq[Long]] =
-    Seq("cells", "centroids", "groups", "codebook", "cellstats")
+    IndexTables
       .map(t => t -> new VersionedTable(spark, s"$root/$t").vacuum(keepLast))
       .toMap
 
@@ -1875,23 +1855,5 @@ object IvfIndex {
       .select(col("q_id"), col("vec_id"),
         call_function("vec_dot", col("q_ne"), col("ne")).as("cos"))
       .filter(col("cos").isNotNull && !isnan(col("cos")))
-  }
-
-  /** Tolerates entries vanishing mid-walk (a concurrent prune of the same
-    * debris): NoSuchFileException on the walk or a single delete means the
-    * work is already done, not a failure. A DirectoryNotEmptyException
-    * (files APPEARING mid-walk) still propagates — the caller decides. */
-  private def deleteRecursively(dir: String): Unit = {
-    val p = Paths.get(dir)
-    if (!Files.exists(p)) return
-    val s =
-      try Files.walk(p)
-      catch { case _: java.nio.file.NoSuchFileException => return }
-    try s.sorted(java.util.Comparator.reverseOrder())
-      .iterator().asScala.foreach { f =>
-        try Files.delete(f)
-        catch { case _: java.nio.file.NoSuchFileException => () }
-      }
-    finally s.close()
   }
 }

@@ -50,11 +50,3 @@ object Sessionize {
       .drop("_gap_us", "_is_new")
   }
 }
-
-object Audit {
-  /** Ingest/audit columns with an injectable clock (SURVEY §7.4.3: never
-    * wall-clock in oracle-compared outputs). */
-  def withAuditColumns(df: DataFrame, asOf: String, source: String): DataFrame =
-    df.withColumn("_audit_at", to_timestamp(lit(asOf)))
-      .withColumn("_audit_source", lit(source))
-}

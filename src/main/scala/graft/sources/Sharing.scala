@@ -173,14 +173,8 @@ object SharingProtocol {
           val row = om.createObjectNode()
           row.put("share", share); row.put("schema", schema); row.put("table", table)
           row.put("location", location); row.put("bearerToken", token)
-          val tmp = Files.createTempFile(Paths.get(endpointDir), ".shares", ".tmp")
-          try {
-            Files.writeString(tmp,
-              (kept :+ om.writeValueAsString(row)).mkString("", "\n", "\n"))
-            Files.move(tmp, manifest,
-              java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-              java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          } finally Files.deleteIfExists(tmp)
+          graft.core.Fs.writeAtomic(manifest,
+            (kept :+ om.writeValueAsString(row)).mkString("", "\n", "\n"))
         } finally osLock.release()
       } finally ch.close()
     }
@@ -190,16 +184,12 @@ object SharingProtocol {
     profile.put("bearerToken", token)
     val digest = Integer.toHexString(token.hashCode)
     val p = Paths.get(endpointDir, s"$share.$schema.$table-$digest.share")
-    // temp + ATOMIC_MOVE, same discipline as the manifest write above: a
+    // atomic replace, same discipline as the manifest write above: a
     // re-grant rewrites an existing profile path, and a concurrent
     // recipient resolve() reading a half-written file would die on
     // truncated JSON (or read an empty token and get a bogus
     // token-rejected error)
-    val ptmp = Files.createTempFile(Paths.get(endpointDir), ".share", ".tmp")
-    Files.writeString(ptmp, om.writeValueAsString(profile))
-    Files.move(ptmp, p,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    graft.core.Fs.writeAtomic(p, om.writeValueAsString(profile))
     p.toString
   }
 
@@ -241,12 +231,8 @@ object SharingProtocol {
     * version if the dir layout ever changed). */
   private[sources] def committedFeedVersions(fqn: String, root: String,
       starting: Long): Seq[(Long, String)] = {
-    val manifest = Paths.get(root, "_manifest")
-    if (!Files.isRegularFile(manifest)) sys.error(
-      s"shared table '$fqn' at $root has no commit manifest — not a versioned table")
-    val vRe = """"version":(\d+)""".r
-    Files.readAllLines(manifest).asScala.toSeq
-      .flatMap(l => vRe.findFirstMatchIn(l).map(_.group(1).toLong))
+    graft.maint.VersionedTable.committedVersions(root).getOrElse(sys.error(
+      s"shared table '$fqn' at $root has no commit manifest — not a versioned table"))
       .filter(v => v >= starting &&
         Files.isDirectory(Paths.get(root, "_changes", s"v=$v")))
       .sorted
@@ -362,11 +348,7 @@ object SharingProtocol {
     Files.createDirectories(Paths.get(checkpointDir))
     due.map { case (v, dir) =>
       f(spark.read.parquet(dir), v)
-      val tmp = Files.createTempFile(Paths.get(checkpointDir), ".watermark", ".tmp")
-      Files.writeString(tmp, v.toString)
-      Files.move(tmp, offsetFile,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      graft.core.Fs.writeAtomic(offsetFile, v.toString)
       v
     }
   }

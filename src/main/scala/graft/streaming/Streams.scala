@@ -265,20 +265,8 @@ object Streams {
       afterWrite: () => Unit = () => ()): Unit = {
     snapshot.write.mode("overwrite").parquet(s"$targetDir/$snapDir")
     afterWrite() // torn-commit window: data written, pointer not flipped
-    val tmp = java.nio.file.Paths.get(targetDir, "_current.tmp")
-    Files.writeString(tmp, snapDir)
-    Files.move(tmp, java.nio.file.Paths.get(targetDir, "_current"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    current.foreach { prev =>
-      val dir = java.nio.file.Paths.get(prev)
-      if (Files.exists(dir)) {
-        import scala.jdk.CollectionConverters._
-        val s = Files.walk(dir)
-        try s.iterator().asScala.toSeq.reverse.foreach(Files.delete)
-        finally s.close()
-      }
-    }
+    graft.core.Fs.writeAtomic(java.nio.file.Paths.get(targetDir, "_current"), snapDir)
+    current.foreach(prev => graft.core.Fs.deleteTree(java.nio.file.Paths.get(prev)))
   }
 
   /** Streaming materialized view (continuous incremental refresh — the

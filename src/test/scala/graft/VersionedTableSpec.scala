@@ -1444,6 +1444,22 @@ class VersionedTableSpec extends SparkSpec {
       "rejected predicates must leave the table untouched")
   }
 
+  test("a torn manifest tail (crash mid-append) is skipped on read and truncated by the next commit") {
+    val t = freshTable()
+    t.write(Seq((1, "a")).toDF("id", "v"))
+    t.write(Seq((1, "a"), (2, "b")).toDF("id", "v"))
+    val manifest = java.nio.file.Paths.get(
+      t.detail().collect()(0).getString(0), "_manifest")
+    Files.writeString(manifest, """{"version":2,"operat""",
+      java.nio.file.StandardOpenOption.APPEND)
+    assert(t.versions == Seq(0L, 1L), "a torn fragment is not a commit")
+    assert(t.read().count() == 2 && t.read(Some(0L)).count() == 1)
+    assert(t.write(Seq((3, "c")).toDF("id", "v")) == 2L)
+    assert(t.versions == Seq(0L, 1L, 2L) && t.read().count() == 1)
+    assert(Files.readAllLines(manifest).asScala.forall(_.endsWith("}")),
+      "the commit must truncate the fragment, not fuse with it")
+  }
+
   test("footer-derived commit stats engage and equal the scan formulation") {
     // the commit's stats fast path: min/max/count lifted straight from
     // the parquet footers the data write produced — no Spark job, no
