@@ -10,38 +10,45 @@ import org.apache.spark.sql.SparkSession
   * GRAFT_BENCH_INNER=1) does the actual timing and writes bench_out.json;
   * the outer relays the JSON line to stdout. Any failure in the outer
   * path falls back to timing in-process, so the bench can never go dark.
+  * A query that throws gets no time: it is listed under `failed`, left
+  * out of both totals, and the process exits non-zero after the line is
+  * written.
   */
 object Bench {
   private val InnerFlag = "GRAFT_BENCH_INNER"
+  private val NoFailures = "\"failed\":[]"
 
   def main(args: Array[String]): Unit = {
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/bench_out.json")
-    if (sys.env.contains(InnerFlag)) { runBench(outPath); return }
+    if (sys.env.contains(InnerFlag)) { exitOnFailures(runBench(outPath)); return }
     // clear any previous run's metrics file up front — a crash mid-run
     // must leave NO file, not a stale one the driver would misattribute
     try java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(outPath))
     catch { case _: Throwable => () }
-    if (!reexecViaSparkSubmit(outPath)) runBench(outPath)
+    exitOnFailures(reexecViaSparkSubmit(outPath).getOrElse(runBench(outPath)))
   }
 
+  private def exitOnFailures(line: String): Unit =
+    if (!line.contains(NoFailures)) sys.exit(1)
+
   /** Jar the compiled classes and run the inner bench under spark-submit.
-    * Returns true iff the inner run produced bench_out.json (whose line is
-    * relayed to stdout for any stdout-parsing consumer).
+    * Returns the JSON line iff the inner run produced bench_out.json (the
+    * line is relayed to stdout for any stdout-parsing consumer).
     */
-  private def reexecViaSparkSubmit(outPath: String): Boolean = {
+  private def reexecViaSparkSubmit(outPath: String): Option[String] = {
     import java.nio.file.{Files, Paths}
     try {
       val submitCmd = "/opt/spark/bin/spark-submit"
-      if (!new java.io.File(submitCmd).canExecute) return false
+      if (!new java.io.File(submitCmd).canExecute) return None
       val classesDir = Seq("target/scala-2.13/classes", "/root/repo/target/scala-2.13/classes")
-        .map(new java.io.File(_)).find(_.isDirectory).getOrElse(return false)
+        .map(new java.io.File(_)).find(_.isDirectory).getOrElse(return None)
       val jarPath = Files.createTempFile("graft-bench-", ".jar")
       jarFromDir(classesDir, jarPath.toFile)
       val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
       val pb = new ProcessBuilder(
         submitCmd,
         "--master", s"local[$cpus]",
-        "--driver-memory", "48g",
+        "--driver-memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "48g"),
         "--class", "graft.Bench",
         jarPath.toString)
       pb.environment().put(InnerFlag, "1")
@@ -53,15 +60,14 @@ object Bench {
       // Trust the FILE, not the exit code: the inner clears any previous
       // bench_out.json up front, so a present, well-formed file means the
       // timed runs completed — even if the JVM then died nonzero during
-      // shutdown. Falling back in that case would silently overwrite
-      // clean spark-submit numbers with sbt-contaminated ones.
-      val outFile = Paths.get(outPath)
-      if (Files.isRegularFile(outFile)) {
-        val line = new String(Files.readAllBytes(outFile), "UTF-8").trim
-        if (line.startsWith("{") && line.endsWith("}")) { println(line); true }
-        else false
-      } else false
-    } catch { case _: Throwable => false }
+      // shutdown (or exited 1 over failed queries, which the line lists).
+      // Falling back in that case would silently overwrite clean
+      // spark-submit numbers with sbt-contaminated ones.
+      Some(Paths.get(outPath)).filter(Files.isRegularFile(_))
+        .map(f => new String(Files.readAllBytes(f), "UTF-8").trim)
+        .filter(line => line.startsWith("{") && line.endsWith("}"))
+        .map { line => println(line); line }
+    } catch { case _: Throwable => None }
   }
 
   private def jarFromDir(dir: java.io.File, out: java.io.File): Unit = {
@@ -77,8 +83,9 @@ object Bench {
     try walk(dir, "") finally jos.close()
   }
 
-  /** The actual timed run — executes in whichever JVM hosts it. */
-  private def runBench(outPath: String): Unit = {
+  /** The actual timed run — executes in whichever JVM hosts it. Returns
+    * the JSON line it wrote. */
+  private def runBench(outPath: String): String = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     try java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(outPath))
@@ -113,7 +120,7 @@ object Bench {
     // — no separate floor run needed.
     def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
+      fn(spark, sfDir).count()
       (System.nanoTime() - t0) / 1e9
     }
     // The FROZEN headline basket runs FIRST, in its frozen order — the
@@ -125,7 +132,8 @@ object Bench {
     // ordered Seq, not a Map: the emitted per-query JSON keys stay in
     // run order (headline basket first, then name order), so bench
     // artifacts diff cleanly across runs
-    val ordered = (headlineOrder ++ restOrder).map { name =>
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
+    val ordered = (headlineOrder ++ restOrder).flatMap { name =>
       val fn = benchSet(name)
       // drain accumulated state BETWEEN queries, outside the timed
       // section: prior queries' checkpoint/broadcast blocks are freed by
@@ -134,13 +142,21 @@ object Bench {
       // query's timing was measured to inflate the LAST query (w8) up to
       // 7× on a loaded box
       System.gc()
-      name -> Seq.fill(3)(timeOnce(fn)).min
+      // a failure is recorded, never timed: time-to-exception would read
+      // as a fast query
+      try Some(name -> Seq.fill(3)(timeOnce(fn)).min)
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: $e")
+        failed += name
+        None
+      }
     }
     val results = ordered.toMap
     val qs = ordered.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = if (ordered.nonEmpty) ordered.map(_._2).sum else 0.0
-    val headlineTotal = headlineOrder.map(results).sum
+    val headlineTimed = headlineOrder.flatMap(results.get)
+    val headlineTotal = headlineTimed.sum
     // sentinel classes (SCALE.md quiet-box protocol iii): one reading per
     // drift class — scan-dominated (t5/j10/a1), shuffle-heavy (d5), and
     // tiny-window (w3, added round 15 after the r14 driver session read
@@ -154,7 +170,8 @@ object Bench {
     val sentinels = sentinelNames
       .map(n => s"\"" + n + "\":" + results(n)).mkString("{", ",", "}")
     val line = s"""{"metric":"total","value":$total,"unit":"sec",""" +
-      s""""headline_total":$headlineTotal,"headline_n":${headlineOrder.length},""" +
+      s""""headline_total":$headlineTotal,"headline_n":${headlineTimed.length},""" +
+      s""""failed":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
       s""""sentinels":$sentinels,""" +
       s""""queries":$qs,"sf":"$sfDir"}"""
     println(line)
@@ -165,5 +182,6 @@ object Bench {
       try w.println(line) finally w.close()
     } catch { case _: Throwable => () }
     spark.stop()
+    line
   }
 }

@@ -19,21 +19,7 @@ object SkewBench {
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
     val spark = graft.core.GraftSession.local(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
-    // SPARK_GRAFT_NO_BROADCAST=1 forces the SHUFFLED join regime
-    // (autoBroadcastJoinThreshold=-1): the posture a 100 TB cluster is in
-    // once build sides outgrow broadcast range — used to measure whether
-    // the salted skew paths ENGAGE and what they buy, since at bench SF
-    // the small sides broadcast and the salts stay dormant
-    if (sys.env.get("SPARK_GRAFT_NO_BROADCAST").contains("1"))
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     val warmDir = "/root/testdata/sf0.001"
-    names.foreach { n =>
-      // swallow only non-fatal warmup failures (a query that can't run at
-      // sf0.001 still gets timed on the real corpora); a fatal error (OOM,
-      // linkage) must abort — a poisoned JVM would produce bogus timings
-      try SparkEntry.queries(n)(spark, warmDir).count()
-      catch { case scala.util.control.NonFatal(_) => () }
-    }
     def time(n: String, dir: String): Double = {
       System.gc()
       Seq.fill(3) {
@@ -42,13 +28,37 @@ object SkewBench {
         (System.nanoTime() - t0) / 1e9
       }.min
     }
-    val rows = names.map(n => (n, time(n, uni), time(n, skw)))
+    val rows = withRegime(spark) {
+      names.foreach { n =>
+        // swallow only non-fatal warmup failures (a query that can't run at
+        // sf0.001 still gets timed on the real corpora); a fatal error (OOM,
+        // linkage) must abort — a poisoned JVM would produce bogus timings
+        try SparkEntry.queries(n)(spark, warmDir).count()
+        catch { case scala.util.control.NonFatal(_) => () }
+      }
+      names.map(n => (n, time(n, uni), time(n, skw)))
+    }
     val js = rows.map { case (n, tu, ts) =>
       f""""$n":{"uniform":$tu%.3f,"skewed":$ts%.3f,"ratio":${ts / tu}%.2f}"""
     }.mkString("{", ",", "}")
     println(s"""{"skewbench":$js,"uniform_dir":"$uni","skewed_dir":"$skw"}""")
     spark.stop()
   }
+
+  /** SPARK_GRAFT_NO_BROADCAST=1 runs `body` in the SHUFFLED join regime:
+    * the posture a 100 TB cluster is in once build sides outgrow
+    * broadcast range — used to measure whether the salted skew paths
+    * ENGAGE and what they buy, since at bench SF the small sides
+    * broadcast and the salts stay dormant. Both kinds of broadcast are
+    * off: Catalyst's (autoBroadcastJoinThreshold=-1) and the ops'
+    * explicit hints, which ignore that threshold (every
+    * [[graft.ops.Guards]] site takes its keyed branch). */
+  private[graft] def withRegime[A](spark: org.apache.spark.sql.SparkSession)(
+      body: => A): A =
+    if (sys.env.get("SPARK_GRAFT_NO_BROADCAST").contains("1")) {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      graft.ops.Guards.keyed(body)
+    } else body
 }
 
 /** `graft.SkewProbe <uniformDir> <skewedDir>` — the maintenance
@@ -65,10 +75,6 @@ object SkewProbe {
     import graft.ops.IvfIndex
     val spark = graft.core.GraftSession.local(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
-    // same forced-shuffle switch as SkewBench: the reducer-skew regime
-    // the maintenance remedies exist for
-    if (sys.env.get("SPARK_GRAFT_NO_BROADCAST").contains("1"))
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     // one untimed pass over BOTH corpora first: builds/derives the
     // indexes and pays JIT warmup, so the first-timed corpus isn't
     // penalized (the ratio is the metric — order effects would fake it).
@@ -147,8 +153,12 @@ object SkewProbe {
         f""""probe_base":$probeBase%.3f,"probe_maint":$probeMaint%.3f,""" +
         f""""filtered_base":$filtBase%.3f,"filtered_maint":$filtMaint%.3f}"""
     }
-    args.toSeq.foreach(measure(_, timed = false)) // warm pass
-    val out = args.toSeq.map(measure(_, timed = true))
+    // same forced-shuffle switch as SkewBench: the reducer-skew regime
+    // the maintenance remedies exist for
+    val out = SkewBench.withRegime(spark) {
+      args.toSeq.foreach(measure(_, timed = false)) // warm pass
+      args.toSeq.map(measure(_, timed = true))
+    }
     println(out.mkString("{\"skewprobe\":{", ",", "}}"))
     spark.stop()
   }

@@ -137,14 +137,10 @@ object IncrementalAgg {
     // before it moves). Above the cap: the keyed semi, AQE-splittable.
     // (Without the hint the join is a SortMergeJoin — dirtyKeys descends
     // from a checkpoint, so Catalyst has no stats to auto-broadcast on.)
-    val dkFits = dirtyKeys.count() <= DirtyBroadcastCap
+    val dkFits = Guards.fits(dirtyKeys.count())
     clean.unionByName(
       initMinMax(base.join(
         if (dkFits) broadcast(dirtyKeys) else dirtyKeys,
         keys, "left_semi"), keys, valueCol))
   }
-
-  /** Dirty-key rows (group keys only) broadcast below this count — the
-    * repo's standard node-sided broadcast budget. */
-  private val DirtyBroadcastCap = 4000000L
 }

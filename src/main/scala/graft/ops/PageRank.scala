@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * bounded and deterministic, the documented price of exactness.
   *
   * Scale: each iteration is one edges ⋈ ranks join (broadcast of the
-  * node-sized rank table under [[BroadcastNodeCap]], so the edge list
+  * node-sized rank table under [[Guards.fits]], so the edge list
   * crosses no exchange; src-keyed and AQE-skew-splittable above the
   * guard) plus one dst-keyed partially-aggregated sum; the
   * edge list (with precomputed out-weights) is checkpointed once and
@@ -49,8 +49,7 @@ object PageRank {
     * @return (node, r) — micro-rank per node after `iterations` rounds;
     *         nodes with no in-edges hold the damping base. */
   def run(edges: DataFrame, iterations: Int, dampingPct: Int = 85,
-      microInit: Long = 1000000L,
-      broadcastNodeCap: Long = BroadcastNodeCap): DataFrame = {
+      microInit: Long = 1000000L): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1: $iterations")
     require(dampingPct >= 0 && dampingPct <= 100,
       s"dampingPct must be 0..100: $dampingPct")
@@ -68,16 +67,15 @@ object PageRank {
           col("w").cast("string"))))
         .otherwise(col("w").cast("long")).as("w"))
     // The out-weight table is one (src, ow) row per source node — node-
-    // sized, not edge-sized. Materialize it once and, when it fits the
-    // same metadata-size budget as the graph-side broadcasts (two flat
-    // longs per node), ship it map-side so the edge list is NEVER
-    // shuffled by src to attach its out-weights; above the guard the
-    // original keyed join stands (AQE-skew-splittable).
+    // sized, not edge-sized. Materialize it once and, when it fits, ship
+    // it map-side so the edge list is NEVER shuffled by src to attach its
+    // out-weights; above the guard the original keyed join stands
+    // (AQE-skew-splittable).
     val ow = e.groupBy("src").agg(sum(col("w")).as("ow"))
       .localCheckpoint(true)
     // this guard covers ONLY the ew build join: ow is the frame being
     // broadcast there, and it is SOURCE-node-sized
-    val owFits = ow.count() <= broadcastNodeCap
+    val owFits = Guards.fits(ow.count())
     val ew = (if (owFits) e.join(broadcast(ow), "src")
               else e.join(ow, "src"))
       .localCheckpoint(true) // reused every iteration — one materialization
@@ -94,7 +92,7 @@ object PageRank {
     // arbitrarily larger rank table — so they get their own guard on the
     // universe count (one count over the already-checkpointed nodes frame;
     // r16, the round-15 advisory).
-    val nodeSidedFits = nodes.count() <= broadcastNodeCap
+    val nodeSidedFits = Guards.fits(nodes.count())
     val base = (100L - dampingPct) * microInit / 100L
     var ranks = nodes.select(col("node"), lit(microInit).as("r"))
     for (i <- 1 to iterations) {
@@ -135,11 +133,4 @@ object PageRank {
   /** Broadcast-regime lineage cut cadence: plan depth stays bounded for
     * deep runs while short runs pay zero mid-run materializations. */
   private val CheckpointEveryRounds = 8
-
-  /** Node-sided frames (out-weights, ranks, per-round contributions — two
-    * flat longs per node) broadcast below this row count: ≈64 MB of
-    * payload before hash-relation overhead, the same budget the graph
-    * queries use for their degree/center tables. Edge-sided frames are
-    * never broadcast. */
-  private val BroadcastNodeCap = 4000000L
 }

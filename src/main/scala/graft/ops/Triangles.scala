@@ -45,26 +45,20 @@ object Triangles {
     *              distinct — one row per edge.
     * @return (node, tri_cnt) for every node in ≥1 triangle.
     */
-  def participation(edges: DataFrame,
-      broadcastEdgeCap: Long = BroadcastEdgeCap): DataFrame = {
+  def participation(edges: DataFrame): DataFrame = {
     val e = edges.select(col("a"), col("b")).localCheckpoint(true)
     // ONE guard for both the degree and adjacency broadcasts, read off
     // the already-materialized edge list (free — no extra aggregation
-    // job): adjacency payload is exactly one long per oriented edge;
-    // deg rows are bounded by 2·edges. The threshold budgets the
-    // MATERIALIZED broadcast, not raw payload: 2M edges is ~16 MB of
-    // neighbor longs, and deg's worst case (2·|E| = 4M rows of flat
-    // longs ≈ 128 MB) stays inside the same 4M-ROW budget every other
-    // node-sided broadcast in the repo uses (r16: the round-15 advisory
-    // — the previous 4M-EDGE guard let deg reach 8M rows, past the
-    // stated ~200 MB materialized per-executor ceiling once
-    // UnsafeRow/HashedRelation overhead multiplies in). Above the cap,
-    // node-keyed shuffle joins that AQE skew-splits, exactly the
-    // pre-r15 plan. (A checkpointed LogicalRDD has no size stats, so
-    // Catalyst alone would default everything below to sort-merge and
-    // ship each edge row's two ~√m-long neighbor arrays through BOTH
-    // shuffles — measured 2× the whole op's cost at 1.2M edges.)
-    val fits = e.count() <= broadcastEdgeCap
+    // job): adjacency payload is exactly one long per oriented edge and
+    // deg rows are bounded by 2·|E|, so the budgeted side is 2·|E| rows
+    // (r16: the round-15 advisory — guarding |E| itself let deg reach
+    // twice the row budget). Above the cap, node-keyed shuffle joins
+    // that AQE skew-splits, exactly the pre-r15 plan. (A checkpointed
+    // LogicalRDD has no size stats, so Catalyst alone would default
+    // everything below to sort-merge and ship each edge row's two
+    // ~√m-long neighbor arrays through BOTH shuffles — measured 2× the
+    // whole op's cost at 1.2M edges.)
+    val fits = Guards.fits(2 * e.count())
     val degRaw = e.select(col("a").as("node"))
       .unionByName(e.select(col("b").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))
@@ -141,11 +135,4 @@ object Triangles {
         transform(col("tw"), w => struct(w.as("node"), lit(1L).as("c"))))).as("nc"))
       .groupBy(col("nc.node").as("node")).agg(sum(col("nc.c")).as("tri_cnt"))
   }
-
-  /** Degree + adjacency broadcast below this EDGE count: adjacency is one
-    * long per oriented edge (~16 MB at the cap) and deg ≤ 2·|E| rows — 4M
-    * rows of two flat longs at the cap, the same node-sided budget as
-    * PageRank's [[graft.ops.PageRank]] guard. Above it: the pre-r15
-    * checkpointed shuffle plan. */
-  private val BroadcastEdgeCap = 2000000L
 }

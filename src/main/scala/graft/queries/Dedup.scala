@@ -888,14 +888,8 @@ object Dedup extends QueryGroup {
     * sequential semantics are hash-checked end to end. */
   private val AdmissionEpochs = 4
 
-  /** Per-epoch batch-sided frames (two flat longs per fingerprint row)
-    * broadcast below this incoming-slice row count — the repo's standard
-    * node-sided broadcast budget. Above it: keyed joins, AQE-splittable. */
-  private val BatchBroadcastCap = 4000000L
-
   private[graft] def sequentialAdmission(
-      s: org.apache.spark.sql.SparkSession, d: String,
-      batchBroadcastCap: Long = BatchBroadcastCap): org.apache.spark.sql.DataFrame = {
+      s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
     val fpAll = winnowIndex(s, d).fp
     val incDocs = Tables.documents(s, d).filter(col("doc_id") % 5 === 0)
       .select(col("doc_id"),
@@ -909,12 +903,12 @@ object Dedup extends QueryGroup {
     // per-epoch broadcast below (efps, matches, rejected, adm, newH) is
     // bounded by the INCOMING slice's fingerprint rows — a fixed fraction
     // of the corpus, i.e. linear in corpus size, not micro-batch-bounded
-    // — so they get the same row-count guard as every other broadcast
-    // site (one filter-count over the checkpointed fp table, once for
-    // all epochs). Above the cap each epoch falls back to the keyed-join
+    // — so they get the one broadcast guard (one filter-count over the
+    // checkpointed fp table, once for all epochs; two flat longs per
+    // fingerprint row). Above the cap each epoch falls back to the keyed-join
     // plan: the probe/semi/anti joins shuffle on h / doc_id and AQE
     // skew-splits, which is the pre-r15 shape.
-    val batchFits = inc.count() <= batchBroadcastCap
+    val batchFits = graft.ops.Guards.fits(inc.count())
     def bcast(df: org.apache.spark.sql.DataFrame) =
       if (batchFits) broadcast(df) else df
     val admitted = (0 until AdmissionEpochs).map { e =>

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.core.Tables
-import graft.ops.{PageRank, Triangles}
+import graft.ops.{Guards, PageRank, Triangles}
 
 /** Graph analytics over the star schema (driver north-star; no reference
   * counterpart — designed Spark-first): iterative centrality as a
@@ -329,9 +329,7 @@ object Graph extends QueryGroup {
     * distinct co-purchasing orders and keeps only edges at the floor. */
   private[graft] def linkPrediction(s: org.apache.spark.sql.SparkSession,
       d: String, cap: Int,
-      minSupport: Int = 1,
-      degBroadcastCap: Long = 4000000L,
-      antiBroadcastCap: Long = 250000L): org.apache.spark.sql.DataFrame = {
+      minSupport: Int = 1): org.apache.spark.sql.DataFrame = {
         import org.apache.spark.sql.expressions.Window
         val po = basketItems(s, d)
         // alias self-join — one shared ok-keyed exchange (guide §2.4)
@@ -367,15 +365,15 @@ object Graph extends QueryGroup {
           .withColumn("contrib", expr("1000000 div deg"))
         // The eligible-center table is bounded by the node count and
         // usually far smaller (the cap excludes hubs; gr4r's scout cap
-        // keeps 148 of 20k nodes at sf0.1) — broadcast it under a
-        // metadata-size guard and join it to und ONCE, so both wedge
-        // self-join sides are the center-PRUNED rows: und rows whose z
+        // keeps 148 of 20k nodes at sf0.1) — broadcast it under the
+        // guard and join it to und ONCE, so both wedge self-join sides
+        // are the center-PRUNED rows: und rows whose z
         // the cap excluded previously rode the full exchange just to be
         // dropped by the join (r15, guide §3.2 — prune the big side
         // before it shuffles). The count is one agg job over the
         // checkpointed und. Above the cap the original z-keyed shuffle
         // plan stands.
-        val wi = (if (deg.count() <= degBroadcastCap)
+        val wi = (if (Guards.fits(deg.count()))
             und.join(broadcast(deg.select(col("z"), col("contrib"))), "z")
           else und.join(deg.select(col("z"), col("contrib")), "z"))
         // self-join via ALIASES of the identical un-projected subtree, so
@@ -394,20 +392,17 @@ object Graph extends QueryGroup {
           .select(col("w1.n").as("n"), col("w2.n").as("n2"),
             coalesce(col("w1.contrib"), col("w2.contrib")).as("contrib"))
         // the closing anti-join: `scored` already sits on the score
-        // agg's (x, y) partitioning, so the keyed anti costs only a
-        // sort of scored plus the edge side's exchange — broadcasting
-        // the edge set beats that ONLY when the edge set is genuinely
-        // tiny (gr5's support-thresholded 3.6k edges: measured −21%);
-        // at gr4/gr4r's full 1.2M-edge set the broadcast build/ship was
-        // measured +71%, so the guard here is an order of magnitude
-        // tighter than deg's (whose broadcast removes full exchanges of
-        // the wedge volume, a different trade).
+        // agg's (x, y) partitioning, so broadcasting the edge set pays
+        // only when it is tiny — Guards.AntiJoinRows, an order of
+        // magnitude tighter than deg's (whose broadcast removes full
+        // exchanges of the wedge volume, a different trade).
         val eXY = e.select(col("a").as("x"), col("b").as("y"))
         val scored = wedges
           .groupBy(col("n").as("x"), col("n2").as("y"))
           .agg(sum(col("contrib")).as("ra_micro"),
             count(lit(1)).as("common_nbrs"))
-          .join(if (e.count() <= antiBroadcastCap) broadcast(eXY) else eXY,
+          .join(if (Guards.fits(e.count(), Guards.AntiJoinRows)) broadcast(eXY)
+            else eXY,
             Seq("x", "y"), "left_anti")
         // Both orientations emitted ROW-LOCALLY from one pass: the
         // previous two-branch union rebuilt the entire un-checkpointed

@@ -10,13 +10,15 @@ import org.scalatest.funsuite.AnyFunSuite
   * (recursive delete, atomic replace, tree copy, data-file listing,
   * stale sweep) has one implementation in `core/Fs.scala`, the manifest
   * format lives only in `maint/VersionedTable.scala`, and that table has
-  * one commit critical section and one retry loop. Every failure names
-  * the file and line. */
+  * one commit critical section and one retry loop. The same scan keeps
+  * the broadcast rule in one place: `ops/Guards.scala`. Every failure
+  * names the file and line. */
 class StorageSeamSpec extends AnyFunSuite {
 
   private val src = Paths.get("src/main/scala")
   private val fsFile = "graft/core/Fs.scala"
   private val tableFile = "graft/maint/VersionedTable.scala"
+  private val guardsFile = "graft/ops/Guards.scala"
 
   private lazy val sources: Seq[(String, IndexedSeq[String])] = {
     require(Files.isDirectory(src), s"run from the repo root: no $src")
@@ -57,5 +59,17 @@ class StorageSeamSpec extends AnyFunSuite {
       s"publishVersion only:\n${moves.mkString("\n")}")
     val loops = hits("""contended|while \(true\)""", isTable)
     assert(loops.size == 1, s"expected ONE retry loop (retrying):\n${loops.mkString("\n")}")
+  }
+
+  test("broadcast guards go through ops/Guards.scala; no op keeps its own cap") {
+    val counts = hits("""count\(\)\s*<""", _ != guardsFile)
+    assert(counts.isEmpty,
+      s"count() compared outside $guardsFile — use Guards.fits:\n" +
+        counts.mkString("\n"))
+    val caps = hits("""\b(va[lr]\s+\w*[Bb]roadcast\w*Cap\b|\w*[Bb]roadcast\w*Cap\s*:\s*Long)""",
+      _ => true)
+    assert(caps.isEmpty,
+      s"broadcast cap constant or parameter — use Guards.Rows / Guards.keyed:\n" +
+        caps.mkString("\n"))
   }
 }
