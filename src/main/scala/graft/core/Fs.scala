@@ -1,8 +1,9 @@
 package graft.core
 
 import java.io.IOException
-import java.nio.file.{DirectoryNotEmptyException, FileVisitResult, Files,
-  NoSuchFileException, Path, SimpleFileVisitor, StandardCopyOption}
+import java.nio.file.{DirectoryNotEmptyException, FileAlreadyExistsException,
+  FileVisitResult, Files, NoSuchFileException, Path, SimpleFileVisitor,
+  StandardCopyOption}
 import java.nio.file.attribute.BasicFileAttributes
 
 import scala.jdk.CollectionConverters._
@@ -56,10 +57,30 @@ object Fs {
     } finally Files.deleteIfExists(tmp)
   }
 
-  /** Bare atomic rename; fails if `dest` exists (callers that replace
-    * clear it first — see [[publishDir]]). */
+  /** Bare atomic rename (rename(2)): an existing file or empty directory
+    * at `dest` is silently REPLACED; only a non-empty directory target
+    * fails. Never a put-if-absent — that is [[putIfAbsent]]. */
   def moveAtomic(src: Path, dest: Path): Unit =
     Files.move(src, dest, StandardCopyOption.ATOMIC_MOVE)
+
+  /** Create `p` holding `content` only if `p` does not exist yet; false
+    * if it did. The content is written to a uniquely named `.`-prefixed
+    * sibling temp, which link(2) then publishes as `p`: the link fails
+    * atomically when `p` exists, so `p` is never partial and never
+    * replaced (a rename would silently replace it). The temp never
+    * outlives the call unless the process dies; `.`-prefixed names are
+    * skipped by every listing, and [[sweepStale]] reclaims them. */
+  def putIfAbsent(p: Path, content: String): Boolean = {
+    val dir = p.toAbsolutePath.getParent
+    Files.createDirectories(dir)
+    val tmp = Files.createTempFile(dir, s".${p.getFileName}", ".tmp")
+    try {
+      Files.writeString(tmp, content)
+      Files.createLink(p, tmp)
+      true
+    } catch { case _: FileAlreadyExistsException => false }
+    finally Files.deleteIfExists(tmp)
+  }
 
   /** Recursive copy into a fresh destination. Not atomic — a copy that
     * readers may observe goes through [[publishDir]]. */
@@ -85,17 +106,22 @@ object Fs {
   }
 
   /** Data files under `dir` as keys RELATIVE to it (`part-0.parquet`,
-    * `p=1/part-3.parquet`), sorted; `_*` and `.*` files (commit markers,
-    * checksums, in-flight temps) are skipped. Empty if `dir` is absent. */
+    * `p=1/part-3.parquet`), sorted. Spark's file-index rule decides what
+    * is hidden: any file or directory named `.*`, or `_*` without a `=`
+    * (commit markers, checksums, in-flight temps, and a version's
+    * `_stats`/`_changes` dirs), is skipped with everything beneath it.
+    * Empty if `dir` is absent. */
   def dataFiles(dir: Path): Vector[String] = {
     val base = dir.toAbsolutePath
     if (!Files.isDirectory(base)) return Vector.empty
+    def hidden(name: String) =
+      name.startsWith(".") || (name.startsWith("_") && !name.contains("="))
     val s = Files.walk(base)
     try s.iterator().asScala
-      .filter(p => Files.isRegularFile(p) &&
-        !p.getFileName.toString.startsWith("_") &&
-        !p.getFileName.toString.startsWith("."))
-      .map(p => base.relativize(p).toString).toVector.sorted
+      .map(base.relativize)
+      .filter(r => !r.iterator().asScala.exists(c => hidden(c.toString)) &&
+        Files.isRegularFile(base.resolve(r)))
+      .map(_.toString).toVector.sorted
     finally s.close()
   }
 

@@ -18,52 +18,67 @@ import graft.core.Fs
   * data-skipping file statistics and SHALLOW CLONE) in an environment
   * without a transactional table format on the classpath.
   *
-  * Layout: `<root>/v=<N>/part-*.parquet` (optionally nested under
-  * Hive-style `col=value/` partition dirs — see `write(partitionBy)`) +
-  * `<root>/_stats/v=<N>` (per-file
-  * min/max column statistics, written at commit time) + `<root>/_manifest`
-  * (one JSON line per committed version, append-only). Writers stage into
-  * the new version dir and commit by appending the manifest line LAST —
-  * readers resolve versions only through the manifest, so a torn write is
-  * invisible (the parquet stand-in for a log-ordered commit). At cluster
-  * scale the manifest append would be a conditional put; everything else
-  * is unchanged.
+  * Layout: each version owns ONE uniquely named directory under the
+  * root, `<root>/v<N>-<uuid>/`, holding its data files (`part-*.parquet`,
+  * optionally nested under Hive-style `col=value/` partition dirs — see
+  * `write(partitionBy)`), its per-file min/max statistics (`_stats/`)
+  * and, when it has one, its change feed (`_changes/`). Spark's file
+  * index skips the `_` dirs, so reading the directory reads the data.
+  * A version is committed by creating `<root>/_log/<N>.json` with
+  * [[graft.core.Fs.putIfAbsent]] — the entry names the directory, and
+  * creating it is the ONLY commit point: writers stage everything first
+  * (fully concurrent, no lock, in-process or across processes), the
+  * first to create the entry wins, a loser deletes its own directory and
+  * retries against the new head (Delta's optimistic commit of the next
+  * `_delta_log/<N>.json`). A directory no entry names is invisible;
+  * [[vacuum]]'s stale sweep reclaims a crashed writer's.
   *
-  * A manifest line may carry a `location` (and `statsLocation`) pointing
-  * outside the table root — that is how [[shallowClone]] shares the source
-  * head's data files without copying them, exactly like Delta SHALLOW
-  * CLONE's absolute-path log entries.
+  * An entry records its directory root-relative. A [[shallowClone]]'s
+  * v0 entry records an ABSOLUTE directory in the source table — that is
+  * how it shares the source head's files without copying them, exactly
+  * like Delta SHALLOW CLONE's absolute-path log entries.
   */
 final class VersionedTable(spark: SparkSession, root: String) {
 
   import VersionedTable.Commit
 
-  private def commits: Seq[Commit] = VersionedTable.manifest(root).getOrElse(Nil)
+  /** The log as ONE operation sees it: listed and parsed once by [[log]],
+    * then every lookup is in memory. Entries are immutable once created,
+    * so a snapshot never goes stale for the versions it lists. */
+  private final class Log(val commits: Vector[Commit]) {
+    def latest: Option[Long] = commits.lastOption.map(_.version)
+    def next: Long = latest.fold(0L)(_ + 1)
+    def apply(v: Long): Commit = commits.find(_.version == v).getOrElse(
+      throw new IllegalArgumentException(
+        s"version $v not in ${commits.map(_.version).mkString(",")} at $root"))
+    /** The directory holding version `v`'s files. */
+    def dir(v: Long): String = dirOf(apply(v))
+  }
 
-  /** Data directory of a committed version — local `v=N` unless the
-    * manifest entry points elsewhere (shallow clone). */
-  private def dataDir(v: Long): String =
-    commits.find(_.version == v).flatMap(_.location).getOrElse(s"$root/v=$v")
+  private def log: Log = new Log(VersionedTable.readLog(root).getOrElse(Vector.empty))
 
-  private def statsDir(v: Long): String =
-    commits.find(_.version == v).flatMap(_.statsLocation)
-      .getOrElse(s"$root/_stats/v=$v")
+  private def dirOf(c: Commit): String = VersionedTable.dirOf(root, c)
 
-  def versions: Seq[Long] = commits.map(_.version)
+  /** Directory of committed version `v` — for specs that inspect or
+    * forge the on-disk layout. */
+  private[graft] def versionDir(v: Long): Path = Paths.get(log.dir(v))
 
-  def latestVersion: Option[Long] = versions.maxOption
+  // names only: an entry's file name is its version, so listing the
+  // versions reads no entry
+  def versions: Seq[Long] = VersionedTable.entryNames(root).getOrElse(Vector.empty)
+
+  def latestVersion: Option[Long] = versions.lastOption
 
   /** Whether the head carries logical-delete predicates (the
     * deletion-vector form) — [[append]] refuses such a head until
     * [[compact]] materializes the deletes; maintenance loops probe this
     * to pay the compact only when it is actually owed. */
   def headHasDeletes: Boolean =
-    latestVersion.exists(v =>
-      commits.find(_.version == v).exists(_.deletePredicates.nonEmpty))
+    log.commits.lastOption.exists(_.deletePredicates.nonEmpty)
 
   /** Commit a new version; returns its number. `commitTs` is an optional
     * injected commit timestamp (`yyyy-MM-dd HH:mm:ss`) recorded in the
-    * manifest and resolvable via [[readAsOf]] — deterministic pipelines
+    * log entry and resolvable via [[readAsOf]] — deterministic pipelines
     * pass a fixed clock, like `Tables.OrdersAsOf`.
     *
     * `partitionBy` lays the version out Hive-style (`col=value/` subdirs —
@@ -92,23 +107,26 @@ final class VersionedTable(spark: SparkSession, root: String) {
     commit(df, operation, stageFeed = None, commitTs, partitionBy,
       mergeSchema, overwriteSchema)
 
+  /** Stages a version's change feed: (log the attempt derives from, the
+    * version being committed, its staged directory). */
+  private type FeedStager = (Log, Long, String) => Unit
+
   /** Schema enforcement against the head version (no-op on an empty
     * table). Strict by default: same column names and types, no drops,
     * no adds, no retypes. NB: the head schema is read back from its
     * parquet files (+ partition dirs), the stand-in for Delta's
     * log-recorded schema. */
-  private def enforceSchema(df: DataFrame, mergeSchema: Boolean,
+  private def enforceSchema(lg: Log, df: DataFrame, mergeSchema: Boolean,
       overwriteSchema: Boolean): Unit = {
     if (overwriteSchema) return
-    latestVersion.foreach { v =>
-      val cur = spark.read.parquet(dataDir(v)).schema
+    lg.commits.lastOption.foreach { head =>
+      val cur = spark.read.parquet(dirOf(head)).schema
       // the head's partition columns come back through partition-dir TYPE
       // INFERENCE (a date-looking string infers DateType), so their
       // read-back type is not the written type — exempt them from the
-      // retype check (presence is still enforced); the manifest records
+      // retype check (presence is still enforced); the log records
       // which columns those are
-      val partCols = commits.find(_.version == v)
-        .map(_.partitionBy).getOrElse(Seq.empty).toSet
+      val partCols = head.partitionBy.toSet
       val curTypes = cur.fields.map(f => f.name -> f.dataType).toMap
       val newTypes = df.schema.fields.map(f => f.name -> f.dataType).toMap
       val retyped = (curTypes.keySet & newTypes.keySet -- partCols)
@@ -126,120 +144,113 @@ final class VersionedTable(spark: SparkSession, root: String) {
   }
 
   /** Single commit path with optimistic concurrency (the Delta protocol's
-    * shape: uniquely named staging + a conditional commit). Per attempt:
-    * write data + stats into a uniquely named staging dir (fully
-    * concurrent), then publish it as `next` through [[publishVersion]].
-    * A writer that lost the race retries against the new head — the
-    * behavior of Delta's ConcurrentAppend resolution.
+    * shape: a uniquely named directory + a conditional commit). Schema
+    * and constraints are checked once up front, then [[commitOnce]]
+    * runs until it wins a version — a writer that lost the race retries
+    * against the new head, the behavior of Delta's ConcurrentAppend
+    * resolution.
     */
   private def commit(df: DataFrame, operation: String,
-      stageFeed: Option[(Long, String) => Unit], commitTs: Option[String] = None,
+      stageFeed: Option[FeedStager], commitTs: Option[String] = None,
       partitionBy: Seq[String] = Seq.empty,
       mergeSchema: Boolean = false,
       overwriteSchema: Boolean = false): Long = {
     // schema first: it's a footer-metadata check, where constraint
     // validation is a full aggregation job — and a schema-invalid df can
     // make a constraint expression fail analysis with a worse error
-    enforceSchema(df, mergeSchema, overwriteSchema)
+    enforceSchema(log, df, mergeSchema, overwriteSchema)
     validateConstraints(df)
-    retrying("commit of") {
-      val next = latestVersion.map(_ + 1).getOrElse(0L)
-      // Schema enforcement must see the head THIS attempt commits onto: a
-      // loser's retry lands on the winner's schema, and validating only
-      // once up front would let the retry silently revert a concurrent
-      // mergeSchema evolution (the winner's new column dropped with no
-      // error). Re-checking per attempt against the head `next` derives
-      // from is the local analogue of Delta's ConcurrentWrite metadata-
-      // conflict resolution: the conflicting retry FAILS instead. The
-      // lock's head re-check guarantees no commit lands on a head
-      // this validation didn't see. (Yes, the first attempt re-validates
-      // what the entry check already saw — but the constraint pass
-      // between them is a full Spark job, ample time for a concurrent
-      // mergeSchema commit to move the head; one footer read is the
-      // price of validating against the head `next` actually derives
-      // from.)
-      enforceSchema(df, mergeSchema, overwriteSchema)
-      val stage = s"$root/_staging/${java.util.UUID.randomUUID()}"
-      val writer = df.write.mode("overwrite")
-      (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
-        .parquet(s"$stage/data")
-      // fail with the actual cause: an empty snapshot under partitionBy
-      // stages no files at all (the dynamic-partition writer is per-row),
-      // and this parquet stand-in has no log-recorded schema to give such
-      // a version — the schema-less stats read below would otherwise die
-      // with an opaque 'unable to infer schema'
-      if (Fs.dataFiles(Paths.get(s"$stage/data")).isEmpty) {
-        Fs.deleteTree(Paths.get(stage))
-        sys.error(s"commit of $root staged zero data files (empty snapshot" +
-          " with partitionBy?): a readable version needs at least one" +
-          " schema-bearing parquet file")
-      }
-      val rows = writeStats(s"$stage/data", s"$stage/stats")
-      // partition columns are recorded in the commit (the stand-in
-      // for Delta's log schema): readers of the manifest know them
-      // without trusting partition-dir type inference
-      val line = Commit(next, operation, rows, ts = commitTs,
-        partitionBy = partitionBy).line
-      // the feed derives from the STAGED data (still at $stage/data —
-      // publishVersion moves it after), so the writer's upstream
-      // pipeline is never re-executed for the diff
-      val won = publishVersion(next, line, Some(stage),
-        stageFeed.map(f => () => f(next, s"$stage/data")))
-      // registered bloom indexes ride with the commit (advisory: a
-      // reader between manifest append and index write just prunes less)
-      if (won) maintainBloomIndexes(next)
-      Option.when(won)(next)
-    }
+    retrying("commit of")(commitOnce(log, df, operation, stageFeed, commitTs,
+      partitionBy, mergeSchema, overwriteSchema))
   }
 
-  /** The ONE commit critical section. Under the table's commit lock:
-    * RE-CHECK that `next` is still unclaimed; clear a crashed writer's
-    * orphans for the slot (a staged `_changes/v=next` must not become
-    * this version's CDC rows, and an orphaned data/stats dir — death
-    * between move and manifest append — would make the move throw
-    * forever; the manifest proves none is committed, so all are safe to
-    * remove under the lock); stage the change feed; rename the staged
-    * `data`/`stats` (if any) into place; append the manifest `line`.
-    * The feed MUST stage inside the critical section: its diff basis
-    * (version next-1) and the `_changes/v=next` slot are only stable
-    * while holding the commit, and a racing loser could otherwise
-    * clobber a winner's committed feed. The manifest append is the
-    * commit point, so data, stats, and feed become visible together or
-    * not at all. Returns false if another writer claimed `next`; the
-    * staging dir is removed either way. */
-  private def publishVersion(next: Long, line: String,
-      stage: Option[String] = None, stageFeed: Option[() => Unit] = None): Boolean = {
-    val won = VersionedTable.commitLock(root).synchronized {
-      if (latestVersion.map(_ + 1).getOrElse(0L) != next) false
-      else {
-        Fs.deleteTree(Paths.get(s"$root/_changes/v=$next"))
-        Fs.deleteTree(Paths.get(s"$root/v=$next"))
-        Fs.deleteTree(Paths.get(s"$root/_stats/v=$next"))
-        stageFeed.foreach(_())
-        stage.foreach { s =>
-          Files.createDirectories(Paths.get(s"$root/_stats"))
-          Files.move(Paths.get(s"$s/data"), Paths.get(s"$root/v=$next"))
-          Files.move(Paths.get(s"$s/stats"), Paths.get(s"$root/_stats/v=$next"))
-        }
-        VersionedTable.appendManifest(root, line)
-        true
-      }
+  /** One attempt to commit `df` as version `lg.next`: write data + stats
+    * (+ feed) into a fresh version directory, then [[publishVersion]].
+    * None if another writer took the version. */
+  private def commitOnce(lg: Log, df: DataFrame, operation: String,
+      stageFeed: Option[FeedStager], commitTs: Option[String],
+      partitionBy: Seq[String], mergeSchema: Boolean,
+      overwriteSchema: Boolean): Option[Long] = {
+    val next = lg.next
+    // Schema enforcement must see the head THIS attempt commits onto: a
+    // loser's retry lands on the winner's schema, and validating only
+    // once up front would let the retry silently revert a concurrent
+    // mergeSchema evolution (the winner's new column dropped with no
+    // error). Re-checking per attempt against the head `next` derives
+    // from is the local analogue of Delta's ConcurrentWrite metadata-
+    // conflict resolution: the conflicting retry FAILS instead. The
+    // put-if-absent entry guarantees no commit lands on a head this
+    // validation didn't see. (Yes, the first attempt re-validates what
+    // the entry check already saw — but the constraint pass between
+    // them is a full Spark job, ample time for a concurrent mergeSchema
+    // commit to move the head; one footer read is the price of
+    // validating against the head `next` actually derives from.)
+    enforceSchema(lg, df, mergeSchema, overwriteSchema)
+    val (name, dir) = newVersionDir(next)
+    val writer = df.write.mode("overwrite")
+    (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
+      .parquet(dir)
+    // fail with the actual cause: an empty snapshot under partitionBy
+    // stages no files at all (the dynamic-partition writer is per-row),
+    // and this parquet stand-in has no log-recorded schema to give such
+    // a version — the schema-less stats read below would otherwise die
+    // with an opaque 'unable to infer schema'
+    if (Fs.dataFiles(Paths.get(dir)).isEmpty) {
+      Fs.deleteTree(Paths.get(dir))
+      sys.error(s"commit of $root staged zero data files (empty snapshot" +
+        " with partitionBy?): a readable version needs at least one" +
+        " schema-bearing parquet file")
     }
-    stage.foreach(s => Fs.deleteTree(Paths.get(s)))
+    val rows = writeStats(dir, name, s"$dir/_stats")
+    // the feed derives from the STAGED data, so the writer's upstream
+    // pipeline is never re-executed for the diff
+    stageFeed.foreach(f => f(lg, next, dir))
+    // partition columns are recorded in the entry (the stand-in for
+    // Delta's log schema): readers of the log know them without
+    // trusting partition-dir type inference
+    val won = publishVersion(Commit(next, operation, rows, name, ts = commitTs,
+      feed = stageFeed.isDefined, partitionBy = partitionBy), Some(dir))
+    // registered bloom indexes ride with the commit (advisory: a
+    // reader between the entry and the index write just prunes less)
+    if (won) maintainBloomIndexes(next, dir)
+    Option.when(won)(next)
+  }
+
+  /** A fresh, uniquely named directory for a version-`next` attempt:
+    * (root-relative name, path). Nothing names it until its entry is
+    * created, so a lost or crashed attempt leaves only debris that
+    * [[vacuum]] sweeps. */
+  private def newVersionDir(next: Long): (String, String) = {
+    val name = s"v$next-${java.util.UUID.randomUUID()}"
+    (name, s"$root/$name")
+  }
+
+  /** The ONE commit point: create `_log/<N>.json` for `entry` if absent.
+    * Everything the version owns — data, stats, change feed — is already
+    * complete in its directory, so creating the entry makes all of it
+    * visible at once, or none of it. Returns false if another writer
+    * created the entry first; the loser's `staged` directory is deleted.
+    * No lock: the put-if-absent is atomic across threads AND processes. */
+  private def publishVersion(entry: Commit, staged: Option[String]): Boolean = {
+    val won = Fs.putIfAbsent(VersionedTable.entryPath(root, entry.version),
+      entry.json)
+    if (!won) staged.foreach(d => Fs.deleteTree(Paths.get(d)))
     won
   }
 
   /** The ONE optimistic-concurrency retry loop: re-run `attempt` against
-    * the current head until it commits (Some). Under k-writer contention
-    * a commit can lose at most k-1 races (every loss means someone else
-    * committed), so a generous cap only guards against a pathological
-    * livelock. */
+    * the current head until it commits (Some). Every loss means another
+    * writer committed, so the table always progresses — but a slower
+    * writer can lose once per commit of a faster one for as long as that
+    * one keeps writing (two writer processes of 30 appends each have
+    * shown 21 straight losses). The cap therefore bounds only a
+    * pathological livelock, not ordinary contention. */
   private def retrying[A](what: String)(attempt: => Option[A]): A = {
     var losses = 0
     var result = attempt
     while (result.isEmpty) {
       losses += 1
-      if (losses > 20) throw new IllegalStateException(
+      if (losses > 1000) throw new IllegalStateException(
         s"$what $root contended $losses times; giving up")
       result = attempt
     }
@@ -300,7 +311,8 @@ final class VersionedTable(spark: SparkSession, root: String) {
         BooleanType).contains(f.dataType) => f.name
     }.toSeq
 
-  /** Per-file row counts + min/max structs → `_stats/v=N` parquet.
+  /** Per-file row counts + min/max structs of the data files in `dir`
+    * (a version directory named `anchor`) → `statsOut` parquet.
     * Returns the total row count (so the commit needs no second counting
     * scan). One stats row per data file — at 100 TB this is the same
     * "stats ride with the commit" shape as the Delta log, and the
@@ -319,16 +331,16 @@ final class VersionedTable(spark: SparkSession, root: String) {
     * or oversized binary stats — falls back to the one-scan aggregation
     * below, whose output is identical (VersionedTableSpec pins
     * footer == scan on a mixed-type table). */
-  private def writeStats(dataDir: String, statsOut: String,
+  private def writeStats(dir: String, anchor: String, statsOut: String,
       schemaHint: Option[StructType] = None): Long = {
     // a hint pins partition-column types to the head's read-back schema:
     // partition-dir inference is value-dependent (an all-numeric batch of
     // a string partition column infers int), and stats must union with
     // the head's rows under ONE schema — see commitWithCarry
     val reader = schemaHint.fold(spark.read)(h => spark.read.schema(h))
-    val written = reader.parquet(dataDir)
+    val written = reader.parquet(dir)
     val cols = statColumns(written.schema)
-    VersionedTable.footerStats(spark, dataDir, written.schema, cols).foreach {
+    VersionedTable.footerStats(spark, dir, written.schema, cols).foreach {
       case (totalRows, statsDf) =>
         statsDf.coalesce(1).write.mode("overwrite").parquet(statsOut)
         return totalRows
@@ -339,14 +351,13 @@ final class VersionedTable(spark: SparkSession, root: String) {
          else Seq(
            struct(cols.map(c => min(col(c)).as(c)): _*).as("mins"),
            struct(cols.map(c => max(col(c)).as(c)): _*).as("maxs")))
-    // record paths RELATIVE to the staged data root (`<uuid>/data/…`):
-    // stats are computed in the staging dir and must survive the rename to
-    // v=N (readWhere re-anchors on dataDir), and a partitioned layout
-    // needs the `col=value/` prefix kept. A literal `/data/` segment
-    // cannot reappear deeper: partition dirs always contain `=` and
-    // special chars in values are URL-encoded.
+    // record paths RELATIVE to the version directory (readWhere
+    // re-anchors on it, and carried files keep their relative paths); a
+    // partitioned layout needs the `col=value/` prefix kept. The unique
+    // directory name cannot reappear deeper: partition dirs always
+    // contain `=`.
     val stats = written
-      .groupBy(VersionedTable.decodedRelFile("^.*/data/").as("file"))
+      .groupBy(VersionedTable.decodedRelFile(anchor).as("file"))
       .agg(aggs.head, aggs.tail: _*)
     stats.coalesce(1).write.mode("overwrite").parquet(statsOut)
     spark.read.parquet(statsOut)
@@ -361,24 +372,25 @@ final class VersionedTable(spark: SparkSession, root: String) {
     */
   def readWhere(column: String, lo: Any, hi: Any,
       versionAsOf: Option[Long] = None): DataFrame = {
+    val lg = log
     val v = versionAsOf.getOrElse(
-      latestVersion.getOrElse(sys.error(s"empty table at $root")))
+      lg.latest.getOrElse(sys.error(s"empty table at $root")))
     val residual = col(column) >= lit(lo) && col(column) <= lit(hi)
-    val sd = statsDir(v)
-    if (!Files.exists(Paths.get(sd))) return read(Some(v)).filter(residual)
+    val dir = lg.dir(v)
+    val sd = s"$dir/_stats"
+    if (!Files.exists(Paths.get(sd))) return readAt(lg, v).filter(residual)
     val stats = spark.read.parquet(sd)
     if (!stats.columns.contains("mins") ||
         !stats.select("mins.*").columns.contains(column))
-      return read(Some(v)).filter(residual)
-    val dir = dataDir(v) // hoisted: dataDir re-parses the manifest per call
+      return readAt(lg, v).filter(residual)
     val files = stats
       .filter(col(s"maxs.$column") >= lit(lo) && col(s"mins.$column") <= lit(hi))
       .select("file").collect().map(r => s"$dir/${r.getString(0)}").toSeq
-    if (files.isEmpty) read(Some(v)).filter(residual).filter(lit(false))
+    if (files.isEmpty) readAt(lg, v).filter(residual).filter(lit(false))
     // basePath anchors partition discovery so a partitioned version's
     // `col=value` columns survive an explicit-file-subset read
     else applyDeletes(
-      spark.read.option("basePath", dir).parquet(files: _*), v).filter(residual)
+      spark.read.option("basePath", dir).parquet(files: _*), lg(v)).filter(residual)
   }
 
   /** Build a per-file BLOOM FILTER INDEX on `column` for the head version
@@ -405,34 +417,29 @@ final class VersionedTable(spark: SparkSession, root: String) {
     // register the index so every subsequent commit maintains it (the
     // Delta CREATE BLOOMFILTER INDEX contract: index once, writes keep
     // it); bits=0 re-sizes per version from that version's own files.
-    // Re-registration REPLACES the column's config line — keeping the old
-    // one would rebuild the head with the new parameters but maintain all
-    // future versions with the stale sizing, a silent divergence.
-    Files.createDirectories(Paths.get(root))
-    val cfg = s"""{"column":"$column","bits":$bits,"hashes":$hashes,""" +
-      s""""fpp_ppm":${math.round(fpp * 1000000)}}"""
-    // the replace is a read-modify-write of the whole file (no longer a
-    // pure append), so serialize it under the table's commit lock —
-    // concurrent registrations of DIFFERENT columns must not lose lines.
-    // Committers read the file OUTSIDE the lock (bloomConfigs), so the
-    // rewrite is an atomic replace: never an empty file or a partial line
-    VersionedTable.commitLock(root).synchronized {
-      val others =
-        if (!Files.exists(bloomConfigPath)) Seq.empty
-        else Files.readAllLines(bloomConfigPath, StandardCharsets.UTF_8).asScala.toSeq
-          .filterNot(l =>
-            """"column":"([^"]*)"""".r.findFirstMatchIn(l).exists(_.group(1) == column))
-      Fs.writeAtomic(bloomConfigPath, (others :+ cfg).mkString("", "\n", "\n"))
-    }
-    latestVersion.foreach(v => buildBloomFor(v, column, bits, hashes, fpp))
+    // Re-registration REPLACES the column's config — keeping the old one
+    // would rebuild the head with the new parameters but maintain all
+    // future versions with the stale sizing, a silent divergence. One
+    // file per column, replaced atomically: registrations of different
+    // columns never touch the same file, and committers reading the
+    // configs never see an empty or partial one.
+    Fs.writeAtomic(bloomConfigDir.resolve(column),
+      s"""{"column":"$column","bits":$bits,"hashes":$hashes,""" +
+        s""""fpp_ppm":${math.round(fpp * 1000000)}}""" + "\n")
+    val lg = log
+    lg.latest.foreach(v => buildBloomFor(lg.dir(v), v, column, bits, hashes, fpp))
   }
 
-  private def bloomConfigPath: Path = Paths.get(root, "_bloom_config")
+  private def bloomConfigDir: Path = Paths.get(root, "_bloom_config")
 
-  private def bloomConfigs: Seq[(String, Int, Int, Double)] =
-    if (!Files.exists(bloomConfigPath)) Seq.empty
-    else Files.readAllLines(bloomConfigPath, StandardCharsets.UTF_8).asScala.toSeq
-      .map { line =>
+  private def bloomConfigs: Seq[(String, Int, Int, Double)] = {
+    if (!Files.isDirectory(bloomConfigDir)) return Seq.empty
+    val s = Files.list(bloomConfigDir)
+    val files = try s.iterator().asScala.toVector finally s.close()
+    files.filterNot(_.getFileName.toString.startsWith(".")) // in-flight temps
+      .sortBy(_.getFileName.toString)
+      .map { p =>
+        val line = Files.readString(p, StandardCharsets.UTF_8)
         val c = """"column":"([^"]*)"""".r.findFirstMatchIn(line).get.group(1)
         val b = """"bits":(\d+)""".r.findFirstMatchIn(line).get.group(1).toInt
         val h = """"hashes":(\d+)""".r.findFirstMatchIn(line).get.group(1).toInt
@@ -440,25 +447,27 @@ final class VersionedTable(spark: SparkSession, root: String) {
           .map(_.group(1).toLong / 1000000.0).getOrElse(0.01)
         (c, b, h, f)
       }
+  }
 
   /** Rebuild every registered bloom index for version `v` — one scan of
     * the new version per indexed column, the same "stats ride with the
     * commit" shape as [[writeStats]]. Columns absent from the snapshot
     * (schema evolution) are skipped; readFiltered then simply has no
     * index for them on this version. */
-  private def maintainBloomIndexes(v: Long): Unit = {
+  private def maintainBloomIndexes(v: Long, dir: String): Unit = {
     val configs = bloomConfigs
     if (configs.isEmpty) return
     // one schema read per commit, not per indexed column
-    val cols = spark.read.parquet(dataDir(v)).columns.toSet
+    val cols = spark.read.parquet(dir).columns.toSet
     configs.foreach { case (c, b, h, f) =>
-      if (cols.contains(c)) buildBloomFor(v, c, b, h, f)
+      if (cols.contains(c)) buildBloomFor(dir, v, c, b, h, f)
     }
   }
 
-  private def buildBloomFor(v: Long, column: String, bits0: Int,
+  /** (Re)build version `v`'s index on `column` from its files in `dir`. */
+  private def buildBloomFor(dir: String, v: Long, column: String, bits0: Int,
       hashes0: Int, fpp: Double): Unit = {
-    val df = spark.read.parquet(dataDir(v))
+    val df = spark.read.parquet(dir)
     require(df.columns.contains(column), s"no column $column to index")
     val (bits, hashes) =
       if (bits0 > 0 && hashes0 > 0) (bits0, hashes0)
@@ -476,7 +485,7 @@ final class VersionedTable(spark: SparkSession, root: String) {
         val k = math.min(8, math.max(1, math.round(m.toDouble / n * ln2).toInt))
         (m, k)
       }
-    writeBloomDir(bloomRows(df, column, bits, hashes), column, v)
+    writeBloomDir(bloomRows(df, dir, column, bits, hashes), column, v)
   }
 
   /** Land a bloom index dir ATOMICALLY ([[Fs.publishDir]]): index writes
@@ -509,15 +518,15 @@ final class VersionedTable(spark: SparkSession, root: String) {
     if (row.isNullAt(0)) None else Some(row.getLong(0))
   }
 
-  /** Per-file bloom position-set rows for `df`'s files (file key anchored
-    * on the version dir, like the stats table — nested partition dirs
-    * keep their col=value/ prefix). */
-  private def bloomRows(df: DataFrame, column: String,
+  /** Per-file bloom position-set rows for `df`'s files in version
+    * directory `dir` (file key relative to it, like the stats table —
+    * nested partition dirs keep their col=value/ prefix). */
+  private def bloomRows(df: DataFrame, dir: String, column: String,
       bits: Int, hashes: Int): DataFrame = {
     val positions = array((0 until hashes).map(i =>
       pmod(xxhash64(col(column), lit(i)), lit(bits)).cast("int")): _*)
     df
-      .select(VersionedTable.decodedRelFile("^.*/v=\\d+/").as("file"),
+      .select(VersionedTable.decodedRelFile(Paths.get(dir).getFileName.toString).as("file"),
         explode(positions).as("pos"))
       .groupBy("file")
       .agg(sort_array(collect_set(col("pos"))).as("positions"),
@@ -539,15 +548,15 @@ final class VersionedTable(spark: SparkSession, root: String) {
     * rebuild, the exact behavior a fixed-size index must avoid and an
     * auto-sized one must have (a saturated filter prunes nothing). */
   private def maintainBloomIndexesIncremental(prev: Long, next: Long,
-      carriedRel: Set[String]): Unit = {
+      nextDir: String, carriedRel: Set[String]): Unit = {
     import spark.implicits._
     val configs = bloomConfigs
     if (configs.isEmpty) return
     // loop invariants hoisted: one schema read + one file walk per commit,
     // not per indexed column
-    val nextCols = spark.read.parquet(dataDir(next)).columns.toSet
-    val newRel = dataFilesRel(next).filterNot(carriedRel)
-    val dir = Paths.get(dataDir(next)).toAbsolutePath.toString
+    val dir = Paths.get(nextDir).toAbsolutePath.toString
+    val nextCols = spark.read.parquet(dir).columns.toSet
+    val newRel = Fs.dataFiles(Paths.get(dir)).filterNot(carriedRel)
     configs.foreach { case (c, b0, h0, fpp) =>
       if (nextCols.contains(c)) {
         val prevIdx = bloomDir(c, prev)
@@ -580,19 +589,19 @@ final class VersionedTable(spark: SparkSession, root: String) {
             if (!fixedOk && !autoOk) return false
             val (m, k) = sized.get
             writeBloomDir(
-              bloomRows(newDf, c, m, k).unionByName(prior
+              bloomRows(newDf, dir, c, m, k).unionByName(prior
                 .join(carriedRel.toSeq.toDF("file"), Seq("file"), "left_semi")),
               c, next)
             true
           } catch {
             // index writes are atomic, but a concurrent vacuum can still
-            // delete the prev dir between listing and read, and a torn
-            // LEGACY dir (pre-atomic-rename) fails at execution time,
-            // not analysis — any failure here falls back to the full
-            // rebuild from committed data, which is always correct
+            // delete the prev dir between listing and read, which fails
+            // at execution time, not analysis — any failure here falls
+            // back to the full rebuild from committed data, which is
+            // always correct
             case scala.util.control.NonFatal(_) => false
           }
-        if (!incremental()) buildBloomFor(next, c, b0, h0, fpp)
+        if (!incremental()) buildBloomFor(dir, next, c, b0, h0, fpp)
       }
     }
   }
@@ -627,16 +636,17 @@ final class VersionedTable(spark: SparkSession, root: String) {
     * (NOT, IS NULL, functions, col-vs-col) keep their files — pruning is
     * only ever an optimization, never a correctness dependency. */
   def readFiltered(predicate: String, versionAsOf: Option[Long] = None): DataFrame = {
+    val lg = log
     val v = versionAsOf.getOrElse(
-      latestVersion.getOrElse(sys.error(s"empty table at $root")))
+      lg.latest.getOrElse(sys.error(s"empty table at $root")))
     val residual = expr(predicate)
-    val sd = statsDir(v)
-    if (!Files.exists(Paths.get(sd))) return read(Some(v)).filter(residual)
+    val dir = lg.dir(v)
+    val sd = s"$dir/_stats"
+    if (!Files.exists(Paths.get(sd))) return readAt(lg, v).filter(residual)
     val stats = spark.read.parquet(sd)
-    if (!stats.columns.contains("mins")) return read(Some(v)).filter(residual)
+    if (!stats.columns.contains("mins")) return readAt(lg, v).filter(residual)
     val statCols = stats.select("mins.*").schema.fields
       .map(f => f.name -> f.dataType).toMap
-    val dir = dataDir(v)
     // left-join each bloom index's position sets onto the stats rows
     // (NULL positions = unindexed file = conservatively kept by the probe)
     val blooms = bloomIndexes(v)
@@ -651,13 +661,13 @@ final class VersionedTable(spark: SparkSession, root: String) {
     val files = statsWithBloom
       .filter(StatsPruning.survives(spark, predicate, statCols, bloomMeta))
       .select("file").collect().map(r => s"$dir/${r.getString(0)}").toSeq
-    if (files.isEmpty) read(Some(v)).filter(residual).filter(lit(false))
+    if (files.isEmpty) readAt(lg, v).filter(residual).filter(lit(false))
     else applyDeletes(
-      spark.read.option("basePath", dir).parquet(files: _*), v).filter(residual)
+      spark.read.option("basePath", dir).parquet(files: _*), lg(v)).filter(residual)
   }
 
   /** SHALLOW CLONE (Delta `CREATE TABLE ... SHALLOW CLONE src`): a new
-    * table whose v0 manifest entry POINTS AT the source head's data files
+    * table whose v0 log entry POINTS AT the source head's data files
     * (and stats) instead of copying them — metadata-only, O(1) data
     * movement. The clone then evolves independently: its own writes land
     * under its own root. Like Delta, VACUUMing the source invalidates
@@ -666,22 +676,21 @@ final class VersionedTable(spark: SparkSession, root: String) {
     * data).
     */
   def shallowClone(destRoot: String): VersionedTable = {
-    val v = latestVersion.getOrElse(sys.error(s"empty table at $root"))
-    val src = commits.find(_.version == v).get
-    require(Files.isDirectory(Paths.get(dataDir(v))),
-      s"cannot clone version $v of $root: data was vacuumed")
+    val lg = log
+    val src = lg.commits.lastOption.getOrElse(sys.error(s"empty table at $root"))
+    val dir = dirOf(src)
+    require(Files.isDirectory(Paths.get(dir)),
+      s"cannot clone version ${src.version} of $root: data was vacuumed")
     val dest = new VersionedTable(spark, destRoot)
     require(dest.versions.isEmpty, s"clone target $destRoot is not empty")
-    val dataLoc = Paths.get(dataDir(v)).toAbsolutePath.toString
-    val statsLoc = Paths.get(statsDir(v)).toAbsolutePath.toString
     // delete predicates travel with the clone (its v0 must read the same
-    // logical rows as the source head)
-    Files.createDirectories(Paths.get(destRoot))
-    val claimed = dest.publishVersion(0L,
-      Commit(0L, s"clone_of:$root@v$v", src.rows,
-        location = Some(dataLoc), statsLocation = Some(statsLoc),
+    // logical rows as the source head); its stats sit in the shared dir.
+    // No change feed: the source's feed belongs to the source's version.
+    val claimed = dest.publishVersion(
+      Commit(0L, s"clone_of:$root@v${src.version}", src.rows,
+        Paths.get(dir).toAbsolutePath.toString,
         deletePredicates = src.deletePredicates,
-        partitionBy = src.partitionBy).line)
+        partitionBy = src.partitionBy), None)
     require(claimed, s"clone target $destRoot is not empty")
     // table metadata travels with the clone: CHECK constraints keep
     // enforcing on the clone's own commits (Delta CLONE copies properties)
@@ -689,10 +698,10 @@ final class VersionedTable(spark: SparkSession, root: String) {
       Files.copy(constraintsPath, Paths.get(destRoot, "_constraints"))
     // bloom registrations too, plus the head's tiny position sets (the
     // clone's v0 reads the same files, so the index is valid as-is)
-    if (Files.exists(bloomConfigPath)) {
-      Files.copy(bloomConfigPath, Paths.get(destRoot, "_bloom_config"))
+    if (Files.isDirectory(bloomConfigDir)) {
+      Fs.copyTree(bloomConfigDir, dest.bloomConfigDir)
       bloomConfigs.foreach { case (c, _, _, _) =>
-        carryBloomDir(bloomDir(c, v), dest.bloomDir(c, 0L))
+        carryBloomDir(bloomDir(c, src.version), dest.bloomDir(c, 0L))
       }
     }
     dest
@@ -702,7 +711,7 @@ final class VersionedTable(spark: SparkSession, root: String) {
     * Delta CDF rows with `_change_type`, `_commit_version`,
     * `_commit_timestamp`). The feed for version N is derived as the
     * keyed diff against version N-1 (one key shuffle; v0 is all-insert)
-    * and staged under `_changes/v=N` BEFORE the manifest line commits,
+    * and staged in the version's directory BEFORE its entry is created,
     * so feed and data become visible atomically.
     *
     * @param commitTs injected commit timestamp (deterministic pipelines
@@ -715,27 +724,41 @@ final class VersionedTable(spark: SparkSession, root: String) {
       mergeSchema: Boolean = false,
       overwriteSchema: Boolean = false,
       partitionBy: Seq[String] = Seq.empty): Long = {
-    commit(df, operation, stageFeed = Some { (next, stagedData) =>
-      // Diff from the STAGED parquet, not `df`: the incoming snapshot was
-      // just materialized by the data write, and re-using `df` here would
-      // re-execute its entire upstream pipeline a second time (at 100 TB,
-      // the full ingest transform) just to derive the feed. Partition-dir
-      // type inference can retype partition columns on read-back, so the
-      // snapshot is re-cast to df's declared schema before diffing.
-      val staged = spark.read.option("basePath", stagedData).parquet(stagedData)
-        .select(df.schema.fields.toIndexedSeq
-          .map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
-      val feed =
-        if (next == 0L) graft.ops.ChangeFeed.allInserts(staged)
-        else graft.ops.ChangeFeed.diff(read(Some(next - 1)), staged, keyCols)
-      feed
-        .withColumn(graft.ops.ChangeFeed.CommitVersionCol, lit(next))
-        .withColumn(graft.ops.ChangeFeed.CommitTimestampCol,
-          to_timestamp(lit(commitTs)))
-        .write.mode("overwrite").parquet(s"$root/_changes/v=$next")
-    }, commitTs = Some(commitTs), partitionBy = partitionBy,
+    commit(df, operation, stageFeed = Some(diffFeed(df, keyCols, commitTs)),
+      commitTs = Some(commitTs), partitionBy = partitionBy,
       mergeSchema = mergeSchema, overwriteSchema = overwriteSchema)
   }
+
+  /** [[writeWithChangeFeed]]'s feed: the keyed diff of the staged
+    * snapshot against version N-1 (all-insert at v0). The basis is safe
+    * without a lock: version N-1 is immutable once committed, and this
+    * attempt only commits if it wins N. */
+  private def diffFeed(df: DataFrame, keyCols: Seq[String],
+      commitTs: String): FeedStager = { (lg, next, stagedDir) =>
+    // Diff from the STAGED parquet, not `df`: the incoming snapshot was
+    // just materialized by the data write, and re-using `df` here would
+    // re-execute its entire upstream pipeline a second time (at 100 TB,
+    // the full ingest transform) just to derive the feed. Partition-dir
+    // type inference can retype partition columns on read-back, so the
+    // snapshot is re-cast to df's declared schema before diffing.
+    val staged = spark.read.option("basePath", stagedDir).parquet(stagedDir)
+      .select(df.schema.fields.toIndexedSeq
+        .map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
+    val feed =
+      if (next == 0L) graft.ops.ChangeFeed.allInserts(staged)
+      else graft.ops.ChangeFeed.diff(readAt(lg, next - 1), staged, keyCols)
+    writeFeed(feed, next, commitTs, stagedDir)
+  }
+
+  /** Stamp a feed with its commit version/timestamp and write it into
+    * the staged version directory. */
+  private def writeFeed(feed: DataFrame, next: Long, commitTs: String,
+      stagedDir: String): Unit =
+    feed
+      .withColumn(graft.ops.ChangeFeed.CommitVersionCol, lit(next))
+      .withColumn(graft.ops.ChangeFeed.CommitTimestampCol,
+        to_timestamp(lit(commitTs)))
+      .write.mode("overwrite").parquet(VersionedTable.feedDir(stagedDir))
 
   /** Read the change feed from `fromVersion` to head (M13 / S4:
     * `table_changes(...)` equivalent; also consumable as a file stream for
@@ -750,35 +773,37 @@ final class VersionedTable(spark: SparkSession, root: String) {
       s"change feed of $root from version $fromVersion is beyond " +
         s"retention: feed versions <= $dropped were dropped by vacuum — " +
         s"re-sync from a snapshot, then resume from ${dropped + 1}")
-    val vs = versions.filter(_ >= fromVersion)
-      .filter(v => Files.exists(Paths.get(s"$root/_changes/v=$v")))
-    require(vs.nonEmpty, s"no change-feed versions >= $fromVersion at $root")
+    val dirs = VersionedTable.feeds(root, log.commits)
+      .collect { case (v, d) if v >= fromVersion => d }
+    require(dirs.nonEmpty, s"no change-feed versions >= $fromVersion at $root")
     // mergeSchema: a feed spanning a mergeSchema evolution would
     // otherwise pin whichever version's schema wins inference and
     // silently drop the evolved column from the other versions' rows
-    spark.read.option("mergeSchema", "true")
-      .parquet(vs.map(v => s"$root/_changes/v=$v"): _*)
+    spark.read.option("mergeSchema", "true").parquet(dirs: _*)
   }
 
   /** Time-travel read (S6): latest version, or `VERSION AS OF v`. */
   def read(versionAsOf: Option[Long] = None): DataFrame = {
-    val v = versionAsOf.getOrElse(
-      latestVersion.getOrElse(sys.error(s"empty table at $root")))
-    require(versions.contains(v), s"version $v not in ${versions.mkString(",")}")
-    // a vacuumed version stays in the manifest (audit trail) but its data
+    val lg = log
+    readAt(lg, versionAsOf.getOrElse(
+      lg.latest.getOrElse(sys.error(s"empty table at $root"))))
+  }
+
+  private def readAt(lg: Log, v: Long): DataFrame = {
+    // a vacuumed version stays in the log (audit trail) but its data
     // is gone — fail with the actual cause, not a parquet path error
-    require(Files.isDirectory(Paths.get(dataDir(v))),
+    def readable(c: Commit) = Files.isDirectory(Paths.get(dirOf(c)))
+    require(readable(lg(v)),
       s"version $v of $root was vacuumed; earliest readable version is " +
-        s"${versions.filter(x => Files.isDirectory(Paths.get(dataDir(x)))).minOption.getOrElse("none")}")
-    applyDeletes(spark.read.parquet(dataDir(v)), v)
+        s"${lg.commits.filter(readable).map(_.version).minOption.getOrElse("none")}")
+    applyDeletes(spark.read.parquet(lg.dir(v)), lg(v))
   }
 
   /** Apply a version's stored delete predicates (see [[deleteWhere]]).
     * SQL DELETE semantics: only rows where the predicate is TRUE are
     * deleted — a NULL predicate result keeps the row. */
-  private def applyDeletes(df: DataFrame, v: Long): DataFrame =
-    commits.find(_.version == v).map(_.deletePredicates).getOrElse(Seq.empty)
-      .foldLeft(df)((d, p) => d.filter(!coalesce(expr(p), lit(false))))
+  private def applyDeletes(df: DataFrame, c: Commit): DataFrame =
+    c.deletePredicates.foldLeft(df)((d, p) => d.filter(!coalesce(expr(p), lit(false))))
 
   /** Logical DELETE WHERE — the spirit of Delta deletion vectors: commit a
     * new version that REFERENCES the previous version's files plus a
@@ -793,21 +818,19 @@ final class VersionedTable(spark: SparkSession, root: String) {
     require(!condition.contains("\"") && !condition.contains("]"),
       "delete predicates use single quotes and no ']'")
     retrying("deleteWhere of") {
-      val v = latestVersion.getOrElse(sys.error(s"empty table at $root"))
+      val base = log.commits.lastOption.getOrElse(sys.error(s"empty table at $root"))
+      val v = base.version
       val next = v + 1
-      val base = commits.find(_.version == v).get
-      val preds = base.deletePredicates :+ condition
-      val rows = applyDeletes(spark.read.parquet(dataDir(v)), v)
+      val rows = applyDeletes(spark.read.parquet(dirOf(base)), base)
         .filter(!coalesce(expr(condition), lit(false))).count()
-      val dataLoc = Paths.get(dataDir(v)).toAbsolutePath.toString
-      val statsLoc = Paths.get(statsDir(v)).toAbsolutePath.toString
-      // record the commit timestamp like write() does — without it a
-      // readAsOf(ts) after the delete resolves to the last ts-bearing
-      // PRE-delete version and resurrects logically deleted rows
-      val line = Commit(next, "delete_where", rows, ts = commitTs,
-        location = Some(dataLoc), statsLocation = Some(statsLoc),
-        deletePredicates = preds, partitionBy = base.partitionBy).line
-      Option.when(publishVersion(next, line)) {
+      // the new version references the head's directory as-is (no new
+      // dir, no feed); the commit timestamp is recorded like write()
+      // does — without it a readAsOf(ts) after the delete resolves to the
+      // last ts-bearing PRE-delete version and resurrects deleted rows
+      val entry = Commit(next, "delete_where", rows, base.location, ts = commitTs,
+        deletePredicates = base.deletePredicates :+ condition,
+        partitionBy = base.partitionBy)
+      Option.when(publishVersion(entry, None)) {
         // the new head references the SAME files — position sets stay
         // valid, so carry them forward instead of an O(data) rebuild
         // (deleteWhere must stay O(metadata))
@@ -825,30 +848,27 @@ final class VersionedTable(spark: SparkSession, root: String) {
     * Versions committed without a timestamp are ignored, like Delta
     * versions outside the retention window. */
   def readAsOf(timestamp: String): DataFrame = {
-    val v = commits.filter(_.ts.exists(_ <= timestamp)).map(_.version).maxOption
+    val lg = log
+    val v = lg.commits.filter(_.ts.exists(_ <= timestamp)).map(_.version).maxOption
       .getOrElse(sys.error(
         s"no version of $root committed at or before $timestamp"))
-    read(Some(v))
+    readAt(lg, v)
   }
 
   /** Metadata-only row count (Delta serves `SELECT COUNT(*)` from log
-    * statistics without touching data): the manifest records each
+    * statistics without touching data): each log entry records its
     * commit's row count — deleteWhere commits record the post-delete
-    * count — so counting any version is a manifest lookup, O(1) at any
+    * count — so counting any version is a log lookup, O(1) at any
     * table size. */
   def countFast(versionAsOf: Option[Long] = None): Long = {
-    val cs = commits
-    val v = versionAsOf.orElse(cs.map(_.version).maxOption)
-      .getOrElse(sys.error(s"empty table at $root"))
-    cs.find(_.version == v)
-      .getOrElse(sys.error(s"version $v not in ${cs.map(_.version).mkString(",")}"))
-      .rows
+    val lg = log
+    lg(versionAsOf.orElse(lg.latest).getOrElse(sys.error(s"empty table at $root"))).rows
   }
 
   /** DESCRIBE HISTORY (M2). */
   def history(): DataFrame = {
     import spark.implicits._
-    commits.map(c => (c.version, c.operation, c.rows, c.ts.orNull))
+    log.commits.map(c => (c.version, c.operation, c.rows, c.ts.orNull))
       .toDF("version", "operation", "rows", "ts")
   }
 
@@ -859,10 +879,9 @@ final class VersionedTable(spark: SparkSession, root: String) {
   def restore(version: Long): Long = {
     // restoring across a schema evolution legitimately changes the head
     // schema back — RESTORE is a protocol op, not a writer to police
-    val parts = commits.find(_.version == version)
-      .map(_.partitionBy).getOrElse(Seq.empty)
-    write(read(Some(version)), s"restore_v$version",
-      partitionBy = parts, overwriteSchema = true)
+    val lg = log
+    write(readAt(lg, version), s"restore_v$version",
+      partitionBy = lg(version).partitionBy, overwriteSchema = true)
   }
 
   /** OPTIMIZE small-file compaction (M5): rewrite head into ~targetFiles
@@ -885,8 +904,7 @@ final class VersionedTable(spark: SparkSession, root: String) {
   /** Hive partition columns recorded for the current head (empty on an
     * unpartitioned table) — maintenance rewrites carry them forward. */
   private def headPartitionBy: Seq[String] =
-    latestVersion.flatMap(v => commits.find(_.version == v))
-      .map(_.partitionBy).getOrElse(Seq.empty)
+    log.commits.lastOption.map(_.partitionBy).getOrElse(Seq.empty)
 
   /** Lexical clustering (M6): range-partition + sort the head by the
     * clustering keys so min/max file stats become selective for them —
@@ -927,8 +945,9 @@ final class VersionedTable(spark: SparkSession, root: String) {
     val refs = spark.sessionState.sqlParser.parseExpression(predicate)
       .references.map(_.name).toSet
     retrying("clusterWhere of") {
-      val head = latestVersion.getOrElse(sys.error(s"empty table at $root"))
-      val hc = commits.find(_.version == head).get
+      val lg = log
+      val head = lg.latest.getOrElse(sys.error(s"empty table at $root"))
+      val hc = lg(head)
       val parts = hc.partitionBy
       require(parts.nonEmpty, s"clusterWhere needs a partitioned head at $root")
       require(refs.nonEmpty && refs.subsetOf(parts.toSet),
@@ -939,7 +958,7 @@ final class VersionedTable(spark: SparkSession, root: String) {
           "to materialize the delete predicates")
       require(!cols.exists(parts.contains),
         s"cannot cluster by partition column(s) ${cols.filter(parts.contains).mkString(", ")}")
-      val dir = Paths.get(dataDir(head)).toAbsolutePath.toString
+      val dir = Paths.get(dirOf(hc)).toAbsolutePath.toString
       val base = spark.read.parquet(dir)
       // whole-dir match is guaranteed by the partition-column-only rule;
       // partition pruning makes this listing a metadata-scale job
@@ -950,37 +969,34 @@ final class VersionedTable(spark: SparkSession, root: String) {
         .toSet
       if (matchedRel.isEmpty) Some(head)
       else {
-        val carriedRel = dataFilesRel(head).filterNot(matchedRel)
-        val stage = s"$root/_staging/${java.util.UUID.randomUUID()}"
+        val carriedRel = Fs.dataFiles(Paths.get(dir)).filterNot(matchedRel)
+        val (name, stage) = newVersionDir(head + 1)
         val keys = (parts ++ cols).map(col)
         base.filter(expr(predicate))
           .repartitionByRange(numFiles, keys: _*)
           .sortWithinPartitions(keys: _*)
-          .write.mode("overwrite").partitionBy(parts: _*).parquet(s"$stage/data")
-        commitWithCarry(head, stage, carriedRel, "cluster_where", parts)
+          .write.mode("overwrite").partitionBy(parts: _*).parquet(stage)
+        commitWithCarry(lg, name, stage, carriedRel, "cluster_where", parts)
       }
     }
   }
 
-  /** Data files of a committed version, RELATIVE to its data dir (empty
-    * if the version's files are gone, e.g. vacuumed). */
-  private def dataFilesRel(v: Long): Vector[String] =
-    Fs.dataFiles(Paths.get(dataDir(v)))
-
   /** Shared tail of every partial-rewrite commit ([[clusterWhere]],
-    * [[append]], [[clusterIncremental]]): freshly written files are
-    * already at `$stage/data`; `carriedRel` files from version `head`
-    * hard-link in byte-identical (copy is the cross-device fallback)
-    * with their stats rows riding forward from the head's stats table —
-    * ONE stats scan over the new files only, never the carried data.
-    * Commits through [[publishVersion]]; returns None if `head` moved
-    * (caller re-derives its file sets against the new head and retries). */
-  private def commitWithCarry(head: Long, stage: String,
+    * [[append]], [[clusterIncremental]]) onto the head of `lg`: freshly
+    * written files are already in the staged version directory `stage`
+    * (named `name`); `carriedRel` files of the head hard-link in
+    * byte-identical (copy is the cross-device fallback) with their stats
+    * rows riding forward from the head's stats table — ONE stats scan
+    * over the new files only, never the carried data. Commits through
+    * [[publishVersion]]; returns None if the head moved (caller
+    * re-derives its file sets against the new head and retries). */
+  private def commitWithCarry(lg: Log, name: String, stage: String,
       carriedRel: Seq[String], operation: String, parts: Seq[String],
       commitTs: Option[String] = None,
       stageFeed: Option[(Long, String, Seq[String]) => Unit] = None): Option[Long] = {
     import spark.implicits._
-    val dir = Paths.get(dataDir(head)).toAbsolutePath.toString
+    val head = lg.latest.get
+    val dir = Paths.get(lg.dir(head)).toAbsolutePath.toString
     val next = head + 1
     // read the staged batch under the HEAD's read-back schema, so
     // partition-dir type inference on the batch's own values cannot give
@@ -989,16 +1005,16 @@ final class VersionedTable(spark: SparkSession, root: String) {
     val headSchema = spark.read.parquet(dir).schema
     // capture the freshly WRITTEN files before carried links join them in
     // the same dir — a feed must derive from the new rows only
-    val stagedData = Paths.get(s"$stage/data").toAbsolutePath
+    val stagedData = Paths.get(stage).toAbsolutePath
     val newFilesAbs = Fs.dataFiles(stagedData).map(r => s"$stagedData/$r")
     val rewrittenRows =
-      writeStats(s"$stage/data", s"$stage/stats_new", Some(headSchema))
-    val carriedStats = spark.read.parquet(statsDir(head))
+      writeStats(stage, name, s"$stage/_stats_new", Some(headSchema))
+    val carriedStats = spark.read.parquet(s"$dir/_stats")
       .join(carriedRel.toDF("file"), Seq("file"), "left_semi")
       .localCheckpoint(true)
     val carriedRows = carriedStats.agg(coalesce(sum(col("cnt")), lit(0L)))
       .collect()(0).getLong(0)
-    val newStats = spark.read.parquet(s"$stage/stats_new")
+    val newStats = spark.read.parquet(s"$stage/_stats_new")
     // fail LOUDLY if partition-dir type inference gave the staged batch a
     // different stats schema than the head's (e.g. a string partition
     // column whose batch values are all-numeric infers int): a silent
@@ -1010,20 +1026,21 @@ final class VersionedTable(spark: SparkSession, root: String) {
           s"staged ${newStats.schema.simpleString} vs head " +
           s"${carriedStats.schema.simpleString}")
     newStats.unionByName(carriedStats)
-      .coalesce(1).write.mode("overwrite").parquet(s"$stage/stats")
-    Fs.deleteTree(Paths.get(s"$stage/stats_new"))
+      .coalesce(1).write.mode("overwrite").parquet(s"$stage/_stats")
+    Fs.deleteTree(Paths.get(s"$stage/_stats_new"))
     carriedRel.foreach { rel =>
       val src = Paths.get(dir, rel)
-      val dst = Paths.get(s"$stage/data", rel)
+      val dst = Paths.get(stage, rel)
       Files.createDirectories(dst.getParent)
-      // this carry runs OUTSIDE the commit lock: a concurrent vacuum can
-      // delete the head dir mid-carry. Surface that as what it is — the
-      // copy fallback below would otherwise rethrow the same
+      // the carry runs concurrently with everything: a concurrent vacuum
+      // can delete the head dir mid-carry. Surface that as what it is —
+      // the copy fallback below would otherwise rethrow the same
       // NoSuchFileException as an opaque crash (vacuum keeps versions
       // referenced by heads, so this only fires on a retention race)
       try Files.createLink(dst, src)
       catch {
         case e: java.nio.file.NoSuchFileException =>
+          Fs.deleteTree(stagedData)
           throw new IllegalStateException(
             s"head version $head of $root was vacuumed while its files " +
               s"were being carried into version $next ($rel); retry the " +
@@ -1032,11 +1049,11 @@ final class VersionedTable(spark: SparkSession, root: String) {
           Files.copy(src, dst)
       }
     }
-    val line = Commit(next, operation, rewrittenRows + carriedRows,
-      ts = commitTs, partitionBy = parts).line
-    val won = publishVersion(next, line, Some(stage),
-      stageFeed.map(f => () => f(next, s"$stage/data", newFilesAbs)))
-    if (won) maintainBloomIndexesIncremental(head, next, carriedRel.toSet)
+    stageFeed.foreach(f => f(next, stage, newFilesAbs))
+    val won = publishVersion(Commit(next, operation, rewrittenRows + carriedRows,
+      name, ts = commitTs, feed = stageFeed.isDefined, partitionBy = parts),
+      Some(stage))
+    if (won) maintainBloomIndexesIncremental(head, next, stage, carriedRel.toSet)
     Option.when(won)(next)
   }
 
@@ -1070,17 +1087,13 @@ final class VersionedTable(spark: SparkSession, root: String) {
   def appendWithChangeFeed(df: DataFrame, operation: String = "append",
       commitTs: String = "2001-09-01 00:00:00"): Long =
     appendImpl(df, operation, Some(commitTs), stageFeed = Some {
-      (next, stagedData, newFiles) =>
+      (next, stagedDir, newFiles) =>
         val staged = spark.read
-          .option("basePath", stagedData)
+          .option("basePath", stagedDir)
           .parquet(newFiles: _*)
           .select(df.schema.fields.toIndexedSeq
             .map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
-        graft.ops.ChangeFeed.allInserts(staged)
-          .withColumn(graft.ops.ChangeFeed.CommitVersionCol, lit(next))
-          .withColumn(graft.ops.ChangeFeed.CommitTimestampCol,
-            to_timestamp(lit(commitTs)))
-          .write.mode("overwrite").parquet(s"$root/_changes/v=$next")
+        writeFeed(graft.ops.ChangeFeed.allInserts(staged), next, commitTs, stagedDir)
     })
 
   private def appendImpl(df: DataFrame, operation: String,
@@ -1088,49 +1101,36 @@ final class VersionedTable(spark: SparkSession, root: String) {
       stageFeed: Option[(Long, String, Seq[String]) => Unit]): Long = {
     validateConstraints(df)
     retrying("append to") {
-      latestVersion match {
+      val lg = log
+      lg.commits.lastOption match {
         case None =>
-          // Bootstrap under the commit lock: two concurrent appends that
-          // both observe an empty table must not both take the full-write
-          // path — the loser's write() retry would commit a full SNAPSHOT
-          // at v1 and silently drop the winner's appended rows from the
-          // head. Holding the lock across the first write serializes only
-          // the empty-table bootstrap (commit() re-enters the same lock —
-          // it is reentrant for this thread); a competitor that slept here
-          // re-checks and falls through to the carry path. Liveness cost,
-          // accepted: the lock is held for the bootstrap's FULL write job
-          // (staging + stats + constraints), so concurrent committers on
-          // this table block for that job's duration — but only on the
-          // v0 commit of a brand-new table, where the "full write" is the
-          // first batch, not a grown table. Every subsequent commit holds
-          // the lock only for the check-move-append critical section.
-          VersionedTable.commitLock(root).synchronized {
-            Option.when(latestVersion.isEmpty) {
-              if (stageFeed.isEmpty) write(df, operation, commitTs)
-              else writeWithChangeFeed(df, Seq.empty, operation,
-                commitTs.getOrElse("2001-09-01 00:00:00"))
-            }
-          }
-        case Some(head) =>
-          enforceSchema(df, mergeSchema = false, overwriteSchema = false)
-          val hc = commits.find(_.version == head).get
+          // empty table: this attempt is a full write of v0 (all-insert
+          // feed when one is staged). Two appends that both see an empty
+          // table cannot both land there — the loser's put-if-absent
+          // fails, it returns None, and its retry takes the carry path
+          // onto the winner's head, so no appended rows are dropped.
+          commitOnce(lg, df, operation,
+            stageFeed.map(_ => diffFeed(df, Seq.empty,
+              commitTs.getOrElse("2001-09-01 00:00:00"))),
+            commitTs, Seq.empty, mergeSchema = false, overwriteSchema = false)
+        case Some(hc) =>
+          enforceSchema(lg, df, mergeSchema = false, overwriteSchema = false)
           require(hc.deletePredicates.isEmpty,
             s"append on a logical-delete head of $root: compact() first " +
               "to materialize the delete predicates")
           val parts = hc.partitionBy
-          val stage = s"$root/_staging/${java.util.UUID.randomUUID()}"
+          val (name, stage) = newVersionDir(hc.version + 1)
           val w = df.write.mode("overwrite")
-          (if (parts.nonEmpty) w.partitionBy(parts: _*) else w)
-            .parquet(s"$stage/data")
+          (if (parts.nonEmpty) w.partitionBy(parts: _*) else w).parquet(stage)
           // an empty batch on a partitioned head stages ZERO files (the
           // dynamic-partition writer creates files per row): appending
           // nothing is a no-op, not a new version — and the schema-less
           // staged read below could not even infer a stats schema
-          if (Fs.dataFiles(Paths.get(s"$stage/data")).isEmpty) {
+          if (Fs.dataFiles(Paths.get(stage)).isEmpty) {
             Fs.deleteTree(Paths.get(stage))
-            Some(head)
-          } else commitWithCarry(head, stage, dataFilesRel(head), operation,
-            parts, commitTs, stageFeed)
+            Some(hc.version)
+          } else commitWithCarry(lg, name, stage,
+            Fs.dataFiles(Paths.get(dirOf(hc))), operation, parts, commitTs, stageFeed)
       }
     }
   }
@@ -1154,45 +1154,38 @@ final class VersionedTable(spark: SparkSession, root: String) {
     require(cols.nonEmpty, "clusterIncremental needs clustering columns")
     val marker = s"cluster_inc:${cols.mkString(",")}"
     val fullMarker = s"cluster:${cols.mkString(",")}"
-    // legacy underscore spellings (pre-colon-encoding commits) still count
-    // as baselines — without this, the first incremental run on an
-    // upgraded table would silently degenerate to a full re-cluster. New
-    // commits always write the unambiguous colon form, so the underscore
-    // aliasing risk (a_b vs a,b) is confined to legacy manifests.
-    val legacy = Set(s"cluster_inc_${cols.mkString("_")}",
-      s"cluster_${cols.mkString("_")}")
     retrying("clusterIncremental of") {
-      val head = latestVersion.getOrElse(sys.error(s"empty table at $root"))
-      val hc = commits.find(_.version == head).get
+      val lg = log
+      val head = lg.latest.getOrElse(sys.error(s"empty table at $root"))
+      val hc = lg(head)
       val parts = hc.partitionBy
       require(hc.deletePredicates.isEmpty,
         s"clusterIncremental on a logical-delete head of $root: compact() " +
           "first to materialize the delete predicates")
       require(!cols.exists(parts.contains),
         s"cannot cluster by partition column(s) ${cols.filter(parts.contains).mkString(", ")}")
-      val headFiles = dataFilesRel(head).toSet
-      val clusteredRel = commits
+      def files(c: Commit) = Fs.dataFiles(Paths.get(dirOf(c)))
+      val headFiles = files(hc).toSet
+      val clusteredRel = lg.commits
         .filter(c => c.version <= head &&
-          (c.operation == marker || c.operation == fullMarker ||
-            legacy.contains(c.operation)))
-        .map(_.version).maxOption
-        .map(v => dataFilesRel(v).toSet & headFiles)
+          (c.operation == marker || c.operation == fullMarker))
+        .lastOption
+        .map(c => files(c).toSet & headFiles)
         .getOrElse(Set.empty[String])
       val unclustered = (headFiles -- clusteredRel).toVector.sorted
       if (unclustered.isEmpty) Some(head)
       else {
-        val dir = Paths.get(dataDir(head)).toAbsolutePath.toString
+        val dir = Paths.get(dirOf(hc)).toAbsolutePath.toString
         val keys = (parts ++ cols).map(col)
         // read ONLY the unclustered files (basePath keeps partition columns)
         val fresh = spark.read.option("basePath", dir)
           .parquet(unclustered.map(r => s"$dir/$r"): _*)
           .repartitionByRange(numFiles, keys: _*)
           .sortWithinPartitions(keys: _*)
-        val stage = s"$root/_staging/${java.util.UUID.randomUUID()}"
+        val (name, stage) = newVersionDir(head + 1)
         val w = fresh.write.mode("overwrite")
-        (if (parts.nonEmpty) w.partitionBy(parts: _*) else w)
-          .parquet(s"$stage/data")
-        commitWithCarry(head, stage, clusteredRel.toVector.sorted, marker,
+        (if (parts.nonEmpty) w.partitionBy(parts: _*) else w).parquet(stage)
+        commitWithCarry(lg, name, stage, clusteredRel.toVector.sorted, marker,
           parts)
       }
     }
@@ -1212,81 +1205,73 @@ final class VersionedTable(spark: SparkSession, root: String) {
       s"zorder_${cols.mkString("_")}", partitionBy = parts)
   }
 
-  /** VACUUM (M4): physically delete data older than the last `keepLast`
-    * commits (manifest keeps the audit trail). Reference-counted: a dir
-    * is deleted only if (a) it lives under THIS table's root — a shallow
-    * clone's externally located versions are never touched — and (b) no
-    * kept version still references it (a deleteWhere head referencing an
-    * old version's files keeps those files alive). */
+  /** VACUUM (M4): physically delete the version directories older than
+    * the last `keepLast` commits (the log keeps the audit trail). A
+    * directory holds its version's data, stats and change feed, so all
+    * three go together. Reference-counted: a dir is deleted only if (a)
+    * it lives under THIS table's root — a shallow clone's externally
+    * located versions are never touched — and (b) no kept version still
+    * references it (a deleteWhere head referencing an old version's
+    * files keeps those files alive). */
   def vacuum(keepLast: Int = 1): Seq[Long] = {
     // the Delta retention-check analogue: keepLast=0 would delete the
-    // HEAD's data while the manifest still lists it — an irrecoverably
+    // HEAD's data while the log still lists it — an irrecoverably
     // emptied table with no error at call time
     require(keepLast >= 1, s"vacuum(keepLast=$keepLast): must keep >= 1 version")
-    val all = commits
-    // resolve dirs from the ONE parsed manifest — dataDir/statsDir would
-    // re-read and re-parse the file per call, O(versions²) on big tables
-    def dataDir(v: Long): String =
-      all.find(_.version == v).flatMap(_.location).getOrElse(s"$root/v=$v")
-    def statsDir(v: Long): String =
-      all.find(_.version == v).flatMap(_.statsLocation)
-        .getOrElse(s"$root/_stats/v=$v")
-    val keep = all.map(_.version).takeRight(keepLast).toSet
-    val rootAbs = Paths.get(root).toAbsolutePath.toString
-    def abs(p: String) = Paths.get(p).toAbsolutePath.toString
-    val keptDataDirs = keep.map(v => abs(dataDir(v)))
-    val keptStatsDirs = keep.map(v => abs(statsDir(v)))
-    def deletable(dir: String, kept: Set[String]) =
-      abs(dir).startsWith(rootAbs + java.io.File.separator) && !kept(abs(dir))
-    val removed = all.map(_.version).filterNot(keep).filter { v =>
-      deletable(dataDir(v), keptDataDirs)
-    }
-    removed.foreach { v =>
-      Fs.deleteTree(Paths.get(dataDir(v)))
-      if (deletable(statsDir(v), keptStatsDirs))
-        Fs.deleteTree(Paths.get(statsDir(v)))
-      // bloom indexes are per-version derivatives of the removed data
-      bloomConfigs.foreach { case (c, _, _, _) =>
-        Fs.deleteTree(bloomDir(c, v))
-      }
-    }
+    val lg = log
+    val rootAbs = Paths.get(root).toAbsolutePath.normalize
+    def abs(c: Commit) = Paths.get(dirOf(c)).toAbsolutePath.normalize
+    val kept = lg.commits.takeRight(keepLast)
+    val keptDirs = kept.map(abs).toSet
+    val removed = lg.commits.dropRight(keepLast)
+      .filter(c => abs(c).startsWith(rootAbs) && !keptDirs(abs(c)))
     // retention applies to the CHANGE FEED too (the Delta posture: CDC
     // reads beyond the retention window THROW rather than silently
-    // skip): drop removed versions' feed dirs and tombstone the
-    // high-water mark, so a lagging consumer — changeFeed, the shared
-    // CDF batch read, or the graftSharingCdc stream — fails loudly
-    // naming the gap instead of resuming across an invisible hole.
-    val droppedFeeds = removed
-      .filter(v => Files.isDirectory(Paths.get(s"$root/_changes/v=$v")))
+    // skip): tombstone the high-water mark of the removed feeds, so a
+    // lagging consumer — changeFeed, the shared CDF batch read, or the
+    // graftSharingCdc stream — fails loudly naming the gap instead of
+    // resuming across an invisible hole.
+    val droppedFeeds = VersionedTable.feeds(root, removed).map(_._1)
     if (droppedFeeds.nonEmpty) {
-      // tombstone FIRST, atomically (Fs.writeAtomic): a crash between the two steps must leave the
-      // CONSERVATIVE state — mark advanced while dirs still exist, so
-      // consumers refuse and a vacuum re-run finishes the deletes —
-      // never deleted dirs with no mark, which would reopen the exact
-      // silent hole the consumer guards close. And a torn non-atomic
-      // write would NumberFormatException every consumer and every
-      // future vacuum (feedVacuumedThrough parses the file).
+      // tombstone FIRST, atomically (Fs.writeAtomic): a crash before the
+      // deletes must leave the CONSERVATIVE state — mark advanced while
+      // dirs still exist, so consumers refuse and a vacuum re-run
+      // finishes the deletes — never deleted dirs with no mark, which
+      // would reopen the exact silent hole the consumer guards close.
+      // And a torn non-atomic write would NumberFormatException every
+      // consumer and every future vacuum (feedVacuumedThrough parses it).
       val prev = VersionedTable.feedVacuumedThrough(root)
-      Fs.writeAtomic(Paths.get(s"$root/_changes/_vacuumed_through"),
+      Fs.writeAtomic(VersionedTable.feedTombstone(root),
         math.max(prev, droppedFeeds.max).toString)
-      droppedFeeds.foreach(v => Fs.deleteTree(Paths.get(s"$root/_changes/v=$v")))
     }
-    // crashed writers' leftover staging — but never an IN-FLIGHT writer's:
-    // staging happens outside the commit lock by design, so only reclaim
-    // dirs whose ENTIRE subtree is untouched for over an hour (a
-    // long-running write lands parquet files under <uuid>/data/ without
-    // refreshing the <uuid> dir itself)
-    Fs.sweepStale(Paths.get(s"$root/_staging"), java.time.Duration.ofHours(1),
-      keep = _ => false)
-    removed
+    removed.foreach { c =>
+      Fs.deleteTree(abs(c))
+      // bloom indexes are per-version derivatives of the removed data
+      bloomConfigs.foreach { case (col, _, _, _) =>
+        Fs.deleteTree(bloomDir(col, c.version))
+      }
+    }
+    // crashed or losing writers' leftovers — a version dir no entry
+    // names, a temp entry — but never an IN-FLIGHT writer's: only
+    // reclaim what is untouched in its ENTIRE subtree for over an hour
+    // (a long-running write lands parquet files deep in its dir without
+    // refreshing the dir itself). `_` names are table metadata.
+    val named = lg.commits.map(abs).toSet
+    val stale = java.time.Duration.ofHours(1)
+    Fs.sweepStale(rootAbs, stale, keep = p =>
+      p.getFileName.toString.startsWith("_") || named(p.toAbsolutePath.normalize))
+    Fs.sweepStale(VersionedTable.logDir(root), stale,
+      keep = p => !p.getFileName.toString.startsWith("."))
+    removed.map(_.version)
   }
 
   /** DESCRIBE DETAIL (M12): file/byte statistics of the head version
     * (recursive — a partitioned version nests files under `col=value/`). */
   def detail(): DataFrame = {
     import spark.implicits._
-    val v = latestVersion.getOrElse(sys.error("empty table"))
-    val dir = Paths.get(dataDir(v))
+    val lg = log
+    val v = lg.latest.getOrElse(sys.error("empty table"))
+    val dir = Paths.get(lg.dir(v))
     val files = Fs.dataFiles(dir).filter(_.endsWith(".parquet"))
     Seq((root, v, files.size.toLong, files.map(f => Files.size(dir.resolve(f))).sum))
       .toDF("location", "version", "num_files", "size_bytes")
@@ -1299,46 +1284,82 @@ object VersionedTable {
     * sharing layer reads provider roots by path, without constructing a
     * table — the one definition every lagging-consumer check shares. */
   private[graft] def feedVacuumedThrough(root: String): Long = {
-    val tomb = Paths.get(root, "_changes", "_vacuumed_through")
+    val tomb = feedTombstone(root)
     if (Files.isRegularFile(tomb)) Files.readString(tomb).trim.toLong else -1L
   }
 
-  // ---- the manifest format: read and written here and nowhere else ----
+  private def feedTombstone(root: String): Path =
+    Paths.get(root, "_feed_vacuumed_through")
 
-  /** One committed version — a manifest line. */
+  /** The change-feed directory inside a version directory. */
+  private def feedDir(versionDir: String): String = s"$versionDir/_changes"
+
+  /** (version, feed dir) of every entry in `cs` that staged a change feed
+    * whose directory still exists, in version order. */
+  private def feeds(root: String, cs: Seq[Commit]): Seq[(Long, String)] =
+    cs.filter(_.feed).map(c => c.version -> feedDir(dirOf(root, c)))
+      .filter(f => Files.isDirectory(Paths.get(f._2)))
+
+  /** Committed change-feed versions of the table at `root` with their
+    * feed dirs (None: no log, not a versioned table) — for readers that
+    * address a provider root by path without constructing a table (the
+    * sharing layer). A directory no entry names is never listed. */
+  private[graft] def committedFeeds(root: String): Option[Seq[(Long, String)]] =
+    readLog(root).map(feeds(root, _))
+
+  /** The table's change feed as an unbounded file-stream source (the
+    * Delta-CDF `readStream` shape), with the schema merged across all
+    * committed feed versions (a mergeSchema commit adds columns to later
+    * feeds; footer-only work). Caveat: the stream's glob trails the raw
+    * version directories, so a feed staged by a writer that has not (or
+    * never) created its entry can enter a micro-batch — consumers that
+    * may race a writer use the log-driven sharing paths instead. */
+  private[graft] def feedStream(spark: SparkSession, root: String,
+      options: Map[String, String] = Map.empty): DataFrame = {
+    val committed = committedFeeds(root).getOrElse(Nil).map(_._2)
+    require(committed.nonEmpty, s"no committed change feed at $root")
+    val schema = spark.read.option("mergeSchema", "true")
+      .parquet(committed: _*).schema
+    spark.readStream.schema(schema).options(options).parquet(feedDir(s"$root/*"))
+  }
+
+  // ---- the log format: read and written here and nowhere else ----
+
+  /** One committed version — one `_log/<N>.json` entry. `location` is
+    * the directory holding the version's files: root-relative, or
+    * absolute for a shallow clone's shared v0. `feed`: the version
+    * staged its own change feed in that directory. */
   private[maint] final case class Commit(
-      version: Long, operation: String, rows: Long,
+      version: Long, operation: String, rows: Long, location: String,
       ts: Option[String] = None,
-      location: Option[String] = None, statsLocation: Option[String] = None,
+      feed: Boolean = false,
       deletePredicates: Seq[String] = Nil,
       partitionBy: Seq[String] = Nil) {
 
-    /** The ONE manifest-line serializer. Every commit path writes lines;
-      * the regex parser is field-order-independent, but hand-rolled copies
+    /** The ONE entry serializer. Every commit path writes entries; the
+      * regex parser is field-order-independent, but hand-rolled copies
       * had already drifted comma conventions between sites — a new field
       * gets added here or nowhere. */
-    def line: String = {
+    def json: String = {
       // the ONE serializer is also the ONE validator: the regex parser
       // does no unescaping, so a '"' in any string field would break
-      // the line, and strList's [^\]]* would silently truncate a list
+      // the entry, and strList's [^\]]* would silently truncate a list
       // element containing ']' (e.g. tags[1]) — logically deleted rows
-      // would resurrect on read. Reject both at write time, loudly.
-      val strFields = Seq(operation) ++ ts ++ location ++ statsLocation ++
-        deletePredicates ++ partitionBy
+      // would resurrect on read. A raw line break is not valid inside a
+      // JSON string either. Reject all three at write time, loudly.
+      val strFields = Seq(operation, location) ++ ts ++ deletePredicates ++ partitionBy
       require(strFields.forall(s => !s.contains("\"")),
-        s"manifest string fields must not contain '\"' (unescaped format): $strFields")
-      // a newline/CR would SPLIT the appended line: the fragment fails the
-      // version regex on every later read and bricks the table permanently
+        s"log string fields must not contain '\"' (unescaped format): $strFields")
       require(strFields.forall(s => !s.exists(c => c == '\n' || c == '\r')),
-        s"manifest string fields must not contain line breaks: $strFields")
+        s"log string fields must not contain line breaks: $strFields")
       require((deletePredicates ++ partitionBy).forall(s => !s.contains("]")),
-        "manifest list elements must not contain ']' (regex list parser " +
+        "log list elements must not contain ']' (regex list parser " +
           s"would truncate): ${deletePredicates ++ partitionBy}")
       val sb = new StringBuilder(
         s"""{"version":$version,"operation":"$operation","rows":$rows""")
+      sb.append(s""","location":"$location"""")
       ts.foreach(t => sb.append(s""","ts":"$t""""))
-      location.foreach(l => sb.append(s""","location":"$l""""))
-      statsLocation.foreach(l => sb.append(s""","statsLocation":"$l""""))
+      if (feed) sb.append(""","feed":true""")
       if (deletePredicates.nonEmpty)
         sb.append(deletePredicates.map(p => s""""$p"""")
           .mkString(""","deletePredicates":[""", ",", "]"))
@@ -1349,104 +1370,66 @@ object VersionedTable {
     }
   }
 
-  private def parse(line: String): Commit = {
-    // {"version":N,"operation":"...","rows":N[,"location":"...",
-    //  "statsLocation":"...","ts":"...","deletePredicates":["...",...],
-    //  "partitionBy":["...",...]]}
-    val v = """"version":(\d+)""".r.findFirstMatchIn(line).get.group(1).toLong
-    val op = """"operation":"([^"]*)"""".r.findFirstMatchIn(line).get.group(1)
-    val rows = """"rows":(\d+)""".r.findFirstMatchIn(line).get.group(1).toLong
+  private def parse(entry: String): Commit = {
+    // {"version":N,"operation":"...","rows":N,"location":"..."[,"ts":"...",
+    //  "feed":true,"deletePredicates":["...",...],"partitionBy":["...",...]]}
     def str(field: String): Option[String] =
-      s""""$field":"([^"]*)"""".r.findFirstMatchIn(line).map(_.group(1))
+      s""""$field":"([^"]*)"""".r.findFirstMatchIn(entry).map(_.group(1))
+    def num(field: String): Long =
+      s""""$field":(\\d+)""".r.findFirstMatchIn(entry).get.group(1).toLong
     def strList(field: String): Seq[String] =
-      (s""""$field":\\[([^\\]]*)\\]""").r.findFirstMatchIn(line)
+      (s""""$field":\\[([^\\]]*)\\]""").r.findFirstMatchIn(entry)
         .map(_.group(1)).filter(_.nonEmpty)
         .map(_.split("\",\"").map(_.stripPrefix("\"").stripSuffix("\"")).toSeq)
         .getOrElse(Seq.empty)
-    Commit(v, op, rows, str("ts"), str("location"), str("statsLocation"),
+    Commit(num("version"), str("operation").get, num("rows"), str("location").get,
+      str("ts"), entry.contains(""""feed":true"""),
       strList("deletePredicates"), strList("partitionBy"))
   }
 
-  private def manifestPath(root: String): Path = Paths.get(root, "_manifest")
+  private def logDir(root: String): Path = Paths.get(root, "_log")
 
-  /** The ONE manifest reader: the table's commits in order, or None when
-    * `root` has no manifest (not a versioned table). A trailing fragment
-    * without its '\n' is a writer that died mid-append — its commit call
-    * never returned, so it is not a commit. It is skipped (with a
-    * warning) rather than failing every later read of the table; the
-    * next commit truncates it. */
-  private def manifest(root: String): Option[Seq[Commit]] = {
-    val p = manifestPath(root)
-    if (!Files.isRegularFile(p)) return None
-    val text = Files.readString(p)
-    val end = text.lastIndexOf('\n')
-    if (end < text.length - 1)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"ignoring torn manifest tail at $p (a writer died mid-append): " +
-          text.substring(end + 1))
-    Some(if (end < 0) Seq.empty else text.substring(0, end).split('\n').toSeq.map(parse))
+  private def entryPath(root: String, v: Long): Path = logDir(root).resolve(s"$v.json")
+
+  private val EntryName = """(\d+)\.json""".r
+
+  /** The ONE log reader: the table's entries in version order, or None
+    * when `root` has no log (not a versioned table). Only complete
+    * entries exist under an entry name (put-if-absent links a fully
+    * written temp), so there is no torn state to handle; a crashed
+    * writer's `.`-prefixed temp never matches the name. */
+  private def readLog(root: String): Option[Vector[Commit]] =
+    entryNames(root).map(_.map(v =>
+      parse(Files.readString(entryPath(root, v)))))
+
+  /** Committed versions, ascending, from the entry NAMES alone (None: no
+    * log). */
+  private def entryNames(root: String): Option[Vector[Long]] = {
+    val dir = logDir(root)
+    if (!Files.isDirectory(dir)) return None
+    val s = Files.list(dir)
+    try Some(s.iterator().asScala.map(_.getFileName.toString)
+      .collect { case EntryName(v) => v.toLong }.toVector.sorted)
+    finally s.close()
   }
 
-  /** Append one serialized commit line — call only inside the table's
-    * commit critical section. A torn tail left by a crashed append is
-    * truncated first, so the new line never fuses with the fragment. */
-  private def appendManifest(root: String, line: String): Unit = {
-    val p = manifestPath(root)
-    val ch = java.nio.channels.FileChannel.open(p,
-      StandardOpenOption.CREATE, StandardOpenOption.READ, StandardOpenOption.WRITE)
-    try {
-      val size = ch.size
-      val last = java.nio.ByteBuffer.allocate(1)
-      if (size > 0 && ch.read(last, size - 1) == 1 && last.get(0) != '\n') {
-        val bytes = Files.readAllBytes(p)
-        ch.truncate(bytes.lastIndexOf('\n'.toByte) + 1L)
-      }
-      ch.position(ch.size)
-      val buf = java.nio.ByteBuffer.wrap(line.getBytes(StandardCharsets.UTF_8))
-      while (buf.hasRemaining) ch.write(buf)
-    } finally ch.close()
-  }
+  /** The directory of `c`'s files: its location, resolved against `root`
+    * unless absolute (a shallow clone's). */
+  private def dirOf(root: String, c: Commit): String =
+    if (Paths.get(c.location).isAbsolute) c.location else s"$root/${c.location}"
 
-  /** Committed versions of the table at `root` (None: no manifest) — for
-    * readers that address a provider root by path without constructing a
-    * table (the sharing layer's committed-feed listing). */
-  private[graft] def committedVersions(root: String): Option[Seq[Long]] =
-    manifest(root).map(_.map(_.version))
-
-  /** Re-anchor the data/stats `location`s of the table at `root` that
-    * point under `from` onto `to`: commits record ABSOLUTE version dirs
-    * (the shallow-clone contract), so a table built under a scratch dir
-    * and then renamed into place must be rebased before it is published
-    * (IvfIndex.deriveTwin). Locations elsewhere are left as-is; no-op
-    * without a manifest. */
-  private[graft] def rebaseLocations(root: String, from: String, to: String): Unit =
-    manifest(root).foreach { cs =>
-      def rebase(l: Option[String]) = l.map(x =>
-        if (x == from || x.startsWith(s"$from/")) to + x.stripPrefix(from) else x)
-      Fs.writeAtomic(manifestPath(root), cs.map(c => c.copy(
-        location = rebase(c.location),
-        statsLocation = rebase(c.statsLocation)).line).mkString)
-    }
-
-  /** Per-root commit locks — the stand-in for the storage layer's
-    * conditional put. In-process writers serialize the tiny
-    * check-rename-append critical section here (staging and data writes
-    * stay fully concurrent); cross-process safety would ride the object
-    * store's atomic put-if-absent at cluster scale. */
-  private val locks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private def commitLock(root: String): Object =
-    locks.computeIfAbsent(root, _ => new Object)
-
-  /** One key space for file names: `input_file_name()` returns a
+  /** One key space for file names, relative to the version directory
+    * named `anchorDir`: `input_file_name()` returns a
     * percent-encoded URI while every [[graft.core.Fs.dataFiles]] listing
     * is a raw filesystem name — a partition value with a space would
     * otherwise produce stats/bloom keys (`p=a%20b/…`) that no carry
     * join or re-anchored read can match. Strip the anchor, then decode
     * %XX exactly; a literal '+' is pre-escaped so URLDecoder's
     * form-encoding quirk cannot turn it into a space. */
-  private[maint] def decodedRelFile(anchorPattern: String): org.apache.spark.sql.Column =
+  private[maint] def decodedRelFile(anchorDir: String): org.apache.spark.sql.Column =
     url_decode(regexp_replace(
-      regexp_replace(input_file_name(), anchorPattern, ""), "\\+", "%2B"))
+      regexp_replace(input_file_name(),
+        s"^.*/${java.util.regex.Pattern.quote(anchorDir)}/", ""), "\\+", "%2B"))
 
   /** Driver-side twin of [[decodedRelFile]]'s decoding for collected
     * `input_file_name()` URIs. */

@@ -91,8 +91,10 @@ object IvfIndex {
     *      table and the separate `coarse` table is DROPPED — any group
     *      restructuring ([[maintainGroups]]' splits and merges) is one
     *      atomic commit instead of a torn two-table window, and the
-    *      coarse level derives from distinct gids ([[coarseLevel]]). */
-  private val FormatVersion = 8
+    *      coarse level derives from distinct gids ([[coarseLevel]]).
+    * v9: every index table commits through `_log/<N>.json` entries, one
+    *      directory per version (the `_manifest` layout is gone). */
+  private val FormatVersion = 9
 
   // ---------------------------------------------------------------- shared
   // index DEFINITIONS (also used by the live e4/t30 path via
@@ -761,14 +763,9 @@ object IvfIndex {
     * root is always debris — the invariant moveIntoPlace's
     * clear-and-retry relies on), 6h prune via the shared idx- prefix.
     * Callers must key every input of `body` into `key` (predicate hash,
-    * feed id) — a cache hit SKIPS body entirely.
-    *
-    * One wrinkle: commits record the version's data/stats dirs as
-    * ABSOLUTE paths (the shallow-clone contract), so fresh commit lines
-    * point into the scratch dir — every artifact manifest is rebased
-    * onto the final root before publishing. (Inherited commit lines
-    * reference the BASE index's dirs — immutable and shared, they stay
-    * as-is.) */
+    * feed id) — a cache hit SKIPS body entirely. Log entries record
+    * their version dirs root-relative, so the copied tables stay valid
+    * after the rename into place. */
   def deriveTwin(spark: SparkSession, corpusDir: String, key: String)(
       body: String => Unit): String = synchronized {
     val base = ensure(spark, corpusDir)
@@ -783,10 +780,6 @@ object IvfIndex {
       Fs.copyTree(Paths.get(base), Paths.get(tmp))
       Files.deleteIfExists(Paths.get(tmp, "_COMPLETE"))
       body(tmp)
-      val tmpAbs = Paths.get(tmp).toAbsolutePath.toString
-      val rootAbs = Paths.get(root).toAbsolutePath.toString
-      IndexTables.foreach(t =>
-        VersionedTable.rebaseLocations(s"$tmp/$t", tmpAbs, rootAbs))
       Files.createFile(Paths.get(tmp, "_COMPLETE"))
       moveIntoPlace(tmp, root)
     }
@@ -1285,7 +1278,7 @@ object IvfIndex {
     * G-member group needs up to O(G) rounds when nearest-of-two
     * assignment comes out lopsided, each round a full table commit —
     * K-way lands within band in one or two rounds and bounds the
-    * manifest churn). Members whose cid is itself a live gid are
+    * log churn). Members whose cid is itself a live gid are
     * seed-INELIGIBLE — a seed's cid becomes the new gid, and a gid
     * collision would weld two groups together. ONLY the split group's
     * members re-assign, to their nearest seed (by cosine, ties to the
@@ -1456,7 +1449,7 @@ object IvfIndex {
     * compliance-retention window, compliance_policies.py:93-114, pointed
     * at the index instead of a gold table). Every maintain sweep commits
     * fresh versions of cells/centroids/groups/cellstats; at production
-    * cadence (a sweep per ingest batch) the per-table manifests and
+    * cadence (a sweep per ingest batch) the per-table logs and
     * version dirs grow per sweep and the artifact's footprint becomes
     * O(history), not O(data). One policy call bounds it: keep the last
     * `keepLast` versions of EVERY index table — time travel to any KEPT

@@ -99,7 +99,7 @@ object Governance extends QueryGroup {
       },
       oracle = Some(sqlCdf1Oracle)),
 
-    // S4: STREAMING change-feed scan — the committed `_changes` log is
+    // S4: STREAMING change-feed scan — the committed change feed is
     // itself a file-stream source (the Delta-CDF `readStream` shape), so
     // downstream CDC consumers run as Structured Streaming with
     // checkpointed offsets; here drained with AvailableNow and checked
@@ -110,9 +110,7 @@ object Governance extends QueryGroup {
         // src9) — inline copies of the %10/%13/%7 rules would drift from
         // the shared oracles silently
         val root = buildCdfCustomerTable(s, d)
-        val schema = s.read.parquet(s"$root/_changes/v=0").schema
-        val stream = s.readStream.schema(schema)
-          .parquet(s"$root/_changes/*")
+        val stream = graft.maint.VersionedTable.feedStream(s, root)
         graft.streaming.Streams.runToMemory(stream, "append")
           .select(col("c_custkey"), col("c_name"), col("c_acctbal"),
             col("_change_type"), col("_commit_version"),

@@ -228,7 +228,7 @@ object Sources extends QueryGroup {
     // S7 change-feed half (delta_sharing_recipient.py:152-158 —
     // `.option("readChangeFeed","true").option("startingVersion",N)`):
     // the provider publishes a VersionedTable ROOT; the recipient reads
-    // its committed `_changes` feed through the sharing source, which
+    // its committed change feed through the sharing source, which
     // resolves versions >= startingVersion to their feed dirs and scans
     // them with the native parquet table — incremental sync without
     // re-reading the shared snapshot (rows carry _change_type /

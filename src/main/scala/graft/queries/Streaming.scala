@@ -439,10 +439,8 @@ object Streaming extends QueryGroup {
               .otherwise(col("o_totalprice")))
         t.writeWithChangeFeed(v0, Seq("o_orderkey"), "seed", "2001-09-01 00:00:00")
         t.writeWithChangeFeed(v1, Seq("o_orderkey"), "merge", "2001-09-02 00:00:00")
-        val schema = s.read.parquet(s"$scratch/orders/_changes/v=0").schema
-        val feed = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(s"$scratch/orders/_changes/*")
+        val feed = graft.maint.VersionedTable.feedStream(s, s"$scratch/orders",
+          Map("maxFilesPerTrigger" -> "1"))
         Streams.runMvSink(feed, s"$scratch/mv", Seq("o_custkey"), "o_totalprice",
             graft.core.Scratch.dir("graft_stmv_ck_").toString)
           .select(col("o_custkey"), col("cnt").as("order_cnt"),

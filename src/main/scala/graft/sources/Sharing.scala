@@ -68,8 +68,9 @@ class SharingSource extends TableProvider with DataSourceRegister {
     // CDF read (reference delta_sharing_recipient.py:152-158 —
     // option("readChangeFeed","true").option("startingVersion",N)): the
     // shared location must be a VersionedTable root, whose committed
-    // feed is parquet under `_changes/v=N` — the CDF resolve is just a
-    // different path listing, the scan stays the native parquet table
+    // feed is parquet in each version's directory — the CDF resolve is
+    // just a different path listing, the scan stays the native parquet
+    // table
     if (cdf) {
       // the one shared lagging-consumer × retention check: a
       // startingVersion inside the provider's vacuumed range must fail
@@ -193,11 +194,11 @@ object SharingProtocol {
     p.toString
   }
 
-  /** Manifest-committed feed dirs for a shared versioned-table root —
-    * mirrors `VersionedTable.changeFeed`'s filtering. The raw `_changes`
-    * listing is NOT the source of truth: the commit protocol stages
-    * `_changes/v=N` before the manifest line lands, so a mid-commit or
-    * crashed writer can leave a staged feed dir for a version that was
+  /** Log-committed feed dirs for a shared versioned-table root —
+    * mirrors `VersionedTable.changeFeed`'s filtering. The raw directory
+    * listing is NOT the source of truth: the commit protocol stages a
+    * version's feed before its log entry lands, so a mid-commit, losing
+    * or crashed writer can leave a staged feed for a version that was
     * never committed. A shared read must exclude those exactly as the
     * direct read does, or src9's hash-equals-changeFeed guarantee breaks
     * the moment a writer races the recipient. */
@@ -226,18 +227,12 @@ object SharingProtocol {
 
   /** Same listing WITH the version numbers — consumers that need both
     * (the CDC offset log, the watermark loop) take the pairs directly
-    * instead of regex-re-parsing `v=N` out of paths the listing itself
-    * just built from those Longs (a re-parse that would silently DROP a
-    * version if the dir layout ever changed). */
+    * instead of re-parsing versions out of paths. */
   private[sources] def committedFeedVersions(fqn: String, root: String,
-      starting: Long): Seq[(Long, String)] = {
-    graft.maint.VersionedTable.committedVersions(root).getOrElse(sys.error(
-      s"shared table '$fqn' at $root has no commit manifest — not a versioned table"))
-      .filter(v => v >= starting &&
-        Files.isDirectory(Paths.get(root, "_changes", s"v=$v")))
-      .sorted
-      .map(v => v -> Paths.get(root, "_changes", s"v=$v").toString)
-  }
+      starting: Long): Seq[(Long, String)] =
+    graft.maint.VersionedTable.committedFeeds(root).getOrElse(sys.error(
+      s"shared table '$fqn' at $root has no commit log — not a versioned table"))
+      .filter(_._1 >= starting)
 
   /** Recipient: `<profilePath>#<share>.<schema>.<table>` → (fqn, data
     * paths), enforcing the bearer token. Every failure names what's
@@ -270,7 +265,7 @@ object SharingProtocol {
   /** Streaming read of a shared table's change feed (reference
     * delta_sharing_recipient.py:186-192 — `readStream` +
     * `readChangeFeed`): resolve the share once, then stream the
-    * committed `_changes` log as a file-stream source, so downstream
+    * table's change feed as a file-stream source, so downstream
     * CDC consumers run as ordinary Structured Streaming with
     * checkpointed offsets (new feed versions are new files — picked up
     * per micro-batch; cost ∝ new commits, the shared snapshot is never
@@ -278,11 +273,11 @@ object SharingProtocol {
     * `_commit_version` column the feed rows carry.
     *
     * Caveat vs the batch path: schema discovery uses only
-    * manifest-COMMITTED feed versions, but the file-stream glob itself
-    * trails the raw directory, so a feed version staged by a writer
-    * mid-commit can enter a micro-batch moments before its manifest
-    * line lands. [[committedChangeBatches]] is the log-driven
-    * consumption that closes this race — the manifest IS its offset
+    * log-COMMITTED feed versions, but the file-stream glob itself
+    * trails the raw directories, so a feed staged by a writer
+    * mid-commit can enter a micro-batch before (or without) its log
+    * entry landing. [[committedChangeBatches]] is the log-driven
+    * consumption that closes this race — the log IS its offset
     * log, so staged dirs are invisible by construction; prefer it for
     * recipients that may race a writer. This glob path remains for
     * consumers that want a plain unbounded DataFrame. */
@@ -294,25 +289,22 @@ object SharingProtocol {
     // the shared retention check — the glob below sees only surviving
     // dirs and would otherwise silently stream a feed with a hole
     requireFeedWithinRetention(fqn, root, startingVersion)
-    val committed = committedFeedDirs(fqn, root, 0L)
-    if (committed.isEmpty) sys.error(s"shared table '$fqn' has no committed change feed")
-    // merge schemas across ALL committed feed versions: a mergeSchema
-    // commit adds columns to later feeds, and pinning the oldest
-    // version's schema would silently drop them from every micro-batch
-    // (older files surface the new columns as null, the mergeSchema read
-    // contract); footer-only work, ∝ committed versions
-    val schema = spark.read.option("mergeSchema", "true")
-      .parquet(committed: _*).schema
-    spark.readStream.schema(schema).parquet(s"$root/_changes/*")
+    if (committedFeedDirs(fqn, root, 0L).isEmpty)
+      sys.error(s"shared table '$fqn' has no committed change feed")
+    // the schema merges across ALL committed feed versions: a
+    // mergeSchema commit adds columns to later feeds, and pinning the
+    // oldest version's schema would silently drop them from every
+    // micro-batch (older files surface the new columns as null)
+    graft.maint.VersionedTable.feedStream(spark, root)
       .filter(col("_commit_version") >= startingVersion)
   }
 
   /** Log-driven consumption of a shared change feed — the production
     * upgrade [[changeStream]]'s caveat points at, as real code. One call
-    * is one `Trigger.AvailableNow` pass: every manifest-COMMITTED feed
+    * is one `Trigger.AvailableNow` pass: every log-COMMITTED feed
     * version above the checkpoint watermark (and >= `startingVersion`)
     * is read as a batch DataFrame and handed to `f` in version order,
-    * then the watermark advances. The manifest is the offset log, so a
+    * then the watermark advances. The commit log is the offset log, so a
     * feed dir staged by a mid-commit writer is invisible by
     * construction — no glob race, unlike the file-stream path.
     *
@@ -323,7 +315,7 @@ object SharingProtocol {
     * advance). The watermark write is atomic (temp file + move), so a
     * crash can never leave a half-written offset.
     *
-    * Scale: one manifest read per pass (metadata, KB-scale) + one
+    * Scale: one commit-log read per pass (metadata, KB-scale) + one
     * parquet batch per NEW commit — cost ∝ new commits; the snapshot
     * and already-delivered versions are never re-read.
     *

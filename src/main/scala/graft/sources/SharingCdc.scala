@@ -8,7 +8,7 @@ import org.apache.spark.sql.sources.{DataSourceRegister, StreamSourceProvider}
 import org.apache.spark.sql.types.StructType
 
 /** TRUE streaming source for a shared change feed whose offsets ARE the
-  * provider's manifest-committed versions (S4/S7 streaming; reference
+  * provider's log-committed versions (S4/S7 streaming; reference
   * delta_sharing_recipient.py:186-192 `readStream` + `readChangeFeed`):
   *
   *   spark.readStream.format("graftSharingCdc")
@@ -17,10 +17,10 @@ import org.apache.spark.sql.types.StructType
   *     .load()
   *
   * Why this exists next to [[SharingProtocol.changeStream]]: the glob
-  * file-stream trails the RAW `_changes` directory, so a feed dir staged
-  * by a mid-commit writer could enter a micro-batch moments before its
-  * manifest line lands. Here the offset log is derived from the commit
-  * manifest itself — `getOffset` reports the highest manifest-COMMITTED
+  * file-stream trails the RAW version directories, so a feed staged by
+  * a mid-commit writer could enter a micro-batch before its log entry
+  * lands. Here the offset log is derived from the commit log itself —
+  * `getOffset` reports the highest log-COMMITTED
   * feed version, and `getBatch(start, end]` reads exactly the committed
   * dirs in that version range — so a staged-but-uncommitted dir is
   * invisible by construction, and Spark's checkpointed offset log gives
@@ -33,7 +33,7 @@ import org.apache.spark.sql.types.StructType
   * [[SharingSource]]; a MicroBatchStream would have to re-implement the
   * parquet reader behind PartitionReader for zero behavioral gain here.
   *
-  * Scale: each trigger costs two manifest reads (KB-scale metadata —
+  * Scale: each trigger costs two log reads (KB-scale metadata —
   * `getOffset` and `getBatch` each list, the same shape as Spark's
   * FileStreamSource log lookups); each batch scans only the NEW
   * committed feed dirs — cost ∝ new commits, the shared snapshot is
@@ -69,7 +69,7 @@ private[sources] object SharingCdcSource {
   // sourceSchema (at load()) and createSource (at stream start) both
   // need the schema; memoize the footer-read result PER URL, with the
   // committed dir set as a validity token: the second call costs one
-  // manifest read instead of re-reading every feed version's footers,
+  // log read instead of re-reading every feed version's footers,
   // a mergeSchema commit between calls changes the token and replaces
   // the entry (never pins a stale schema), and the map is naturally
   // bounded at one live entry per url — repeated stream restarts
@@ -105,7 +105,7 @@ private[sources] class SharingCdcSource(sqlContext: SQLContext, url: String,
     startingVersion: Long, override val schema: StructType) extends Source {
 
   // resolve once: the share grant is fixed for the stream's lifetime
-  // (re-grants mint new profiles); the MANIFEST is re-read per trigger
+  // (re-grants mint new profiles); the commit LOG is re-read per trigger
   private val (fqn, root) = {
     val (f, paths) = SharingProtocol.resolve(url)
     (f, paths.head)
@@ -124,7 +124,7 @@ private[sources] class SharingCdcSource(sqlContext: SQLContext, url: String,
     // Delta convention): on a restart/replay `start` already encodes what
     // the sink has seen, and clamping it by a user-raised startingVersion
     // would silently drop committed-but-unsunk versions from the replay.
-    // (version, dir) pairs come straight from the manifest listing — no
+    // (version, dir) pairs come straight from the log listing — no
     // regex re-parse of paths that could silently drop a version.
     val lo = start.map(ver(_) + 1L).getOrElse(startingVersion)
     val hi = ver(end)

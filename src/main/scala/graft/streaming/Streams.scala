@@ -70,7 +70,6 @@ object Streams {
     * emit monotone measures, take max per key), or guarantee a
     * single-batch source. */
   def runToMemory(df: DataFrame, outputMode: String): DataFrame = {
-    configureStateStore(df.sparkSession)
     val name = s"graft_stream_${counter.incrementAndGet()}"
     val q = df.writeStream
       .format("memory")
@@ -90,25 +89,6 @@ object Streams {
     spark.catalog.dropTempView(name)
     out
   }
-
-  /** State-store provider knob (guide §5-adjacent): the default
-    * HDFS-backed provider keeps all state on-heap per partition — right
-    * for the local harness's tiny keyed state (ms-level commits, no
-    * native overhead). `SPARK_GRAFT_STATESTORE=rocksdb` switches the
-    * session to the RocksDB provider, the production choice once state
-    * outgrows executor heap (spills to local SSD, bounded memory,
-    * changelog checkpointing). Parameterised, local default preserved —
-    * measured A/B at sf0.1 (st9, the benched stateful path): HDFS
-    * {2.85, 3.13} s vs RocksDB {3.03, 2.68} s isolated floors — neutral
-    * at this state size, so the default stands locally; a 100 TB
-    * deployment with >heap state flips the env var. */
-  private def configureStateStore(spark: SparkSession): Unit =
-    sys.env.get("SPARK_GRAFT_STATESTORE").foreach {
-      case "rocksdb" => spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      case _ => () // unknown value: keep the session default
-    }
 
   /** Run a streaming DF through foreachBatch, appending every micro-batch
     * to a scratch parquet dir; returns the accumulated rows. */

@@ -87,15 +87,40 @@ class FsSpec extends AnyFunSuite {
     Fs.deleteTree(dir)
   }
 
+  test("putIfAbsent: racing writers, exactly one wins and is never replaced; no temp survives") {
+    val dir = tmp()
+    val p = dir.resolve("_log").resolve("0.json")
+    (1 to 20).foreach { round =>
+      Files.deleteIfExists(p)
+      val go = new java.util.concurrent.CountDownLatch(1)
+      val won = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val threads = (1 to 4).map(i => new Thread(() => {
+        go.await()
+        if (Fs.putIfAbsent(p, s"writer-$i-${"x" * 100000}")) won.add(s"writer-$i")
+      }))
+      threads.foreach(_.start())
+      go.countDown()
+      threads.foreach(_.join())
+      assert(won.size == 1, s"round $round: winners ${won.asScala.toSeq}")
+      assert(Files.readString(p).startsWith(won.peek() + "-"),
+        s"round $round: the entry is not the winner's content")
+    }
+    val left = Files.list(p.getParent).iterator().asScala.map(_.getFileName.toString).toSeq
+    assert(left == Seq("0.json"), s"temp files left behind: $left")
+    Fs.deleteTree(dir)
+  }
+
   test("dataFiles: `_*` and `.*` files are skipped; keys are relative to the dir") {
     val dir = tmp()
     Seq("part-0.parquet", "_SUCCESS", ".part-0.parquet.crc",
-      "p=1/part-1.parquet", "p=1/.hidden", "p=1/_committed")
+      "p=1/part-1.parquet", "p=1/.hidden", "p=1/_committed",
+      "_stats/part-2.parquet", ".staging/part-3.parquet", "_p=2/part-4.parquet")
       .foreach { f =>
         Files.createDirectories(dir.resolve(f).getParent)
         Files.writeString(dir.resolve(f), "x")
       }
-    assert(Fs.dataFiles(dir) == Vector("p=1/part-1.parquet", "part-0.parquet"))
+    assert(Fs.dataFiles(dir) ==
+      Vector("_p=2/part-4.parquet", "p=1/part-1.parquet", "part-0.parquet"))
     assert(Fs.dataFiles(dir.resolve("absent")).isEmpty)
     Fs.deleteTree(dir)
   }

@@ -592,7 +592,7 @@ class IvfIndexSpec extends SparkSpec {
     assert(ct.read(Some(pre)).filter(expr(erased)).count() > 0,
       "time travel must still audit the pre-erasure version")
     ct.compact()
-    val physical = spark.read.parquet(s"$root/cells/v=${ct.versions.max}")
+    val physical = spark.read.parquet(ct.versionDir(ct.versions.max).toString)
     assert(physical.filter(expr(erased)).count() == 0,
       "compact must materialize the erasure — no erased bytes in the head data files")
   }

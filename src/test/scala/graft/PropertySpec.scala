@@ -235,7 +235,7 @@ class PropertySpec extends SparkSpec {
       val (m, h) = (hdr.getInt(0), hdr.getInt(1))
       // the sizing itself must track n: m within a factor of 2 of the
       // textbook solution for the version's max per-file distinct count
-      val nFile = spark.read.parquet(s"$root/v=$v")
+      val nFile = spark.read.parquet(t.versionDir(v).toString)
         .groupBy(input_file_name()).agg(countDistinct(col("k")).as("d"))
         .agg(max("d")).collect()(0).getLong(0)
       val mIdeal = -nFile * math.log(fpp) / (math.log(2) * math.log(2))

@@ -7,10 +7,11 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Guard against re-forking the storage seam: each file-system mechanism
-  * (recursive delete, atomic replace, tree copy, data-file listing,
-  * stale sweep) has one implementation in `core/Fs.scala`, the manifest
-  * format lives only in `maint/VersionedTable.scala`, and that table has
-  * one commit critical section and one retry loop. The same scan keeps
+  * (recursive delete, atomic replace, put-if-absent, tree copy, data-file
+  * listing, stale sweep) has one implementation in `core/Fs.scala`, the
+  * commit log and change-feed layout live only in
+  * `maint/VersionedTable.scala`, and that table has one commit point (a
+  * put-if-absent log entry, no lock, no rename) and one retry loop. The same scan keeps
   * the broadcast rule in one place: `ops/Guards.scala`. Every failure
   * names the file and line. */
 class StorageSeamSpec extends AnyFunSuite {
@@ -42,21 +43,25 @@ class StorageSeamSpec extends AnyFunSuite {
         found.mkString("\n"))
   }
 
-  test("the manifest is named only in maint/VersionedTable.scala") {
-    val found = hits(""""[^"]*_manifest[^"]*"""", _ != tableFile)
+  test("log and change-feed paths are named only in maint/VersionedTable.scala") {
+    val found = hits(""""[^"]*\b_(log|changes)\b[^"]*"""", _ != tableFile)
     assert(found.isEmpty,
-      s"manifest path outside $tableFile — go through VersionedTable:\n" +
+      s"log or change-feed path outside $tableFile — go through VersionedTable:\n" +
         found.mkString("\n"))
+    val manifests = hits(""""[^"]*_manifest[^"]*"""", _ => true)
+    assert(manifests.isEmpty,
+      s"the `_manifest` layout is gone — commit through the log:\n" +
+        manifests.mkString("\n"))
   }
 
-  test("VersionedTable has one commit critical section and one retry loop") {
+  test("VersionedTable has one commit point and one retry loop") {
     val isTable = (f: String) => f == tableFile
-    val appends = hits("""appendManifest\(""", isTable)
-    assert(appends.size == 2, "expected appendManifest's definition and ONE " +
-      s"call (in publishVersion):\n${appends.mkString("\n")}")
-    val moves = hits("""Files\.move\(""", isTable)
-    assert(moves.size == 2, "expected the data + stats renames of " +
-      s"publishVersion only:\n${moves.mkString("\n")}")
+    val puts = hits("""Fs\.putIfAbsent\(""", isTable)
+    assert(puts.size == 1, "expected ONE put-if-absent log entry " +
+      s"(in publishVersion):\n${puts.mkString("\n")}")
+    val locksAndMoves = hits("""\bsynchronized\b|Files\.move\(""", isTable)
+    assert(locksAndMoves.isEmpty, "the log entry is the only commit point — " +
+      s"no lock, no rename:\n${locksAndMoves.mkString("\n")}")
     val loops = hits("""contended|while \(true\)""", isTable)
     assert(loops.size == 1, s"expected ONE retry loop (retrying):\n${loops.mkString("\n")}")
   }

@@ -715,10 +715,11 @@ class StreamingSpec extends SparkSpec {
       assert(n == direct, s"v=$v delivered $n rows, direct feed has $direct")
     }
 
-    // a writer mid-commit: feed dir staged, manifest line not yet landed —
-    // exactly the state the file-glob path can leak; must stay invisible
-    spark.read.parquet(s"$root/_changes/v=1")
-      .write.parquet(s"$root/_changes/v=7")
+    // a writer mid-commit: version dir with its feed staged, log entry
+    // not yet created — exactly the state the file-glob path can leak;
+    // must stay invisible
+    spark.read.parquet(t.versionDir(1).resolve("_changes").toString)
+      .write.parquet(s"$root/v7-staged/_changes")
     assert(pass().isEmpty, "staged-but-uncommitted v=7 must not be delivered")
 
     // a real commit is picked up — and ONLY it (no redelivery of 0/1)
@@ -752,9 +753,11 @@ class StreamingSpec extends SparkSpec {
     val ckpt = java.nio.file.Files.createTempDirectory("graft_cdcsrc_ck_").toString
     val out = java.nio.file.Files.createTempDirectory("graft_cdcsrc_out_").toString + "/sink"
 
-    // a writer mid-commit BEFORE the stream ever starts: feed dir staged,
-    // no manifest line — the glob path would leak it into batch 0
-    spark.read.parquet(s"$root/_changes/v=1").write.parquet(s"$root/_changes/v=7")
+    // a writer mid-commit BEFORE the stream ever starts: version dir with
+    // its feed staged, no log entry — the glob path would leak it into
+    // batch 0
+    spark.read.parquet(t.versionDir(1).resolve("_changes").toString)
+      .write.parquet(s"$root/v7-staged/_changes")
 
     def runOnce(checkpoint: String = ckpt, sink: String = out,
         opts: Map[String, String] = Map.empty): Unit = {

@@ -16,6 +16,17 @@ class VersionedTableSpec extends SparkSpec {
   private def freshTable() =
     new VersionedTable(spark, Files.createTempDirectory("graft_vt_").toString + "/t")
 
+  /** Back-date every path under `p` by two hours: the state a crashed
+    * writer's leftovers are in once vacuum's one-hour stale sweep may
+    * reclaim them. */
+  private def age(p: java.nio.file.Path): Unit = {
+    val old = java.nio.file.attribute.FileTime.fromMillis(
+      System.currentTimeMillis() - 2L * 60 * 60 * 1000)
+    val s = Files.walk(p)
+    try s.iterator().asScala.toVector.foreach(Files.setLastModifiedTime(_, old))
+    finally s.close()
+  }
+
   test("write/read/time-travel/history") {
     val t = freshTable()
     val v0 = t.write(Seq((1, "a"), (2, "b")).toDF("id", "v"))
@@ -116,44 +127,46 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("crashed writeWithChangeFeed cannot leak its staged feed into the next commit") {
-    // The hazard the single-commit-path fix addresses: a writeWithChangeFeed
-    // that dies AFTER staging _changes/v=N but BEFORE the manifest append
-    // leaves an orphaned feed dir; the next commit of version N (a plain
-    // write) must clear it rather than silently adopt rows that don't match
-    // its actual diff. Reproduce the exact post-crash state on disk, then
-    // commit over it.
+    // A writeWithChangeFeed that dies AFTER staging its version dir (feed
+    // included) but BEFORE creating its log entry leaves a dir no entry
+    // names; the next commit of version N (a plain write) must never
+    // adopt rows that don't match its actual diff. Reproduce the exact
+    // post-crash state on disk, then commit over it.
     val t = freshTable()
     t.writeWithChangeFeed(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), Seq("id"))
     val root = t.detail().collect()(0).getString(0)
-    // forge the orphan: CDF-shaped rows staged for version 1, no manifest line
-    val orphan = new java.io.File(s"$root/_changes/v=1")
-    Seq((99L, "STALE", "insert"))
-      .toDF("id", "v", graft.ops.ChangeFeed.ChangeTypeCol)
-      .withColumn(graft.ops.ChangeFeed.CommitVersionCol, lit(1L))
-      .withColumn(graft.ops.ChangeFeed.CommitTimestampCol,
-        to_timestamp(lit("2001-09-01 00:00:00")))
-      .write.mode("overwrite").parquet(orphan.toString)
+    // forge the orphan: CDF-shaped rows staged for version 1, no entry
+    def forgeFeed(dir: java.io.File, id: Long, v: String, version: Long): Unit =
+      Seq((id, v, "insert"))
+        .toDF("id", "v", graft.ops.ChangeFeed.ChangeTypeCol)
+        .withColumn(graft.ops.ChangeFeed.CommitVersionCol, lit(version))
+        .withColumn(graft.ops.ChangeFeed.CommitTimestampCol,
+          to_timestamp(lit("2001-09-01 00:00:00")))
+        .write.mode("overwrite").parquet(dir.toString)
+    val orphanDir = new java.io.File(s"$root/v1-crashed")
+    val orphan = new java.io.File(orphanDir, "_changes")
+    forgeFeed(orphan, 99L, "STALE", 1L)
     assert(t.latestVersion.contains(0L), "orphan must not be a committed version")
-    // plain write() commits version 1 with NO feed: the orphan must be gone
+    // plain write() commits version 1 with NO feed
     val v1 = t.write(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v"))
     assert(v1 == 1L)
-    assert(!orphan.exists(), "stale staged feed must be cleared by the commit")
     // the feed surface shows only v0's genuine inserts — no phantom STALE row
     val feed = t.changeFeed(0L)
     assert(feed.agg(max(col(graft.ops.ChangeFeed.CommitVersionCol))).collect()(0).getLong(0) == 0L)
     assert(feed.filter(col("v") === "STALE").count() == 0L)
     // and a REAL writeWithChangeFeed over another forged orphan stages its
     // own diff, not the leftovers
-    Seq((98L, "STALE2", "insert"))
-      .toDF("id", "v", graft.ops.ChangeFeed.ChangeTypeCol)
-      .withColumn(graft.ops.ChangeFeed.CommitVersionCol, lit(2L))
-      .withColumn(graft.ops.ChangeFeed.CommitTimestampCol,
-        to_timestamp(lit("2001-09-01 00:00:00")))
-      .write.mode("overwrite").parquet(s"$root/_changes/v=2")
+    forgeFeed(new java.io.File(s"$root/v2-crashed/_changes"), 98L, "STALE2", 2L)
     t.writeWithChangeFeed(Seq((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d")).toDF("id", "v"), Seq("id"))
     val v2feed = t.changeFeed(2L).collect()
     assert(v2feed.map(_.getAs[Long]("id")).toSet == Set(4L),
       s"v2 feed must be the real diff, got ${v2feed.mkString(",")}")
+    // no commit clears orphans any more: vacuum's stale sweep reclaims a
+    // crashed writer's dir once it is untouched for over an hour
+    age(orphanDir.toPath)
+    t.vacuum(keepLast = 10)
+    assert(!orphan.exists(), "stale staged feed must be cleared by the stale sweep")
+    assert(t.changeFeed(0L).count() == 3L, "committed feeds survive the sweep")
   }
 
   test("readWhere prunes files via commit-time min/max stats; results lossless") {
@@ -169,9 +182,8 @@ class VersionedTableSpec extends SparkSpec {
       s"stats did not prune: ${pruned.inputFiles.length} of $total files scanned")
     // an out-of-range predicate prunes everything
     assert(t.readWhere("k", 5000L, 6000L).count() == 0)
-    // a table without stats (pre-upgrade layout) falls back to a full scan
-    val statsDir = java.nio.file.Paths.get(
-      t.detail().collect()(0).getString(0), "_stats")
+    // a version without stats falls back to a full scan
+    val statsDir = t.versionDir(t.latestVersion.get).resolve("_stats")
     Files.walk(statsDir).sorted(java.util.Comparator.reverseOrder())
       .forEach(p => Files.delete(p))
     assert(t.readWhere("k", 100L, 150L).count() == full.count())
@@ -184,7 +196,8 @@ class VersionedTableSpec extends SparkSpec {
     val c = t.shallowClone(destRoot)
     assert(c.read().collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L))
     // metadata-only: no data dir materialized under the clone root
-    assert(!Files.exists(java.nio.file.Paths.get(s"$destRoot/v=0")))
+    assert(!c.versionDir(0).toAbsolutePath.startsWith(
+      java.nio.file.Paths.get(destRoot).toAbsolutePath))
     // stats travel by reference too — data-skipping works on the clone
     assert(c.readWhere("id", 2L, 2L).count() == 1)
     // clone evolves independently; source head unchanged
@@ -260,7 +273,7 @@ class VersionedTableSpec extends SparkSpec {
     assert(t.read().count() == 90)
     assert(t.read(Some(0)).count() == 100, "time travel sees pre-delete rows")
     val root = t.detail().collect()(0).getString(0)
-    assert(!Files.exists(Paths.get(s"$root/v=1")), "no data rewritten")
+    assert(t.versionDir(1) == t.versionDir(0), "no data rewritten")
     assert(t.detail().collect()(0).getAs[Long]("size_bytes") == bytesBefore)
     assert(t.history().orderBy("version").collect()(1).getLong(2) == 90L)
     // chained delete accumulates predicates
@@ -273,11 +286,12 @@ class VersionedTableSpec extends SparkSpec {
     val c = t.shallowClone(Files.createTempDirectory("graft_dvc_").toString + "/c")
     assert(c.read().count() == 86)
     // compact materializes the delete physically; vacuum is then safe
+    val v0Dir = t.versionDir(0)
     t.compact(1)
     assert(t.read().count() == 86)
     t.vacuum(keepLast = 1)
     assert(t.read().count() == 86)
-    assert(!Files.exists(Paths.get(s"$root/v=0")), "old shared dir vacuumed after compact")
+    assert(!Files.exists(v0Dir), "old shared dir vacuumed after compact")
   }
 
   test("deleteWhere keeps rows where the predicate is NULL (SQL DELETE semantics)") {
@@ -293,10 +307,11 @@ class VersionedTableSpec extends SparkSpec {
   test("commit recovers from an orphaned v=N dir left by a crashed writer") {
     val t = freshTable()
     t.write(Seq(1).toDF("id"))
-    // forge the crash state: data dir moved into place, no manifest line
+    // forge the crash state: a version-1 dir with data and stats fully
+    // staged, no log entry naming it
     val root = t.detail().collect()(0).getString(0)
-    Seq(99).toDF("id").write.parquet(s"$root/v=1")
-    Seq(99).toDF("id").write.parquet(s"$root/_stats/v=1")
+    Seq(99).toDF("id").write.parquet(s"$root/v1-crashed")
+    Seq(99).toDF("id").write.parquet(s"$root/v1-crashed/_stats")
     assert(t.latestVersion.contains(0L))
     val v1 = t.write(Seq(1, 2).toDF("id"))
     assert(v1 == 1L && t.read().count() == 2, "orphan must not block the commit")
@@ -330,8 +345,7 @@ class VersionedTableSpec extends SparkSpec {
     // files, so v0's dir must survive the vacuum
     val removed = t.vacuum(keepLast = 1)
     assert(removed.isEmpty, s"must not vacuum a dir the head references: $removed")
-    val root = t.detail().collect()(0).getString(0)
-    assert(Files.exists(Paths.get(s"$root/v=0")))
+    assert(Files.exists(t.versionDir(0)))
     assert(t.read().count() == 40)
   }
 
@@ -485,8 +499,7 @@ class VersionedTableSpec extends SparkSpec {
     t.writeWithChangeFeed(
       Seq((1, "a", 11.0), (3, "b", 30.0)).toDF("id", "grp", "amt"),
       Seq("id"), partitionBy = Seq("grp"))
-    val root = t.detail().collect()(0).getString(0)
-    assert(new java.io.File(s"$root/v=1/grp=b").isDirectory, "v1 must be partitioned")
+    assert(t.versionDir(1).resolve("grp=b").toFile.isDirectory, "v1 must be partitioned")
     // the diff basis is the partitioned v0 read-back (columns reordered) —
     // the feed must still be name-correct: update of 1, delete 2, insert 3
     val feed = t.changeFeed(fromVersion = 1)
@@ -547,8 +560,7 @@ class VersionedTableSpec extends SparkSpec {
     val df = Seq((1, "F", 10.0), (2, "O", 20.0), (3, "F", 30.0), (4, "P", 40.0))
       .toDF("id", "status", "amt")
     t.write(df, partitionBy = Seq("status"))
-    val root = t.detail().collect()(0).getString(0)
-    val dirs = new java.io.File(s"$root/v=0").listFiles.map(_.getName)
+    val dirs = t.versionDir(0).toFile.listFiles.map(_.getName)
       .filter(_.contains("=")).sorted.toSeq
     assert(dirs == Seq("status=F", "status=O", "status=P"), s"layout: $dirs")
     // partition columns come back (last in schema, like Delta) and rows survive
@@ -572,7 +584,7 @@ class VersionedTableSpec extends SparkSpec {
     t.write(df, partitionBy = Seq("status"))
     val root = t.detail().collect()(0).getString(0)
     def fileBytes(version: Long, dir: String): Map[String, Seq[Byte]] = {
-      val d = new java.io.File(s"$root/v=$version/$dir")
+      val d = t.versionDir(version).resolve(dir).toFile
       d.listFiles.filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
         .map(f => f.getName -> java.nio.file.Files.readAllBytes(f.toPath).toSeq).toMap
     }
@@ -618,7 +630,7 @@ class VersionedTableSpec extends SparkSpec {
     t.write(df, partitionBy = Seq("status"))
     val root = t.detail().collect()(0).getString(0)
     def fileBytes(version: Long, dir: String): Map[String, Seq[Byte]] = {
-      val d = new java.io.File(s"$root/v=$version/$dir")
+      val d = t.versionDir(version).resolve(dir).toFile
       d.listFiles.filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
         .map(f => f.getName -> java.nio.file.Files.readAllBytes(f.toPath).toSeq).toMap
     }
@@ -933,9 +945,10 @@ class VersionedTableSpec extends SparkSpec {
         .toDF("x", "y", "k").repartition(8),
       partitionBy = Seq("k"))
     val v1 = t.clusterZOrder(Seq("x", "y"), numFiles = 6)
-    val dirs = java.nio.file.Files.list(java.nio.file.Paths.get(rootDir, s"v=$v1"))
+    // the version's own `_stats` dir is metadata, not partition layout
+    val dirs = java.nio.file.Files.list(t.versionDir(v1))
       .iterator().asScala.filter(p => java.nio.file.Files.isDirectory(p))
-      .map(_.getFileName.toString).toSet
+      .map(_.getFileName.toString).filterNot(_.startsWith("_")).toSet
     assert(dirs == Set("k=p0", "k=p1", "k=p2"), s"z-order flattened: $dirs")
     assert(t.read().count() == 200)
     // skipping still works on each z dimension independently
@@ -955,9 +968,9 @@ class VersionedTableSpec extends SparkSpec {
       .repartition(6), partitionBy = Seq("k"))
     // OPTIMIZE must bin-pack WITHIN partitions, never flatten the dirs
     val v1 = t.compact(1)
-    val v1Dirs = java.nio.file.Files.list(java.nio.file.Paths.get(rootDir, s"v=$v1"))
+    val v1Dirs = java.nio.file.Files.list(t.versionDir(v1))
       .iterator().asScala.filter(p => java.nio.file.Files.isDirectory(p))
-      .map(_.getFileName.toString).toSet
+      .map(_.getFileName.toString).filterNot(_.startsWith("_")).toSet
     assert(v1Dirs == Set("k=p0", "k=p1", "k=p2", "k=p3"),
       s"compact flattened the layout: $v1Dirs")
     assert(t.read().count() == 40)
@@ -966,9 +979,9 @@ class VersionedTableSpec extends SparkSpec {
     // RESTORE of a partitioned version keeps its layout too
     t.write((1 to 10).map(i => (i.toLong, "flat")).toDF("id", "k")) // unpartitioned head
     val v3 = t.restore(v1)
-    val v3Dirs = java.nio.file.Files.list(java.nio.file.Paths.get(rootDir, s"v=$v3"))
+    val v3Dirs = java.nio.file.Files.list(t.versionDir(v3))
       .iterator().asScala.filter(p => java.nio.file.Files.isDirectory(p))
-      .map(_.getFileName.toString).toSet
+      .map(_.getFileName.toString).filterNot(_.startsWith("_")).toSet
     assert(v3Dirs == Set("k=p0", "k=p1", "k=p2", "k=p3"),
       s"restore flattened the layout: $v3Dirs")
     assert(t.read().count() == 40)
@@ -999,13 +1012,17 @@ class VersionedTableSpec extends SparkSpec {
         def call(): Long = t.write(dfB, "loser")
       })
       // B validated against v0 and is now staging (blocked in the gate) —
-      // its staging dir existing is the signal it passed validation
-      val staging = java.nio.file.Paths.get(rootDir, "_staging")
+      // a version dir no entry names yet is the signal it passed validation
+      def staging: Boolean = {
+        val named = t.versions.map(t.versionDir(_).getFileName.toString).toSet
+        val s = Files.list(java.nio.file.Paths.get(rootDir))
+        try s.iterator().asScala.map(_.getFileName.toString)
+          .exists(n => !n.startsWith("_") && !named(n))
+        finally s.close()
+      }
       val deadline = System.currentTimeMillis() + 60000
-      while ((!Files.isDirectory(staging) || !Files.list(staging).findAny().isPresent)
-          && System.currentTimeMillis() < deadline) Thread.sleep(20)
-      assert(Files.isDirectory(staging) && Files.list(staging).findAny().isPresent,
-        "writer B never started staging")
+      while (!staging && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(staging, "writer B never started staging")
       // the winner evolves the schema while B is mid-staging
       t.write(Seq((1L, "a", true)).toDF("id", "v", "flag"), "evolve",
         mergeSchema = true)
@@ -1042,21 +1059,21 @@ class VersionedTableSpec extends SparkSpec {
     t.write(Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
     val old = java.nio.file.attribute.FileTime.fromMillis(
       System.currentTimeMillis() - 2L * 60 * 60 * 1000)
-    // a live writer: staging dir mtimes are stale (parquet lands beneath
-    // without touching them) but a data file is fresh
-    val live = java.nio.file.Paths.get(rootDir, "_staging", "live-writer")
-    Files.createDirectories(live.resolve("data"))
-    Files.writeString(live.resolve("data").resolve("part-0.parquet"), "fresh")
+    // a live writer: its version dir's mtimes are stale (parquet lands
+    // beneath without touching them) but a data file is fresh
+    val live = java.nio.file.Paths.get(rootDir, "v2-live-writer")
+    Files.createDirectories(live.resolve("k=a"))
+    Files.writeString(live.resolve("k=a").resolve("part-0.parquet"), "fresh")
     Files.setLastModifiedTime(live, old)
-    Files.setLastModifiedTime(live.resolve("data"), old)
+    Files.setLastModifiedTime(live.resolve("k=a"), old)
     // a crashed writer: every path in the subtree is stale
-    val dead = java.nio.file.Paths.get(rootDir, "_staging", "dead-writer")
+    val dead = java.nio.file.Paths.get(rootDir, "v2-dead-writer")
     Files.createDirectories(dead)
     Files.writeString(dead.resolve("junk"), "stale")
     Files.setLastModifiedTime(dead.resolve("junk"), old)
     Files.setLastModifiedTime(dead, old)
     t.vacuum(keepLast = 1)
-    assert(Files.exists(live.resolve("data").resolve("part-0.parquet")),
+    assert(Files.exists(live.resolve("k=a").resolve("part-0.parquet")),
       "vacuum reclaimed a live writer's staging")
     assert(!Files.exists(dead), "vacuum kept a crashed writer's staging")
   }
@@ -1091,9 +1108,9 @@ class VersionedTableSpec extends SparkSpec {
     t.buildBloomIndex("id") // auto-sized
     t.buildBloomIndex("id", bits = 256, hashes = 3) // re-register, pinned
     // exactly one config line for the column, carrying the new sizing
-    val cfgLines = Files.readAllLines(
-      java.nio.file.Paths.get(rootDir, "_bloom_config")).toArray.toSeq
-      .map(_.toString).filter(_.contains(""""column":"id""""))
+    val cfgLines = Files.list(java.nio.file.Paths.get(rootDir, "_bloom_config"))
+      .iterator().asScala.toSeq
+      .flatMap(Files.readAllLines(_).asScala).filter(_.contains(""""column":"id""""))
     assert(cfgLines.size == 1, s"duplicate config lines: $cfgLines")
     assert(cfgLines.head.contains(""""bits":256""") &&
       cfgLines.head.contains(""""hashes":3"""), cfgLines.head)
@@ -1111,9 +1128,8 @@ class VersionedTableSpec extends SparkSpec {
   test("append carries every head file byte-identical; only new rows are written") {
     val t = freshTable()
     t.write(spark.range(0, 1000).toDF("id").repartition(4))
-    val root = t.detail().collect()(0).getString(0)
     def files(v: Long): Map[String, Seq[Byte]] = {
-      val d = new java.io.File(s"$root/v=$v")
+      val d = t.versionDir(v).toFile
       d.listFiles.filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
         .map(f => f.getName -> java.nio.file.Files.readAllBytes(f.toPath).toSeq).toMap
     }
@@ -1290,9 +1306,9 @@ class VersionedTableSpec extends SparkSpec {
     assert(t.changeFeed(0).count() == 5, "pre-vacuum feed: v0 seed + 3 appends")
     val removed = t.vacuum(keepLast = 1)
     assert(removed == Seq(0L, 1L, 2L))
-    assert(!Files.exists(java.nio.file.Paths.get(s"$root/_changes/v=2")),
+    assert(!Files.exists(t.versionDir(2).resolve("_changes")),
       "dropped versions' feed dirs must go with their data")
-    assert(Files.exists(java.nio.file.Paths.get(s"$root/_changes/v=3")),
+    assert(Files.exists(t.versionDir(3).resolve("_changes")),
       "the surviving head's feed dir must remain")
     assert(VersionedTable.feedVacuumedThrough(root) == 2L,
       "the tombstone must record the high-water dropped feed version")
@@ -1328,8 +1344,9 @@ class VersionedTableSpec extends SparkSpec {
         commitTs = s"2001-09-0${i + 1} 00:00:00"))
     // simulate the torn state: tombstone says v<=1 dropped, dirs remain
     java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$root/_changes/_vacuumed_through"), "1")
-    assert(Files.exists(java.nio.file.Paths.get(s"$root/_changes/v=0")))
+      java.nio.file.Paths.get(s"$root/_feed_vacuumed_through"), "1")
+    def feedDir(v: Long) = t.versionDir(v).resolve("_changes")
+    assert(Files.exists(feedDir(0)))
     Seq(0L, 1L).foreach { from =>
       val err = intercept[IllegalArgumentException](t.changeFeed(from))
       assert(err.getMessage.contains("dropped by vacuum"),
@@ -1338,10 +1355,9 @@ class VersionedTableSpec extends SparkSpec {
     assert(t.changeFeed(2).count() == 1, "reads above the mark still serve")
     // the re-run finishes the deletes; the mark does not regress or jump
     t.vacuum(keepLast = 1)
-    assert(!Files.exists(java.nio.file.Paths.get(s"$root/_changes/v=0")) &&
-      !Files.exists(java.nio.file.Paths.get(s"$root/_changes/v=1")),
+    assert(!Files.exists(feedDir(0)) && !Files.exists(feedDir(1)),
       "re-vacuum must complete the interrupted feed deletes")
-    assert(Files.exists(java.nio.file.Paths.get(s"$root/_changes/v=2")),
+    assert(Files.exists(feedDir(2)),
       "the surviving head feed stays")
     assert(VersionedTable.feedVacuumedThrough(root) == 1L,
       "the mark reflects the dropped range, monotone through the re-run")
@@ -1352,9 +1368,8 @@ class VersionedTableSpec extends SparkSpec {
     val rnd = new scala.util.Random(31)
     t.write((1 to 600).map(i => (i, rnd.nextInt(1000))).toDF("id", "k").repartition(3))
     t.cluster(Seq("k"), numFiles = 4) // v1: clustered baseline, 4 files
-    val root = t.detail().collect()(0).getString(0)
     def names(v: Long): Set[String] = {
-      val d = new java.io.File(s"$root/v=$v")
+      val d = t.versionDir(v).toFile
       d.listFiles.filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
         .map(_.getName).toSet
     }
@@ -1444,20 +1459,34 @@ class VersionedTableSpec extends SparkSpec {
       "rejected predicates must leave the table untouched")
   }
 
-  test("a torn manifest tail (crash mid-append) is skipped on read and truncated by the next commit") {
+  test("a crashed commit's temp entry and dir stay invisible; vacuum sweeps them") {
+    // a writer that died inside the commit of version 2: its dir fully
+    // staged, its entry written to the temp but never linked into place
     val t = freshTable()
     t.write(Seq((1, "a")).toDF("id", "v"))
     t.write(Seq((1, "a"), (2, "b")).toDF("id", "v"))
-    val manifest = java.nio.file.Paths.get(
-      t.detail().collect()(0).getString(0), "_manifest")
-    Files.writeString(manifest, """{"version":2,"operat""",
-      java.nio.file.StandardOpenOption.APPEND)
-    assert(t.versions == Seq(0L, 1L), "a torn fragment is not a commit")
+    val root = t.detail().collect()(0).getString(0)
+    val staged = java.nio.file.Paths.get(root, "v2-crashed")
+    Seq((9, "z")).toDF("id", "v").write.parquet(staged.toString)
+    val temp = java.nio.file.Paths.get(root, "_log", ".2.json-crashed.tmp")
+    Files.writeString(temp,
+      """{"version":2,"operation":"write","rows":1,"location":"v2-crashed"}""" + "\n")
+    assert(t.versions == Seq(0L, 1L), "a temp entry is not a commit")
     assert(t.read().count() == 2 && t.read(Some(0L)).count() == 1)
-    assert(t.write(Seq((3, "c")).toDF("id", "v")) == 2L)
+    assert(t.write(Seq((3, "c")).toDF("id", "v")) == 2L, "the debris must not block version 2")
+    assert(t.versions == Seq(0L, 1L, 2L) &&
+      t.read().collect().map(_.getInt(0)).toSeq == Seq(3),
+      "the crashed writer's rows must never surface")
+    // fresh debris may be an in-flight writer's: vacuum spares it...
+    t.vacuum(keepLast = 10)
+    assert(Files.exists(staged) && Files.exists(temp))
+    // ...and reclaims it once untouched for over an hour
+    age(staged)
+    age(temp)
+    t.vacuum(keepLast = 10)
+    assert(!Files.exists(staged) && !Files.exists(temp),
+      "vacuum's stale sweep must reclaim the crashed commit's leftovers")
     assert(t.versions == Seq(0L, 1L, 2L) && t.read().count() == 1)
-    assert(Files.readAllLines(manifest).asScala.forall(_.endsWith("}")),
-      "the commit must truncate the fragment, not fuse with it")
   }
 
   test("footer-derived commit stats engage and equal the scan formulation") {
@@ -1481,19 +1510,20 @@ class VersionedTableSpec extends SparkSpec {
       .withColumn("ln", lit(null).cast("long")) // all-null stats column
       .repartition(3, col("l"))                 // several files
     t.write(df)
-    val readBack = spark.read.parquet(s"$root/v=0")
+    val v0 = t.versionDir(0)
+    val readBack = spark.read.parquet(v0.toString)
     val statCols = readBack.schema.fields.map(_.name).toSeq
-    val foot = VersionedTable.footerStats(spark, s"$root/v=0", readBack.schema, statCols)
+    val foot = VersionedTable.footerStats(spark, v0.toString, readBack.schema, statCols)
     assert(foot.isDefined, "footer fast path must engage for this mixed-type table")
     assert(foot.get._1 == 4L, s"footer row count: ${foot.get._1}")
     val file = url_decode(regexp_replace(
-      regexp_replace(input_file_name(), "^.*/v=0/", ""), "\\+", "%2B"))
+      regexp_replace(input_file_name(), s"^.*/${v0.getFileName}/", ""), "\\+", "%2B"))
     val scan = readBack.groupBy(file.as("file"))
       .agg(count(lit(1L)).as("cnt"),
         struct(statCols.map(c => min(col(c)).as(c)): _*).as("mins"),
         struct(statCols.map(c => max(col(c)).as(c)): _*).as("maxs"))
       .orderBy("file").collect().toSeq
-    val stored = spark.read.parquet(s"$root/_stats/v=0")
+    val stored = spark.read.parquet(v0.resolve("_stats").toString)
       .orderBy("file").collect().toSeq
     assert(stored == scan,
       s"footer stats must equal scan stats:\n  stored=$stored\n  scan  =$scan")
@@ -1504,10 +1534,11 @@ class VersionedTableSpec extends SparkSpec {
     val root2 = Files.createTempDirectory("graft_fstat2_").toString + "/t"
     val t2 = new VersionedTable(spark, root2)
     t2.write(Seq((1L, 1.0), (2L, Double.NaN)).toDF("l", "d"))
-    val rb2 = spark.read.parquet(s"$root2/v=0")
-    assert(VersionedTable.footerStats(spark, s"$root2/v=0", rb2.schema, Seq("l", "d")).isEmpty,
+    val t2v0 = t2.versionDir(0).toString
+    val rb2 = spark.read.parquet(t2v0)
+    assert(VersionedTable.footerStats(spark, t2v0, rb2.schema, Seq("l", "d")).isEmpty,
       "NaN chunk must fail the footer gate")
-    val s2 = spark.read.parquet(s"$root2/_stats/v=0")
+    val s2 = spark.read.parquet(s"$t2v0/_stats")
     assert(s2.agg(sum(col("cnt"))).collect()(0).getLong(0) == 2L)
   }
 }

@@ -220,6 +220,12 @@ def main(sf_dir: str, out_dir: str) -> int:
         else:
             print(f"PASS  {name} ({len(g)} rows)")
             n_pass += 1
+    # every oracle names a query Verify was asked to run: a missing output
+    # dir is a query that threw (or never ran), never a silent skip
+    for name in sorted(oracle):
+        if not os.path.isdir(os.path.join(out_dir, name)):
+            print(f"FAIL  {name}: no output dir (query failed or was not run)")
+            n_fail += 1
     print(f"\n{n_pass} pass, {n_fail} fail, {n_noracle} no-oracle")
     return 1 if n_fail else 0
 
