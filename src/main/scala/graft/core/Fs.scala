@@ -109,7 +109,7 @@ object Fs {
     * `p=1/part-3.parquet`), sorted. Spark's file-index rule decides what
     * is hidden: any file or directory named `.*`, or `_*` without a `=`
     * (commit markers, checksums, in-flight temps, and a version's
-    * `_stats`/`_changes` dirs), is skipped with everything beneath it.
+    * `_bloomsets`/`_changes` dirs), is skipped with everything beneath it.
     * Empty if `dir` is absent. */
   def dataFiles(dir: Path): Vector[String] = {
     val base = dir.toAbsolutePath

@@ -27,8 +27,8 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       // INT64 micros instead of deprecated INT96: modern-interop parquet
       // timestamps WITH usable chunk statistics — what lets the commit
-      // path lift file stats from footers (VersionedTable.footerStats)
-      // instead of re-scanning staged data
+      // path lift the log entry's per-file stats from footers
+      // (VersionedTable.footerStats) instead of re-scanning staged data
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .config("spark.sql.files.maxPartitionBytes", 64L * 1024 * 1024)
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")

@@ -73,15 +73,6 @@ object TextFunctions {
   def winnowFingerprints(text: Column, k: Int = 3, w: Int = 4): Column =
     call_function("winnow_fps", shingles(text, k), lit(w))
 
-  /** Engine-native winnowing fingerprints (xxhash64 shingle hash) — the
-    * 100 TB pairing for [[winnowFingerprints]]: winnowing's detection
-    * guarantee is hash-agnostic, so the kernel flip changes which
-    * shingles are selected but not whether shared runs are caught
-    * (DedupSpec pins the planted-passage case under both). Not
-    * DuckDB-reproducible, hence not the oracle configuration. */
-  def winnowFingerprintsNative(text: Column, k: Int = 3, w: Int = 4): Column =
-    call_function("xx_winnow_fps", shingles(text, k), lit(w))
-
   /** Cross-engine-portable 60-bit hash: the decimal value of the first 15
     * hex chars of md5(prefix ++ s). Bit-identical to Spark's
     * `conv(substr(md5(..),1,15),16,10)` and DuckDB's

@@ -10,12 +10,14 @@ import org.apache.spark.sql.types.{DataType, StringType}
   * and optional per-file bloom indexes — the general data-skipping mapper
   * (the shape of Delta's DataSkippingReader + bloom filter index;
   * reference performance_optimization.py:107-166's "file pruning"
-  * discussion, re-derived here over [[VersionedTable]]'s `_stats` and
-  * `_bloom` tables).
+  * discussion, re-derived here over [[VersionedTable]]'s per-file records
+  * in the log entry and bloom position sets in the version directory).
   *
   * A row predicate `P` is compiled to a predicate over a stats row
   * `(mins.*, maxs.*, __bloom_<c>…)` that answers "could ANY row of this
-  * file satisfy P?". Interval arithmetic per node:
+  * file satisfy P?". The table evaluates it on the driver, over a local
+  * frame with one stats row per file, so pruning starts no Spark job.
+  * Interval arithmetic per node:
   *
   *   - `c <  L` → `mins.c <  L`      - `c >  L` → `maxs.c >  L`
   *   - `c <= L` → `mins.c <= L`      - `c >= L` → `maxs.c >= L`

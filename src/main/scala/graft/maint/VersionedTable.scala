@@ -3,9 +3,12 @@ package graft.maint
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import com.fasterxml.jackson.databind.JsonNode
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -21,26 +24,33 @@ import graft.core.Fs
   * Layout: each version owns ONE uniquely named directory under the
   * root, `<root>/v<N>-<uuid>/`, holding its data files (`part-*.parquet`,
   * optionally nested under Hive-style `col=value/` partition dirs — see
-  * `write(partitionBy)`), its per-file min/max statistics (`_stats/`)
-  * and, when it has one, its change feed (`_changes/`). Spark's file
-  * index skips the `_` dirs, so reading the directory reads the data.
-  * A version is committed by creating `<root>/_log/<N>.json` with
-  * [[graft.core.Fs.putIfAbsent]] — the entry names the directory, and
-  * creating it is the ONLY commit point: writers stage everything first
-  * (fully concurrent, no lock, in-process or across processes), the
-  * first to create the entry wins, a loser deletes its own directory and
-  * retries against the new head (Delta's optimistic commit of the next
-  * `_delta_log/<N>.json`). A directory no entry names is invisible;
-  * [[vacuum]]'s stale sweep reclaims a crashed writer's.
+  * `write(partitionBy)`), the position sets of its registered bloom
+  * indexes (`_bloomsets/<column>`) and, when it has one, its change feed
+  * (`_changes/`). Spark's file index skips the `_` dirs, so reading the
+  * directory reads the data. A version is committed by creating
+  * `<root>/_log/<N>.json` with [[graft.core.Fs.putIfAbsent]] — the entry
+  * names the directory and lists its data files with their row counts
+  * and per-column min/max, and creating it is the ONLY commit point:
+  * writers stage everything first (fully concurrent, no lock,
+  * in-process or across processes), the first to create the entry wins,
+  * a loser retries against the new head (Delta's optimistic commit of
+  * the next `_delta_log/<N>.json`). A directory no entry names is
+  * invisible; [[vacuum]]'s stale sweep reclaims a crashed writer's.
   *
-  * An entry records its directory root-relative. A [[shallowClone]]'s
-  * v0 entry records an ABSOLUTE directory in the source table — that is
-  * how it shares the source head's files without copying them, exactly
-  * like Delta SHALLOW CLONE's absolute-path log entries.
+  * Data skipping ([[readWhere]], [[readFiltered]]) decides which files to
+  * read on the driver, from the entry's file records and the version's
+  * position sets — the Delta shape of per-file stats in the log replayed
+  * into a snapshot — so pruning starts no Spark job.
+  *
+  * An entry records its directory root-relative, and its files relative
+  * to that directory. A [[shallowClone]]'s v0 entry records an ABSOLUTE
+  * directory in the source table — that is how it shares the source
+  * head's files without copying them, exactly like Delta SHALLOW CLONE's
+  * absolute-path log entries.
   */
 final class VersionedTable(spark: SparkSession, root: String) {
 
-  import VersionedTable.Commit
+  import VersionedTable.{BloomSets, Commit, DataFile, FileList}
 
   /** The log as ONE operation sees it: listed and parsed once by [[log]],
     * then every lookup is in memory. Entries are immutable once created,
@@ -104,22 +114,23 @@ final class VersionedTable(spark: SparkSession, root: String) {
       partitionBy: Seq[String] = Seq.empty,
       mergeSchema: Boolean = false,
       overwriteSchema: Boolean = false): Long =
-    commit(df, operation, stageFeed = None, commitTs, partitionBy,
+    commit(df, operation, commitTs, feed = None, append = false, partitionBy,
       mergeSchema, overwriteSchema)
 
   /** Stages a version's change feed: (log the attempt derives from, the
-    * version being committed, its staged directory). */
-  private type FeedStager = (Log, Long, String) => Unit
+    * version being committed, the stage holding its new files). */
+  private type FeedStager = (Log, Long, Stage) => Unit
 
   /** Schema enforcement against the head version (no-op on an empty
     * table). Strict by default: same column names and types, no drops,
     * no adds, no retypes. NB: the head schema is read back from its
     * parquet files (+ partition dirs), the stand-in for Delta's
-    * log-recorded schema. */
+    * log-recorded schema. Returns that read-back schema (None: empty
+    * table, or `overwriteSchema`, which checks nothing). */
   private def enforceSchema(lg: Log, df: DataFrame, mergeSchema: Boolean,
-      overwriteSchema: Boolean): Unit = {
-    if (overwriteSchema) return
-    lg.commits.lastOption.foreach { head =>
+      overwriteSchema: Boolean): Option[StructType] = {
+    if (overwriteSchema) return None
+    lg.commits.lastOption.map { head =>
       val cur = spark.read.parquet(dirOf(head)).schema
       // the head's partition columns come back through partition-dir TYPE
       // INFERENCE (a date-looking string infers DateType), so their
@@ -140,111 +151,238 @@ final class VersionedTable(spark: SparkSession, root: String) {
         s"columns ${dropped.mkString(", ")} (use overwriteSchema)")
       require(added.isEmpty || mergeSchema, s"schema enforcement on $root: " +
         s"new columns ${added.mkString(", ")} (use mergeSchema)")
+      cur
     }
   }
 
-  /** Single commit path with optimistic concurrency (the Delta protocol's
-    * shape: a uniquely named directory + a conditional commit). Schema
-    * and constraints are checked once up front, then [[commitOnce]]
-    * runs until it wins a version — a writer that lost the race retries
-    * against the new head, the behavior of Delta's ConcurrentAppend
-    * resolution.
+  /** The commit path of full writes ([[write]], [[writeWithChangeFeed]])
+    * and appends ([[append]], [[appendWithChangeFeed]]), with optimistic
+    * concurrency (the Delta protocol's shape: a uniquely named directory
+    * + a conditional commit). Schema and constraints are checked once up
+    * front; the batch is then written ONCE into a [[Stage]], and each
+    * attempt commits it as the next version through [[publishStage]]. A
+    * writer that lost the race retries against the new head (Delta's
+    * ConcurrentAppend resolution), redoing only what depends on that
+    * head: the schema check, an append's carried files with their
+    * records and position sets, the version-stamped feed and the entry.
+    * Only an append whose head changed partition layout re-stages.
     */
-  private def commit(df: DataFrame, operation: String,
-      stageFeed: Option[FeedStager], commitTs: Option[String] = None,
-      partitionBy: Seq[String] = Seq.empty,
-      mergeSchema: Boolean = false,
-      overwriteSchema: Boolean = false): Long = {
+  private def commit(df: DataFrame, operation: String, commitTs: Option[String],
+      feed: Option[FeedStager], append: Boolean, partitionBy: Seq[String] = Nil,
+      mergeSchema: Boolean = false, overwriteSchema: Boolean = false): Long = {
     // schema first: it's a footer-metadata check, where constraint
     // validation is a full aggregation job — and a schema-invalid df can
     // make a constraint expression fail analysis with a worse error
-    enforceSchema(log, df, mergeSchema, overwriteSchema)
+    val first = log
+    var checked = first.latest
+    var headSchema = enforceSchema(first, df, mergeSchema, overwriteSchema)
     validateConstraints(df)
-    retrying("commit of")(commitOnce(log, df, operation, stageFeed, commitTs,
-      partitionBy, mergeSchema, overwriteSchema))
+    var stage = Option.empty[Stage]
+    try retrying(if (append) "append to" else "commit of") {
+      val lg = log
+      // Schema enforcement must see the head THIS attempt commits onto: a
+      // loser's retry lands on the winner's schema, and validating only
+      // once up front would let the retry silently revert a concurrent
+      // mergeSchema evolution (the winner's new column dropped with no
+      // error). Re-checking against every head the check has not seen is
+      // the local analogue of Delta's ConcurrentWrite metadata-conflict
+      // resolution: the conflicting retry FAILS instead. The put-if-absent
+      // entry guarantees no commit lands on a head this validation didn't
+      // see.
+      if (lg.latest != checked) {
+        headSchema = enforceSchema(lg, df, mergeSchema, overwriteSchema)
+        checked = lg.latest
+      }
+      val head = lg.commits.lastOption
+      if (append) head.foreach(hc => require(hc.deletePredicates.isEmpty,
+        s"append on a logical-delete head of $root: compact() first " +
+          "to materialize the delete predicates"))
+      // an append keeps the head's layout: appended rows land in their
+      // own `col=value/` dirs
+      val parts = if (append) head.fold(Seq.empty[String])(_.partitionBy) else partitionBy
+      stage = stage.filter(_.parts == parts) match {
+        case Some(s) => s.moveTo(lg.next); Some(s)
+        case None =>
+          stage.foreach(_.delete())
+          Some(new Stage(lg.next, df, parts, if (append) headSchema else None))
+      }
+      val s = stage.get
+      if (s.newFiles.nonEmpty)
+        publishStage(lg, s,
+          if (append) head.fold(Vector.empty[String])(h => Fs.dataFiles(Paths.get(dirOf(h))))
+          else Vector.empty,
+          operation, commitTs, feed)
+      else {
+        // an empty snapshot under partitionBy stages ZERO files (the
+        // dynamic-partition writer creates files per row): appending
+        // nothing is a no-op, not a new version; a full write has no
+        // log-recorded schema to give such a version, so fail with the
+        // actual cause
+        s.delete()
+        stage = None
+        if (append && head.isDefined) head.map(_.version)
+        else sys.error(s"commit of $root staged zero data files (empty " +
+          "snapshot with partitionBy?): a readable version needs at least " +
+          "one schema-bearing parquet file")
+      }
+    } catch {
+      case NonFatal(e) => stage.foreach(_.delete()); throw e
+    }
   }
 
-  /** One attempt to commit `df` as version `lg.next`: write data + stats
-    * (+ feed) into a fresh version directory, then [[publishVersion]].
-    * None if another writer took the version. */
-  private def commitOnce(lg: Log, df: DataFrame, operation: String,
-      stageFeed: Option[FeedStager], commitTs: Option[String],
-      partitionBy: Seq[String], mergeSchema: Boolean,
-      overwriteSchema: Boolean): Option[Long] = {
-    val next = lg.next
-    // Schema enforcement must see the head THIS attempt commits onto: a
-    // loser's retry lands on the winner's schema, and validating only
-    // once up front would let the retry silently revert a concurrent
-    // mergeSchema evolution (the winner's new column dropped with no
-    // error). Re-checking per attempt against the head `next` derives
-    // from is the local analogue of Delta's ConcurrentWrite metadata-
-    // conflict resolution: the conflicting retry FAILS instead. The
-    // put-if-absent entry guarantees no commit lands on a head this
-    // validation didn't see. (Yes, the first attempt re-validates what
-    // the entry check already saw — but the constraint pass between
-    // them is a full Spark job, ample time for a concurrent mergeSchema
-    // commit to move the head; one footer read is the price of
-    // validating against the head `next` actually derives from.)
-    enforceSchema(lg, df, mergeSchema, overwriteSchema)
-    val (name, dir) = newVersionDir(next)
-    val writer = df.write.mode("overwrite")
-    (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
-      .parquet(dir)
-    // fail with the actual cause: an empty snapshot under partitionBy
-    // stages no files at all (the dynamic-partition writer is per-row),
-    // and this parquet stand-in has no log-recorded schema to give such
-    // a version — the schema-less stats read below would otherwise die
-    // with an opaque 'unable to infer schema'
-    if (Fs.dataFiles(Paths.get(dir)).isEmpty) {
-      Fs.deleteTree(Paths.get(dir))
-      sys.error(s"commit of $root staged zero data files (empty snapshot" +
-        " with partitionBy?): a readable version needs at least one" +
-        " schema-bearing parquet file")
+  /** A batch of freshly written data files in a staged version directory
+    * (named for the version it targets), with what derives from those
+    * files alone — their records, their bloom sizing statistic and
+    * position sets — computed at most once, however many commit attempts
+    * the batch takes. `schema` is the batch's read-back schema: the
+    * head's for a carry (the new records then share the carried records'
+    * stat types), else partition-dir inference for a partitioned layout,
+    * else the rows' own. Nothing names the directory until an entry
+    * does, so a crashed attempt leaves only debris that [[vacuum]]
+    * sweeps. */
+  private final class Stage(next: Long, rows: DataFrame, val parts: Seq[String],
+      schemaHint: Option[StructType]) {
+    private val id = java.util.UUID.randomUUID()
+    var name = s"v$next-$id"
+    def dir: String = s"$root/$name"
+    locally {
+      val w = rows.write.mode("overwrite")
+      (if (parts.nonEmpty) w.partitionBy(parts: _*) else w).parquet(dir)
     }
-    val rows = writeStats(dir, name, s"$dir/_stats")
-    // the feed derives from the STAGED data, so the writer's upstream
-    // pipeline is never re-executed for the diff
-    stageFeed.foreach(f => f(lg, next, dir))
+    val newFiles: Vector[String] = Fs.dataFiles(Paths.get(dir))
+    lazy val schema: StructType = schemaHint.getOrElse(
+      if (parts.isEmpty) rows.schema else spark.read.parquet(dir).schema)
+    // derived before any carried file joins the batch in the directory
+    val files: FileList =
+      if (newFiles.isEmpty) FileList(Nil, Vector.empty) else fileStats(dir, schema)
+
+    /** The batch's rows, read back from its files. */
+    def frame: DataFrame = spark.read.schema(schema).option("basePath", dir)
+      .parquet(newFiles.map(f => s"$dir/$f"): _*)
+
+    private val densest = mutable.Map.empty[String, Option[Long]]
+    private val sets = mutable.Map.empty[(String, Int, Int), Map[String, Seq[Int]]]
+    def densestOf(c: String): Option[Long] =
+      densest.getOrElseUpdate(c, densestDistinct(frame, c))
+    def setsOf(c: String, bits: Int, hashes: Int): Map[String, Seq[Int]] =
+      sets.getOrElseUpdate((c, bits, hashes), positions(frame, dir, c, bits, hashes))
+
+    /** Re-target the batch at version `next` after a lost commit. */
+    def moveTo(next: Long): Unit = {
+      val to = s"v$next-$id"
+      if (to != name) {
+        Fs.moveAtomic(Paths.get(dir), Paths.get(root, to))
+        name = to
+      }
+    }
+
+    def delete(): Unit = Fs.deleteTree(Paths.get(dir))
+  }
+
+  /** The ONE commit tail: commit `stage` as version `lg.next`. The
+    * head's `carriedRel` files hard-link in byte-identical (copy is the
+    * cross-device fallback — on an object store the links are the log's
+    * carried add-file entries, a metadata copy), their records taken from
+    * the head's entry and their bloom position sets from the head's
+    * sidecars, so carried data is never scanned. Then the registered
+    * bloom indexes' sidecars and the feed are staged, and the entry is
+    * created through [[publishVersion]]. A lost commit returns None and
+    * leaves the stage holding only its batch. */
+  private def publishStage(lg: Log, stage: Stage, carriedRel: Seq[String],
+      operation: String, commitTs: Option[String],
+      feed: Option[FeedStager]): Option[Long] = {
+    val head = lg.commits.lastOption
+    val next = lg.next
+    val dir = stage.dir
+    val carried = carriedRel.toSet
+    head.filter(_ => carriedRel.nonEmpty).foreach { hc =>
+      val src = Paths.get(dirOf(hc)).toAbsolutePath
+      carriedRel.foreach { rel =>
+        val dst = Paths.get(dir, rel)
+        Files.createDirectories(dst.getParent)
+        // the carry runs concurrently with everything: a concurrent vacuum
+        // can delete the head dir mid-carry. Surface that as what it is —
+        // the copy fallback below would otherwise rethrow the same
+        // NoSuchFileException as an opaque crash (vacuum keeps versions
+        // referenced by heads, so this only fires on a retention race)
+        try Files.createLink(dst, src.resolve(rel))
+        catch {
+          case e: java.nio.file.NoSuchFileException =>
+            stage.delete()
+            throw new IllegalStateException(
+              s"head version ${hc.version} of $root was vacuumed while its " +
+                s"files were being carried into version $next ($rel); retry " +
+                "the commit against the new head", e)
+          case _: UnsupportedOperationException | _: java.nio.file.FileSystemException =>
+            Files.copy(src.resolve(rel), dst)
+        }
+      }
+    }
+    // carried records come from the head's entry when it lists them all
+    // under the batch's stat columns; otherwise (an entry written before
+    // entries listed files) the staged directory's are derived afresh
+    val files =
+      if (carriedRel.isEmpty) stage.files
+      else head.flatMap(_.files).filter(_.columns == stage.files.columns)
+        .map(_.files.filter(f => carried(f.path))).filter(_.size == carried.size)
+        .fold(fileStats(dir, stage.schema))(fs => stage.files.copy(files = stage.files.files ++ fs))
+    // Registered bloom indexes ride with the commit. Carried files keep
+    // their position sets from the head's sidecar, and only the batch is
+    // hashed — index upkeep ∝ new data, the carry's own cost story. The
+    // carried sets are only valid under the SAME (bits, hashes), so the
+    // auto-sized path keeps the head's sizing only while the batch's
+    // densest distinct count fits its capacity (n* = m·ln2/k); a batch
+    // that outgrows it (rare — capacity grows with the densest file ever
+    // seen) rebuilds the whole version, the behavior an auto-sized index
+    // must have (a saturated filter prunes nothing). A version without
+    // carried files sizes its own.
+    bloomConfigs.foreach { case (c, bits, hashes, fpp) =>
+      if (stage.schema.fieldNames.contains(c)) {
+        head.filter(_ => carriedRel.nonEmpty).flatMap(h => readBloomSets(dirOf(h), c))
+          .filter { p =>
+            if (bits > 0 && hashes > 0) (p.bits, p.hashes) == ((bits, hashes))
+            else bits == 0 && stage.densestOf(c)
+              .forall(_ <= math.floor(p.bits * math.log(2) / p.hashes).toLong)
+          }
+          .map(p => p.copy(files =
+            stage.setsOf(c, p.bits, p.hashes) ++ p.files.filter(f => carried(f._1))))
+          .orElse(buildBloom(dir, stage.schema, c, bits, hashes, fpp))
+          .foreach(writeBloomSets(dir, c, _))
+      }
+    }
+    // the feed derives from the STAGED batch, so the writer's upstream
+    // pipeline is never re-executed for it
+    feed.foreach(f => f(lg, next, stage))
     // partition columns are recorded in the entry (the stand-in for
     // Delta's log schema): readers of the log know them without
     // trusting partition-dir type inference
-    val won = publishVersion(Commit(next, operation, rows, name, ts = commitTs,
-      feed = stageFeed.isDefined, partitionBy = partitionBy), Some(dir))
-    // registered bloom indexes ride with the commit (advisory: a
-    // reader between the entry and the index write just prunes less)
-    if (won) maintainBloomIndexes(next, dir)
+    val won = publishVersion(Commit(next, operation, files.files.map(_.rows).sum,
+      stage.name, ts = commitTs, feed = feed.isDefined, partitionBy = stage.parts,
+      files = Some(files)))
+    if (!won) {
+      carriedRel.foreach(r => Files.deleteIfExists(Paths.get(dir, r)))
+      Fs.deleteTree(Paths.get(VersionedTable.feedDir(dir)))
+      Fs.deleteTree(bloomSetsDir(dir))
+    }
     Option.when(won)(next)
   }
 
-  /** A fresh, uniquely named directory for a version-`next` attempt:
-    * (root-relative name, path). Nothing names it until its entry is
-    * created, so a lost or crashed attempt leaves only debris that
-    * [[vacuum]] sweeps. */
-  private def newVersionDir(next: Long): (String, String) = {
-    val name = s"v$next-${java.util.UUID.randomUUID()}"
-    (name, s"$root/$name")
-  }
-
   /** The ONE commit point: create `_log/<N>.json` for `entry` if absent.
-    * Everything the version owns — data, stats, change feed — is already
-    * complete in its directory, so creating the entry makes all of it
-    * visible at once, or none of it. Returns false if another writer
-    * created the entry first; the loser's `staged` directory is deleted.
-    * No lock: the put-if-absent is atomic across threads AND processes. */
-  private def publishVersion(entry: Commit, staged: Option[String]): Boolean = {
-    val won = Fs.putIfAbsent(VersionedTable.entryPath(root, entry.version),
-      entry.json)
-    if (!won) staged.foreach(d => Fs.deleteTree(Paths.get(d)))
-    won
-  }
+    * Everything the version owns — data, position sets, change feed — is
+    * already complete in its directory, so creating the entry makes all
+    * of it visible at once, or none of it. Returns false if another
+    * writer created the entry first. No lock: the put-if-absent is atomic
+    * across threads AND processes. */
+  private def publishVersion(entry: Commit): Boolean =
+    Fs.putIfAbsent(VersionedTable.entryPath(root, entry.version), entry.json)
 
   /** The ONE optimistic-concurrency retry loop: re-run `attempt` against
     * the current head until it commits (Some). Every loss means another
     * writer committed, so the table always progresses — but a slower
     * writer can lose once per commit of a faster one for as long as that
-    * one keeps writing (two writer processes of 30 appends each have
-    * shown 21 straight losses). The cap therefore bounds only a
-    * pathological livelock, not ordinary contention. */
+    * one keeps writing, so an attempt after a loss redoes only what
+    * depends on the head. The cap bounds only a pathological livelock,
+    * not ordinary contention. */
   private def retrying[A](what: String)(attempt: => Option[A]): A = {
     var losses = 0
     var result = attempt
@@ -311,97 +449,112 @@ final class VersionedTable(spark: SparkSession, root: String) {
         BooleanType).contains(f.dataType) => f.name
     }.toSeq
 
-  /** Per-file row counts + min/max structs of the data files in `dir`
-    * (a version directory named `anchor`) → `statsOut` parquet.
-    * Returns the total row count (so the commit needs no second counting
-    * scan). One stats row per data file — at 100 TB this is the same
-    * "stats ride with the commit" shape as the Delta log, and the
-    * skipping decision reads only this tiny table.
+  /** Per-file records of the data files in directory `dir` read under
+    * `schema` — row count plus min/max of every stat column — for a
+    * version's entry: one record per data file, the Delta log's add-file
+    * stats. Paths are relative to `dir` (a partitioned layout keeps its
+    * `col=value/` prefix), so a carried file keeps its record.
     *
     * Fast path: stats come from the parquet FOOTERS the data write just
     * produced (row counts and per-chunk min/max are written by the
-    * encoder itself), so deriving them is an O(files) metadata read with
-    * no data scan and no shuffle — the local analogue of Delta
-    * collecting stats inside the writer, and what makes the commit's
-    * write path single-data-scan (the only remaining staged-data re-read
-    * is the change-feed diff, which needs row-level compare by
-    * definition). The footer path is gated to exactly-representable
-    * column shapes ([[VersionedTable.footerStats]]); anything else —
-    * partition dirs, INT96 timestamps, NaN-bearing float chunks, absent
-    * or oversized binary stats — falls back to the one-scan aggregation
-    * below, whose output is identical (VersionedTableSpec pins
+    * encoder itself), so deriving them is an O(files) metadata read on
+    * the driver with no Spark job and no second data scan — the local
+    * analogue of Delta collecting stats inside the writer. The footer
+    * path is gated to exactly-representable column shapes
+    * ([[VersionedTable.footerStats]]); anything else — partition dirs,
+    * INT96 timestamps, NaN-bearing float chunks, absent or oversized
+    * binary stats — falls back to one aggregation scan collected to the
+    * driver, whose output is identical (VersionedTableSpec pins
     * footer == scan on a mixed-type table). */
-  private def writeStats(dir: String, anchor: String, statsOut: String,
-      schemaHint: Option[StructType] = None): Long = {
-    // a hint pins partition-column types to the head's read-back schema:
-    // partition-dir inference is value-dependent (an all-numeric batch of
-    // a string partition column infers int), and stats must union with
-    // the head's rows under ONE schema — see commitWithCarry
-    val reader = schemaHint.fold(spark.read)(h => spark.read.schema(h))
-    val written = reader.parquet(dir)
-    val cols = statColumns(written.schema)
-    VersionedTable.footerStats(spark, dir, written.schema, cols).foreach {
-      case (totalRows, statsDf) =>
-        statsDf.coalesce(1).write.mode("overwrite").parquet(statsOut)
-        return totalRows
+  private def fileStats(dir: String, schema: StructType): FileList = {
+    val cols = statColumns(schema)
+    val files = VersionedTable.footerStats(spark, dir, schema, cols).getOrElse {
+      val aggs = count(lit(1L)) +: cols.flatMap(c => Seq(min(col(c)), max(col(c))))
+      // the unique directory name cannot reappear deeper: partition dirs
+      // always contain `=`
+      spark.read.schema(schema).parquet(dir)
+        .groupBy(VersionedTable.decodedRelFile(Paths.get(dir).getFileName.toString))
+        .agg(aggs.head, aggs.tail: _*)
+        .collect().toVector.map { r =>
+          def bounds(at: Int) = cols.indices.collect {
+            case i if !r.isNullAt(at + 2 * i) => cols(i) -> r.get(at + 2 * i)
+          }.toMap
+          DataFile(r.getString(0), r.getLong(1), bounds(2), bounds(3))
+        }
     }
-    val aggs =
-      count(lit(1L)).as("cnt") +:
-        (if (cols.isEmpty) Seq.empty
-         else Seq(
-           struct(cols.map(c => min(col(c)).as(c)): _*).as("mins"),
-           struct(cols.map(c => max(col(c)).as(c)): _*).as("maxs")))
-    // record paths RELATIVE to the version directory (readWhere
-    // re-anchors on it, and carried files keep their relative paths); a
-    // partitioned layout needs the `col=value/` prefix kept. The unique
-    // directory name cannot reappear deeper: partition dirs always
-    // contain `=`.
-    val stats = written
-      .groupBy(VersionedTable.decodedRelFile(anchor).as("file"))
-      .agg(aggs.head, aggs.tail: _*)
-    stats.coalesce(1).write.mode("overwrite").parquet(statsOut)
-    spark.read.parquet(statsOut)
-      .agg(coalesce(sum(col("cnt")), lit(0L))).collect()(0).getLong(0)
+    FileList(cols.map(c => c -> schema(c).dataType), files)
   }
 
   /** Data-skipping read (the Delta stats-pruned scan): keep only the files
     * whose `[min,max]` range for `column` intersects `[lo, hi]`, then apply
     * the residual row filter. After [[cluster]] on `column` this touches a
     * small fraction of the files; correctness never depends on the stats
-    * (a missing stats table falls back to the full scan + filter).
+    * (an entry without file stats for `column` falls back to the full
+    * scan + filter).
     */
   def readWhere(column: String, lo: Any, hi: Any,
       versionAsOf: Option[Long] = None): DataFrame = {
     val lg = log
     val v = versionAsOf.getOrElse(
       lg.latest.getOrElse(sys.error(s"empty table at $root")))
-    val residual = col(column) >= lit(lo) && col(column) <= lit(hi)
-    val dir = lg.dir(v)
-    val sd = s"$dir/_stats"
-    if (!Files.exists(Paths.get(sd))) return readAt(lg, v).filter(residual)
-    val stats = spark.read.parquet(sd)
-    if (!stats.columns.contains("mins") ||
-        !stats.select("mins.*").columns.contains(column))
-      return readAt(lg, v).filter(residual)
-    val files = stats
-      .filter(col(s"maxs.$column") >= lit(lo) && col(s"mins.$column") <= lit(hi))
-      .select("file").collect().map(r => s"$dir/${r.getString(0)}").toSeq
-    if (files.isEmpty) readAt(lg, v).filter(residual).filter(lit(false))
-    // basePath anchors partition discovery so a partitioned version's
-    // `col=value` columns survive an explicit-file-subset read
-    else applyDeletes(
-      spark.read.option("basePath", dir).parquet(files: _*), lg(v)).filter(residual)
+    val files = survivors(lg(v), Nil) { types =>
+      Option.when(types.contains(column))(
+        col(s"maxs.$column") >= lit(lo) && col(s"mins.$column") <= lit(hi))
+    }
+    readFiles(lg, v, files).filter(col(column) >= lit(lo) && col(column) <= lit(hi))
   }
+
+  /** Data skipping on the driver: the files of `c` (relative to its
+    * directory) that `survive` keeps. `survive` is a condition over a
+    * stats row — `file`, `mins.*`, `maxs.*`, and one `__bloom_<column>`
+    * position set per entry of `blooms` (NULL for a file the index does
+    * not cover) — and is evaluated on a LOCAL frame of the entry's file
+    * records, so deciding which files to read starts no Spark job. It
+    * receives the stat columns' types and may decline (None). None: read
+    * every file — the entry lists no file stats (written before entries
+    * carried them), or `survive` declined. */
+  private def survivors(c: Commit, blooms: Seq[(String, BloomSets)])(
+      survive: Map[String, DataType] => Option[Column]): Option[Seq[String]] =
+    c.files.filter(_.columns.nonEmpty).flatMap { fl =>
+      survive(fl.columns.toMap).map { keep =>
+        val bounds = StructType(fl.columns.map { case (n, t) => StructField(n, t) })
+        val schema = StructType(Seq(StructField("file", StringType),
+          StructField("mins", bounds), StructField("maxs", bounds)) ++
+          blooms.map(b => StructField(s"__bloom_${b._1}", ArrayType(IntegerType))))
+        val rows = fl.files.map { f =>
+          def row(m: Map[String, Any]) = Row.fromSeq(fl.columns.map(x => m.getOrElse(x._1, null)))
+          Row.fromSeq(Seq(f.path, row(f.min), row(f.max)) ++
+            blooms.map(_._2.files.get(f.path).orNull))
+        }
+        spark.createDataFrame(rows.asJava, schema).filter(keep)
+          .select("file").collect().map(_.getString(0)).toSeq
+      }
+    }
+
+  /** Version `v`'s rows from `files` only (relative to its directory;
+    * None: every file). basePath anchors partition discovery so a
+    * partitioned version's `col=value` columns survive an explicit-file
+    * subset read. */
+  private def readFiles(lg: Log, v: Long, files: Option[Seq[String]]): DataFrame =
+    files match {
+      case Some(fs) if fs.nonEmpty =>
+        val dir = readableDir(lg, v)
+        applyDeletes(spark.read.option("basePath", dir)
+          .parquet(fs.map(f => s"$dir/$f"): _*), lg(v))
+      case Some(_) => readAt(lg, v).filter(lit(false))
+      case None => readAt(lg, v)
+    }
 
   /** Build a per-file BLOOM FILTER INDEX on `column` for the head version
     * (Delta `CREATE BLOOMFILTER INDEX` parity): k hash positions per value
     * (xxhash64 seeded by the probe number, mod m bits), stored as a sorted
-    * position set per file under `_bloom/<column>/v=N`. [[readFiltered]]
-    * then consults it for equality/IN predicates — the pruning tool for
-    * point lookups on a HIGH-CARDINALITY column the table is NOT clustered
-    * by, where every file's min/max range spans the whole key space and
-    * stats skipping keeps everything. False positives only cost an extra
-    * file scan; a missing index costs nothing (stats-only pruning).
+    * position set per file in a sidecar of the version's own directory
+    * (`_bloomsets/<column>`). [[readFiltered]] then consults it for
+    * equality/IN predicates — the pruning tool for point lookups on a
+    * HIGH-CARDINALITY column the table is NOT clustered by, where every
+    * file's min/max range spans the whole key space and stats skipping
+    * keeps everything. False positives only cost an extra file scan; a
+    * missing index costs nothing (stats-only pruning).
     *
     * Sizing: by default AUTO — per version, the build measures the
     * largest per-file distinct count n and solves the textbook
@@ -410,8 +563,8 @@ final class VersionedTable(spark: SparkSession, root: String) {
     * (a fixed m saturates: at kn/m ≫ 1 every probe hits and nothing
     * prunes). Pass explicit `bits`/`hashes` to pin the size instead.
     * The index is an array of set positions per file, so storage is
-    * O(k·distinct), not O(m), and the probe is a constant-folded
-    * `array_contains` over the tiny index table — never a data scan. */
+    * O(k·distinct), not O(m), and the probe is an `array_contains`
+    * evaluated on the driver — never a data scan. */
   def buildBloomIndex(column: String, bits: Int = 0, hashes: Int = 0,
       fpp: Double = 0.01): Unit = {
     // register the index so every subsequent commit maintains it (the
@@ -426,8 +579,15 @@ final class VersionedTable(spark: SparkSession, root: String) {
     Fs.writeAtomic(bloomConfigDir.resolve(column),
       s"""{"column":"$column","bits":$bits,"hashes":$hashes,""" +
         s""""fpp_ppm":${math.round(fpp * 1000000)}}""" + "\n")
-    val lg = log
-    lg.latest.foreach(v => buildBloomFor(lg.dir(v), v, column, bits, hashes, fpp))
+    log.commits.lastOption.foreach { hc =>
+      val dir = dirOf(hc)
+      val schema = spark.read.parquet(dir).schema
+      require(schema.fieldNames.contains(column), s"no column $column to index")
+      buildBloom(dir, schema, column, bits, hashes, fpp) match {
+        case Some(sets) => writeBloomSets(dir, column, sets)
+        case None => Fs.deleteTree(bloomSetsPath(dir, column))
+      }
+    }
   }
 
   private def bloomConfigDir: Path = Paths.get(root, "_bloom_config")
@@ -449,67 +609,30 @@ final class VersionedTable(spark: SparkSession, root: String) {
       }
   }
 
-  /** Rebuild every registered bloom index for version `v` — one scan of
-    * the new version per indexed column, the same "stats ride with the
-    * commit" shape as [[writeStats]]. Columns absent from the snapshot
-    * (schema evolution) are skipped; readFiltered then simply has no
-    * index for them on this version. */
-  private def maintainBloomIndexes(v: Long, dir: String): Unit = {
-    val configs = bloomConfigs
-    if (configs.isEmpty) return
-    // one schema read per commit, not per indexed column
-    val cols = spark.read.parquet(dir).columns.toSet
-    configs.foreach { case (c, b, h, f) =>
-      if (cols.contains(c)) buildBloomFor(dir, v, c, b, h, f)
-    }
-  }
-
-  /** (Re)build version `v`'s index on `column` from its files in `dir`. */
-  private def buildBloomFor(dir: String, v: Long, column: String, bits0: Int,
-      hashes0: Int, fpp: Double): Unit = {
-    val df = spark.read.parquet(dir)
-    require(df.columns.contains(column), s"no column $column to index")
-    val (bits, hashes) =
-      if (bits0 > 0 && hashes0 > 0) (bits0, hashes0)
-      else {
-        // auto-size from the densest file of THIS version; an empty
-        // version has no max (NULL) — no rows, nothing to index
-        val dense = densestDistinct(df, column)
-        if (dense.isEmpty) {
-          Fs.deleteTree(bloomDir(column, v))
-          return
-        }
-        val n = math.max(1L, dense.get)
+  /** Position sets of `column` over every data file in version directory
+    * `dir`, read under `schema`, sized per the registration: pinned
+    * `bits0`/`hashes0`, or auto-sized from the densest file of THIS
+    * version. None when auto-sizing finds no rows (an empty version has
+    * no max — nothing to index). */
+  private def buildBloom(dir: String, schema: StructType, column: String,
+      bits0: Int, hashes0: Int, fpp: Double): Option[BloomSets] = {
+    val df = spark.read.schema(schema).parquet(dir)
+    val sizing =
+      if (bits0 > 0 && hashes0 > 0) Some((bits0, hashes0))
+      else densestDistinct(df, column).map { dense =>
+        val n = math.max(1L, dense)
         val ln2 = math.log(2)
         val m = math.max(64, math.ceil(-n * math.log(fpp) / (ln2 * ln2)).toInt)
-        val k = math.min(8, math.max(1, math.round(m.toDouble / n * ln2).toInt))
-        (m, k)
+        (m, math.min(8, math.max(1, math.round(m.toDouble / n * ln2).toInt)))
       }
-    writeBloomDir(bloomRows(df, dir, column, bits, hashes), column, v)
+    // probe literals must hash as THIS type — record it with the sets
+    sizing.map { case (m, k) => BloomSets(m, k, schema(column).dataType.catalogString,
+      positions(df, dir, column, m, k)) }
   }
 
-  /** Land a bloom index dir ATOMICALLY ([[Fs.publishDir]]): index writes
-    * happen after the commit point, so a concurrent committer's
-    * incremental maintenance may read the PREVIOUS version's index while
-    * it is being written — with a plain overwrite it could see a
-    * _temporary-only or partial dir. An atomic dir rename means readers
-    * observe either no dir (→ full-rebuild fallback) or a complete one,
-    * never a torn index. */
-  private def writeBloomDir(rows: DataFrame, column: String, v: Long): Unit =
-    Fs.publishDir(bloomDir(column, v))(tmp =>
-      rows.coalesce(1).write.mode("overwrite").parquet(tmp.toString))
-
-  /** Carry a version's bloom index dir to another version (or a clone's
-    * v0) — same complete-or-absent landing as [[writeBloomDir]]. */
-  private def carryBloomDir(src: Path, dest: Path): Unit =
-    if (Files.isDirectory(src)) Fs.publishDir(dest)(Fs.copyTree(src, _))
-
-  private def bloomDir(column: String, v: Long): Path =
-    Paths.get(s"$root/_bloom/$column/v=$v")
-
   /** Densest per-file distinct count of `column` over `df` — the sizing
-    * statistic shared by [[buildBloomFor]]'s auto-sizer and the
-    * incremental adequacy check (one definition, so they cannot
+    * statistic shared by [[buildBloom]]'s auto-sizer and the carry
+    * commit's adequacy check (one definition, so they cannot
     * de-synchronize). None = no rows. */
   private def densestDistinct(df: DataFrame, column: String): Option[Long] = {
     val row = df
@@ -518,157 +641,87 @@ final class VersionedTable(spark: SparkSession, root: String) {
     if (row.isNullAt(0)) None else Some(row.getLong(0))
   }
 
-  /** Per-file bloom position-set rows for `df`'s files in version
-    * directory `dir` (file key relative to it, like the stats table —
-    * nested partition dirs keep their col=value/ prefix). */
-  private def bloomRows(df: DataFrame, dir: String, column: String,
-      bits: Int, hashes: Int): DataFrame = {
-    val positions = array((0 until hashes).map(i =>
+  /** Per-file sorted position sets of `column` over `df`'s files in
+    * version directory `dir` (file key relative to it, like the entry's
+    * records — nested partition dirs keep their col=value/ prefix). */
+  private def positions(df: DataFrame, dir: String, column: String,
+      bits: Int, hashes: Int): Map[String, Seq[Int]] = {
+    val pos = array((0 until hashes).map(i =>
       pmod(xxhash64(col(column), lit(i)), lit(bits)).cast("int")): _*)
-    df
-      .select(VersionedTable.decodedRelFile(Paths.get(dir).getFileName.toString).as("file"),
-        explode(positions).as("pos"))
-      .groupBy("file")
-      .agg(sort_array(collect_set(col("pos"))).as("positions"),
-        lit(bits).as("bits"), lit(hashes).as("hashes"),
-        // probe literals must hash as THIS type — record it in the index
-        lit(df.schema(column).dataType.catalogString).as("coltype"))
+    df.select(VersionedTable.decodedRelFile(Paths.get(dir).getFileName.toString)
+        .as("file"), explode(pos).as("pos"))
+      .groupBy("file").agg(sort_array(collect_set(col("pos"))))
+      .collect().map(r => r.getString(0) -> r.getSeq[Int](1)).toMap
   }
 
-  /** Bloom maintenance for a carry commit ([[append]] /
-    * [[clusterIncremental]] / [[clusterWhere]]): carried files keep their
-    * position-set rows from the previous version's index — only the new
-    * files are scanned, so index upkeep stays ∝ rewritten data, matching
-    * the carry commit's own cost story. The carried rows are only valid
-    * under the SAME (bits, hashes) sizing, so the auto-sized path first
-    * checks adequacy: if the new files' densest distinct count still fits
-    * the prior sizing's capacity (n* = m·ln2/k), the prior parameters are
-    * kept; if a new file outgrows them (rare — capacity grows with the
-    * densest file ever seen), fall back to a full [[buildBloomFor]]
-    * rebuild, the exact behavior a fixed-size index must avoid and an
-    * auto-sized one must have (a saturated filter prunes nothing). */
-  private def maintainBloomIndexesIncremental(prev: Long, next: Long,
-      nextDir: String, carriedRel: Set[String]): Unit = {
-    import spark.implicits._
-    val configs = bloomConfigs
-    if (configs.isEmpty) return
-    // loop invariants hoisted: one schema read + one file walk per commit,
-    // not per indexed column
-    val dir = Paths.get(nextDir).toAbsolutePath.toString
-    val nextCols = spark.read.parquet(dir).columns.toSet
-    val newRel = Fs.dataFiles(Paths.get(dir)).filterNot(carriedRel)
-    configs.foreach { case (c, b0, h0, fpp) =>
-      if (nextCols.contains(c)) {
-        val prevIdx = bloomDir(c, prev)
-        // the prev index may be mid-write by the previous committer or
-        // mid-delete by a concurrent vacuum; its WRITES are atomic (dir
-        // rename), so the only failure shape is absence — but guard the
-        // read anyway and fall back to a full rebuild from the committed
-        // data, which is always correct
-        def incremental(): Boolean =
-          try {
-            if (!Files.isDirectory(prevIdx)) return false
-            val prior = spark.read.parquet(prevIdx.toString)
-            if (newRel.isEmpty) {
-              // pure carry (e.g. clusterWhere matched nothing new): the
-              // prior rows for surviving files ARE the next index
-              writeBloomDir(prior
-                .join(carriedRel.toSeq.toDF("file"), Seq("file"), "left_semi"),
-                c, next)
-              return true
-            }
-            val newDf = spark.read.option("basePath", dir)
-              .parquet(newRel.map(r => s"$dir/$r"): _*)
-            val sized = prior.select("bits", "hashes").limit(1).collect()
-              .headOption.map(h => (h.getInt(0), h.getInt(1)))
-            val fixedOk = b0 > 0 && h0 > 0 && sized.contains((b0, h0))
-            val autoOk = b0 == 0 && sized.exists { case (m, k) =>
-              densestDistinct(newDf, c)
-                .forall(_ <= math.floor(m * math.log(2) / k).toLong)
-            }
-            if (!fixedOk && !autoOk) return false
-            val (m, k) = sized.get
-            writeBloomDir(
-              bloomRows(newDf, dir, c, m, k).unionByName(prior
-                .join(carriedRel.toSeq.toDF("file"), Seq("file"), "left_semi")),
-              c, next)
-            true
-          } catch {
-            // index writes are atomic, but a concurrent vacuum can still
-            // delete the prev dir between listing and read, which fails
-            // at execution time, not analysis — any failure here falls
-            // back to the full rebuild from committed data, which is
-            // always correct
-            case scala.util.control.NonFatal(_) => false
-          }
-        if (!incremental()) buildBloomFor(dir, next, c, b0, h0, fpp)
-      }
-    }
+  private def bloomSetsDir(dir: String): Path = Paths.get(dir, "_bloomsets")
+
+  private def bloomSetsPath(dir: String, column: String): Path =
+    bloomSetsDir(dir).resolve(column)
+
+  /** Sidecars are replaced atomically ([[Fs.writeAtomic]]): an index
+    * built onto a committed head is visible complete or not at all. */
+  private def writeBloomSets(dir: String, column: String, sets: BloomSets): Unit =
+    Fs.writeAtomic(bloomSetsPath(dir, column), sets.json)
+
+  /** `column`'s position sets in version directory `dir`, if indexed (a
+    * concurrent vacuum deleting the directory reads as unindexed). */
+  private def readBloomSets(dir: String, column: String): Option[BloomSets] =
+    try Some(BloomSets.parse(Files.readString(bloomSetsPath(dir, column))))
+    catch { case _: java.nio.file.NoSuchFileException => None }
+
+  /** Every position-set sidecar in version directory `dir`, by column. */
+  private def bloomSetsIn(dir: String): Seq[(String, BloomSets)] = {
+    val d = bloomSetsDir(dir)
+    if (!Files.isDirectory(d)) return Nil
+    val s = Files.list(d)
+    val cols = try s.iterator().asScala.map(_.getFileName.toString)
+      .filterNot(_.startsWith(".")).toVector.sorted // in-flight temps
+    finally s.close()
+    cols.flatMap(c => readBloomSets(dir, c).map(c -> _))
   }
 
-  /** Bloom indexes available for version `v`: column → (index df, bits,
-    * hashes, column catalog type). A zero-row index (explicitly sized
-    * build over an empty version) contributes nothing — stats-only
-    * pruning still applies. */
-  private def bloomIndexes(v: Long): Map[String, (DataFrame, Int, Int, String)] = {
-    val dir = Paths.get(s"$root/_bloom")
-    if (!Files.isDirectory(dir)) return Map.empty
-    val cols = {
-      val s = Files.list(dir)
-      try s.iterator().asScala.toSeq.filter(c =>
-        Files.isDirectory(Paths.get(s"$c/v=$v")))
-      finally s.close()
-    }
-    cols.flatMap { c =>
-      val df = spark.read.parquet(s"$c/v=$v")
-      df.select("bits", "hashes", "coltype").limit(1).collect().headOption
-        .map(h => c.getFileName.toString ->
-          (df, h.getInt(0), h.getInt(1), h.getString(2)))
-    }.toMap
-  }
+  /** Version `v`'s file records, for specs that inspect them. */
+  private[graft] def fileList(v: Long): Option[FileList] = log(v).files
+
+  /** Version `v`'s position sets of `column`, for specs that inspect them. */
+  private[graft] def bloomSets(v: Long, column: String): Option[BloomSets] =
+    readBloomSets(log.dir(v), column)
 
   /** General predicate-pruned read — [[readWhere]]'s single-column range
     * generalized to arbitrary AND/OR/comparison/IN predicates via
     * [[StatsPruning]] (the Delta DataSkippingReader shape): the predicate
     * is compiled to a file-survival condition over the per-file min/max
-    * stats, only surviving files are scanned, and the predicate itself is
-    * re-applied as the residual row filter. Unsupported predicate shapes
-    * (NOT, IS NULL, functions, col-vs-col) keep their files — pruning is
-    * only ever an optimization, never a correctness dependency. */
+    * stats and bloom position sets, only surviving files are scanned, and
+    * the predicate itself is re-applied as the residual row filter.
+    * Unsupported predicate shapes (NOT, IS NULL, functions, col-vs-col)
+    * keep their files — pruning is only ever an optimization, never a
+    * correctness dependency. */
   def readFiltered(predicate: String, versionAsOf: Option[Long] = None): DataFrame = {
     val lg = log
     val v = versionAsOf.getOrElse(
       lg.latest.getOrElse(sys.error(s"empty table at $root")))
-    val residual = expr(predicate)
-    val dir = lg.dir(v)
-    val sd = s"$dir/_stats"
-    if (!Files.exists(Paths.get(sd))) return readAt(lg, v).filter(residual)
-    val stats = spark.read.parquet(sd)
-    if (!stats.columns.contains("mins")) return readAt(lg, v).filter(residual)
-    val statCols = stats.select("mins.*").schema.fields
-      .map(f => f.name -> f.dataType).toMap
-    // left-join each bloom index's position sets onto the stats rows
-    // (NULL positions = unindexed file = conservatively kept by the probe)
-    val blooms = bloomIndexes(v)
-    val statsWithBloom = blooms.foldLeft(stats) {
-      case (acc, (c, (bdf, _, _, _))) =>
-        acc.join(
-          bdf.select(col("file"), col("positions").as(s"__bloom_$c")),
-          Seq("file"), "left")
-    }
-    val bloomMeta: StatsPruning.BloomMeta =
-      blooms.map { case (c, (_, bits, hashes, tpe)) => c -> (bits, hashes, tpe) }
-    val files = statsWithBloom
-      .filter(StatsPruning.survives(spark, predicate, statCols, bloomMeta))
-      .select("file").collect().map(r => s"$dir/${r.getString(0)}").toSeq
-    if (files.isEmpty) readAt(lg, v).filter(residual).filter(lit(false))
-    else applyDeletes(
-      spark.read.option("basePath", dir).parquet(files: _*), lg(v)).filter(residual)
+    readFiles(lg, v, filteredFiles(lg(v), predicate)).filter(expr(predicate))
   }
+
+  /** [[readFiltered]]'s pruning: the files of `c` that `predicate` may
+    * match, judged from the entry's records and every position-set
+    * sidecar of its directory. */
+  private def filteredFiles(c: Commit, predicate: String): Option[Seq[String]] = {
+    val blooms = bloomSetsIn(dirOf(c))
+    val meta: StatsPruning.BloomMeta =
+      blooms.map { case (col, b) => col -> (b.bits, b.hashes, b.colType) }.toMap
+    survivors(c, blooms)(types => Some(StatsPruning.survives(spark, predicate, types, meta)))
+  }
+
+  /** [[readFiltered]]'s pruning of version `v`, for specs that count its
+    * Spark jobs. */
+  private[graft] def filteredFiles(predicate: String, v: Long): Option[Seq[String]] =
+    filteredFiles(log(v), predicate)
 
   /** SHALLOW CLONE (Delta `CREATE TABLE ... SHALLOW CLONE src`): a new
     * table whose v0 log entry POINTS AT the source head's data files
-    * (and stats) instead of copying them — metadata-only, O(1) data
+    * (with their records and position sets) instead of copying them — metadata-only, O(1) data
     * movement. The clone then evolves independently: its own writes land
     * under its own root. Like Delta, VACUUMing the source invalidates
     * clones that still reference the shared files ([[vacuum]] only ever
@@ -684,26 +737,22 @@ final class VersionedTable(spark: SparkSession, root: String) {
     val dest = new VersionedTable(spark, destRoot)
     require(dest.versions.isEmpty, s"clone target $destRoot is not empty")
     // delete predicates travel with the clone (its v0 must read the same
-    // logical rows as the source head); its stats sit in the shared dir.
-    // No change feed: the source's feed belongs to the source's version.
+    // logical rows as the source head), and so do the file records; the
+    // position sets sit in the shared dir. No change feed: the source's
+    // feed belongs to the source's version.
     val claimed = dest.publishVersion(
       Commit(0L, s"clone_of:$root@v${src.version}", src.rows,
         Paths.get(dir).toAbsolutePath.toString,
         deletePredicates = src.deletePredicates,
-        partitionBy = src.partitionBy), None)
+        partitionBy = src.partitionBy, files = src.files))
     require(claimed, s"clone target $destRoot is not empty")
     // table metadata travels with the clone: CHECK constraints keep
-    // enforcing on the clone's own commits (Delta CLONE copies properties)
+    // enforcing on the clone's own commits (Delta CLONE copies properties),
+    // and bloom registrations keep maintaining its indexes
     if (Files.exists(constraintsPath))
       Files.copy(constraintsPath, Paths.get(destRoot, "_constraints"))
-    // bloom registrations too, plus the head's tiny position sets (the
-    // clone's v0 reads the same files, so the index is valid as-is)
-    if (Files.isDirectory(bloomConfigDir)) {
+    if (Files.isDirectory(bloomConfigDir))
       Fs.copyTree(bloomConfigDir, dest.bloomConfigDir)
-      bloomConfigs.foreach { case (c, _, _, _) =>
-        carryBloomDir(bloomDir(c, src.version), dest.bloomDir(c, 0L))
-      }
-    }
     dest
   }
 
@@ -724,9 +773,8 @@ final class VersionedTable(spark: SparkSession, root: String) {
       mergeSchema: Boolean = false,
       overwriteSchema: Boolean = false,
       partitionBy: Seq[String] = Seq.empty): Long = {
-    commit(df, operation, stageFeed = Some(diffFeed(df, keyCols, commitTs)),
-      commitTs = Some(commitTs), partitionBy = partitionBy,
-      mergeSchema = mergeSchema, overwriteSchema = overwriteSchema)
+    commit(df, operation, Some(commitTs), Some(diffFeed(df, keyCols, commitTs)),
+      append = false, partitionBy, mergeSchema, overwriteSchema)
   }
 
   /** [[writeWithChangeFeed]]'s feed: the keyed diff of the staged
@@ -734,21 +782,23 @@ final class VersionedTable(spark: SparkSession, root: String) {
     * without a lock: version N-1 is immutable once committed, and this
     * attempt only commits if it wins N. */
   private def diffFeed(df: DataFrame, keyCols: Seq[String],
-      commitTs: String): FeedStager = { (lg, next, stagedDir) =>
-    // Diff from the STAGED parquet, not `df`: the incoming snapshot was
-    // just materialized by the data write, and re-using `df` here would
-    // re-execute its entire upstream pipeline a second time (at 100 TB,
-    // the full ingest transform) just to derive the feed. Partition-dir
-    // type inference can retype partition columns on read-back, so the
-    // snapshot is re-cast to df's declared schema before diffing.
-    val staged = spark.read.option("basePath", stagedDir).parquet(stagedDir)
-      .select(df.schema.fields.toIndexedSeq
-        .map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
+      commitTs: String): FeedStager = { (lg, next, stage) =>
+    val staged = stagedRows(df, stage)
     val feed =
       if (next == 0L) graft.ops.ChangeFeed.allInserts(staged)
       else graft.ops.ChangeFeed.diff(readAt(lg, next - 1), staged, keyCols)
-    writeFeed(feed, next, commitTs, stagedDir)
+    writeFeed(feed, next, commitTs, stage.dir)
   }
+
+  /** A feed's source: the STAGED batch, not `df` — the incoming rows were
+    * just materialized by the data write, and re-using `df` would
+    * re-execute its entire upstream pipeline a second time (at 100 TB,
+    * the full ingest transform) just to derive the feed. Partition-dir
+    * type inference can retype partition columns on read-back, so the
+    * rows are re-cast to df's declared schema. */
+  private def stagedRows(df: DataFrame, stage: Stage): DataFrame =
+    stage.frame.select(df.schema.fields.toIndexedSeq
+      .map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
 
   /** Stamp a feed with its commit version/timestamp and write it into
     * the staged version directory. */
@@ -789,14 +839,18 @@ final class VersionedTable(spark: SparkSession, root: String) {
       lg.latest.getOrElse(sys.error(s"empty table at $root"))))
   }
 
-  private def readAt(lg: Log, v: Long): DataFrame = {
-    // a vacuumed version stays in the log (audit trail) but its data
-    // is gone — fail with the actual cause, not a parquet path error
+  private def readAt(lg: Log, v: Long): DataFrame =
+    applyDeletes(spark.read.parquet(readableDir(lg, v)), lg(v))
+
+  /** Version `v`'s directory. A vacuumed version stays in the log (audit
+    * trail) but its data is gone — fail with the actual cause, not a
+    * parquet path error. */
+  private def readableDir(lg: Log, v: Long): String = {
     def readable(c: Commit) = Files.isDirectory(Paths.get(dirOf(c)))
     require(readable(lg(v)),
       s"version $v of $root was vacuumed; earliest readable version is " +
         s"${lg.commits.filter(readable).map(_.version).minOption.getOrElse("none")}")
-    applyDeletes(spark.read.parquet(lg.dir(v)), lg(v))
+    lg.dir(v)
   }
 
   /** Apply a version's stored delete predicates (see [[deleteWhere]]).
@@ -811,36 +865,26 @@ final class VersionedTable(spark: SparkSession, root: String) {
     * the commit costs one counting scan regardless of table size (the
     * 100 TB GDPR-delete story: O(metadata), not O(data)). Chained deletes
     * accumulate predicates; a later [[compact]] (or any full write)
-    * materializes them physically. Predicates must be deterministic and
-    * use single quotes only. Not CDC-visible — use [[writeWithChangeFeed]]
+    * materializes them physically. Predicates must be deterministic. Not
+    * CDC-visible — use [[writeWithChangeFeed]]
     * when downstream consumers need delete rows in the feed. */
-  def deleteWhere(condition: String, commitTs: Option[String] = None): Long = {
-    require(!condition.contains("\"") && !condition.contains("]"),
-      "delete predicates use single quotes and no ']'")
+  def deleteWhere(condition: String, commitTs: Option[String] = None): Long =
     retrying("deleteWhere of") {
       val base = log.commits.lastOption.getOrElse(sys.error(s"empty table at $root"))
-      val v = base.version
-      val next = v + 1
+      val next = base.version + 1
       val rows = applyDeletes(spark.read.parquet(dirOf(base)), base)
         .filter(!coalesce(expr(condition), lit(false))).count()
       // the new version references the head's directory as-is (no new
-      // dir, no feed); the commit timestamp is recorded like write()
-      // does — without it a readAsOf(ts) after the delete resolves to the
-      // last ts-bearing PRE-delete version and resurrects deleted rows
+      // dir, no feed): the same files, so the same records and position
+      // sets stay valid — deleteWhere stays O(metadata). The commit
+      // timestamp is recorded like write() does — without it a
+      // readAsOf(ts) after the delete resolves to the last ts-bearing
+      // PRE-delete version and resurrects deleted rows
       val entry = Commit(next, "delete_where", rows, base.location, ts = commitTs,
         deletePredicates = base.deletePredicates :+ condition,
-        partitionBy = base.partitionBy)
-      Option.when(publishVersion(entry, None)) {
-        // the new head references the SAME files — position sets stay
-        // valid, so carry them forward instead of an O(data) rebuild
-        // (deleteWhere must stay O(metadata))
-        bloomConfigs.foreach { case (c, _, _, _) =>
-          carryBloomDir(bloomDir(c, v), bloomDir(c, next))
-        }
-        next
-      }
+        partitionBy = base.partitionBy, files = base.files)
+      Option.when(publishVersion(entry))(next)
     }
-  }
 
   /** TIMESTAMP AS OF time travel (S6): the latest version whose recorded
     * commit timestamp is <= `timestamp` (`yyyy-MM-dd HH:mm:ss` — the
@@ -930,7 +974,7 @@ final class VersionedTable(spark: SparkSession, root: String) {
     * via hard links (the local analogue of Delta OPTIMIZE keeping the
     * untouched add-file entries in its log — on an object store this is
     * a metadata copy, no data motion), and those files' data-skipping
-    * stats rows carry forward WITHOUT re-scanning. Rewrite + stats cost
+    * records carry forward WITHOUT re-scanning. Rewrite + stats cost
     * ∝ matched partitions, not table size — what makes a nightly
     * OPTIMIZE affordable on a 100 TB table where only yesterday's
     * partition changed.
@@ -969,99 +1013,21 @@ final class VersionedTable(spark: SparkSession, root: String) {
         .toSet
       if (matchedRel.isEmpty) Some(head)
       else {
-        val carriedRel = Fs.dataFiles(Paths.get(dir)).filterNot(matchedRel)
-        val (name, stage) = newVersionDir(head + 1)
         val keys = (parts ++ cols).map(col)
-        base.filter(expr(predicate))
+        val stage = new Stage(head + 1, base.filter(expr(predicate))
           .repartitionByRange(numFiles, keys: _*)
-          .sortWithinPartitions(keys: _*)
-          .write.mode("overwrite").partitionBy(parts: _*).parquet(stage)
-        commitWithCarry(lg, name, stage, carriedRel, "cluster_where", parts)
+          .sortWithinPartitions(keys: _*), parts, Some(base.schema))
+        publishStage(lg, stage, Fs.dataFiles(Paths.get(dir)).filterNot(matchedRel),
+          "cluster_where", None, None).orElse { stage.delete(); None }
       }
     }
-  }
-
-  /** Shared tail of every partial-rewrite commit ([[clusterWhere]],
-    * [[append]], [[clusterIncremental]]) onto the head of `lg`: freshly
-    * written files are already in the staged version directory `stage`
-    * (named `name`); `carriedRel` files of the head hard-link in
-    * byte-identical (copy is the cross-device fallback) with their stats
-    * rows riding forward from the head's stats table — ONE stats scan
-    * over the new files only, never the carried data. Commits through
-    * [[publishVersion]]; returns None if the head moved (caller
-    * re-derives its file sets against the new head and retries). */
-  private def commitWithCarry(lg: Log, name: String, stage: String,
-      carriedRel: Seq[String], operation: String, parts: Seq[String],
-      commitTs: Option[String] = None,
-      stageFeed: Option[(Long, String, Seq[String]) => Unit] = None): Option[Long] = {
-    import spark.implicits._
-    val head = lg.latest.get
-    val dir = Paths.get(lg.dir(head)).toAbsolutePath.toString
-    val next = head + 1
-    // read the staged batch under the HEAD's read-back schema, so
-    // partition-dir type inference on the batch's own values cannot give
-    // the new stats a different schema than the carried rows (the require
-    // below stays as the backstop for shapes a declared schema can't fix)
-    val headSchema = spark.read.parquet(dir).schema
-    // capture the freshly WRITTEN files before carried links join them in
-    // the same dir — a feed must derive from the new rows only
-    val stagedData = Paths.get(stage).toAbsolutePath
-    val newFilesAbs = Fs.dataFiles(stagedData).map(r => s"$stagedData/$r")
-    val rewrittenRows =
-      writeStats(stage, name, s"$stage/_stats_new", Some(headSchema))
-    val carriedStats = spark.read.parquet(s"$dir/_stats")
-      .join(carriedRel.toDF("file"), Seq("file"), "left_semi")
-      .localCheckpoint(true)
-    val carriedRows = carriedStats.agg(coalesce(sum(col("cnt")), lit(0L)))
-      .collect()(0).getLong(0)
-    val newStats = spark.read.parquet(s"$stage/_stats_new")
-    // fail LOUDLY if partition-dir type inference gave the staged batch a
-    // different stats schema than the head's (e.g. a string partition
-    // column whose batch values are all-numeric infers int): a silent
-    // unionByName coercion would mix orderings inside the min/max structs
-    // and readWhere pruning on that column could drop matching files
-    if (carriedRel.nonEmpty)
-      require(newStats.schema == carriedStats.schema,
-        s"stats schema drift on $root (partition-dir type inference?): " +
-          s"staged ${newStats.schema.simpleString} vs head " +
-          s"${carriedStats.schema.simpleString}")
-    newStats.unionByName(carriedStats)
-      .coalesce(1).write.mode("overwrite").parquet(s"$stage/_stats")
-    Fs.deleteTree(Paths.get(s"$stage/_stats_new"))
-    carriedRel.foreach { rel =>
-      val src = Paths.get(dir, rel)
-      val dst = Paths.get(stage, rel)
-      Files.createDirectories(dst.getParent)
-      // the carry runs concurrently with everything: a concurrent vacuum
-      // can delete the head dir mid-carry. Surface that as what it is —
-      // the copy fallback below would otherwise rethrow the same
-      // NoSuchFileException as an opaque crash (vacuum keeps versions
-      // referenced by heads, so this only fires on a retention race)
-      try Files.createLink(dst, src)
-      catch {
-        case e: java.nio.file.NoSuchFileException =>
-          Fs.deleteTree(stagedData)
-          throw new IllegalStateException(
-            s"head version $head of $root was vacuumed while its files " +
-              s"were being carried into version $next ($rel); retry the " +
-              "commit against the new head", e)
-        case _: UnsupportedOperationException | _: java.nio.file.FileSystemException =>
-          Files.copy(src, dst)
-      }
-    }
-    stageFeed.foreach(f => f(next, stage, newFilesAbs))
-    val won = publishVersion(Commit(next, operation, rewrittenRows + carriedRows,
-      name, ts = commitTs, feed = stageFeed.isDefined, partitionBy = parts),
-      Some(stage))
-    if (won) maintainBloomIndexesIncremental(head, next, stage, carriedRel.toSet)
-    Option.when(won)(next)
   }
 
   /** Append-only commit (Delta `mode("append")` — the reference's Bronze
     * posture, "append-only: never update or delete",
     * docs/ARCHITECTURE.md:104-108): ONLY the incoming rows are written
     * and scanned; every head file carries into the new version
-    * byte-identical via hard links with its stats row riding forward.
+    * byte-identical via hard links with its record riding forward.
     * Commit cost is ∝ appended data, not table size — the 100 TB
     * ingestion path ([[write]] is a full-snapshot rewrite by contrast;
     * on an object store the links are the log's carried add-file
@@ -1071,76 +1037,34 @@ final class VersionedTable(spark: SparkSession, root: String) {
     * logical-delete predicates — carried files cannot materialize
     * version-wide predicates, the [[clusterWhere]] rule). A partitioned
     * head keeps its layout: appended rows land in their own
-    * `col=value/` dirs. Empty table → plain [[write]]. Not CDC-visible
+    * `col=value/` dirs; an empty batch commits nothing and returns the
+    * head. Empty table → the batch is v0. Not CDC-visible
     * (the [[deleteWhere]] convention) — [[appendWithChangeFeed]] stages
     * the pure-insert feed when downstream consumers read the feed. */
   def append(df: DataFrame, operation: String = "append",
       commitTs: Option[String] = None): Long =
-    appendImpl(df, operation, commitTs, stageFeed = None)
+    commit(df, operation, commitTs, feed = None, append = true)
 
   /** [[append]] with Delta-CDF parity: an appended version's feed is its
     * own rows, all `insert` — derived from the freshly STAGED files only
     * (never a diff join against the head, never a re-execution of `df`'s
     * upstream), so the feed costs one scan of the appended data. Feed
     * and data become visible atomically, like [[writeWithChangeFeed]].
-    * Empty table → all-insert v0 via [[writeWithChangeFeed]]. */
+    * Empty table → an all-insert v0. */
   def appendWithChangeFeed(df: DataFrame, operation: String = "append",
       commitTs: String = "2001-09-01 00:00:00"): Long =
-    appendImpl(df, operation, Some(commitTs), stageFeed = Some {
-      (next, stagedDir, newFiles) =>
-        val staged = spark.read
-          .option("basePath", stagedDir)
-          .parquet(newFiles: _*)
-          .select(df.schema.fields.toIndexedSeq
-            .map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
-        writeFeed(graft.ops.ChangeFeed.allInserts(staged), next, commitTs, stagedDir)
+    commit(df, operation, Some(commitTs), append = true, feed = Some {
+      (_, next, stage) =>
+        writeFeed(graft.ops.ChangeFeed.allInserts(stagedRows(df, stage)), next,
+          commitTs, stage.dir)
     })
-
-  private def appendImpl(df: DataFrame, operation: String,
-      commitTs: Option[String],
-      stageFeed: Option[(Long, String, Seq[String]) => Unit]): Long = {
-    validateConstraints(df)
-    retrying("append to") {
-      val lg = log
-      lg.commits.lastOption match {
-        case None =>
-          // empty table: this attempt is a full write of v0 (all-insert
-          // feed when one is staged). Two appends that both see an empty
-          // table cannot both land there — the loser's put-if-absent
-          // fails, it returns None, and its retry takes the carry path
-          // onto the winner's head, so no appended rows are dropped.
-          commitOnce(lg, df, operation,
-            stageFeed.map(_ => diffFeed(df, Seq.empty,
-              commitTs.getOrElse("2001-09-01 00:00:00"))),
-            commitTs, Seq.empty, mergeSchema = false, overwriteSchema = false)
-        case Some(hc) =>
-          enforceSchema(lg, df, mergeSchema = false, overwriteSchema = false)
-          require(hc.deletePredicates.isEmpty,
-            s"append on a logical-delete head of $root: compact() first " +
-              "to materialize the delete predicates")
-          val parts = hc.partitionBy
-          val (name, stage) = newVersionDir(hc.version + 1)
-          val w = df.write.mode("overwrite")
-          (if (parts.nonEmpty) w.partitionBy(parts: _*) else w).parquet(stage)
-          // an empty batch on a partitioned head stages ZERO files (the
-          // dynamic-partition writer creates files per row): appending
-          // nothing is a no-op, not a new version — and the schema-less
-          // staged read below could not even infer a stats schema
-          if (Fs.dataFiles(Paths.get(stage)).isEmpty) {
-            Fs.deleteTree(Paths.get(stage))
-            Some(hc.version)
-          } else commitWithCarry(lg, name, stage,
-            Fs.dataFiles(Paths.get(dirOf(hc))), operation, parts, commitTs, stageFeed)
-      }
-    }
-  }
 
   /** Incremental clustering (M7 — liquid-clustering maintenance
     * semantics, the reference's CLUSTER BY table without the full
     * rewrite): re-cluster ONLY the files added since the last clustering
     * commit on the same keys; files already clustered at that commit
     * (identified by name against its file listing) carry byte-identical
-    * with their stats. Each increment is range-compact WITHIN itself:
+    * with their records. Each increment is range-compact WITHIN itself:
     * increments overlap in key range — liquid's actual layout — so
     * min/max skipping stays selective per file while the rewrite cost is
     * ∝ data appended since the last OPTIMIZE, never table size. That is
@@ -1177,16 +1101,16 @@ final class VersionedTable(spark: SparkSession, root: String) {
       else {
         val dir = Paths.get(dirOf(hc)).toAbsolutePath.toString
         val keys = (parts ++ cols).map(col)
-        // read ONLY the unclustered files (basePath keeps partition columns)
-        val fresh = spark.read.option("basePath", dir)
+        // read ONLY the unclustered files, under the head's schema (basePath
+        // keeps partition columns, typed as the carried records have them)
+        val schema = spark.read.parquet(dir).schema
+        val fresh = spark.read.schema(schema).option("basePath", dir)
           .parquet(unclustered.map(r => s"$dir/$r"): _*)
           .repartitionByRange(numFiles, keys: _*)
           .sortWithinPartitions(keys: _*)
-        val (name, stage) = newVersionDir(head + 1)
-        val w = fresh.write.mode("overwrite")
-        (if (parts.nonEmpty) w.partitionBy(parts: _*) else w).parquet(stage)
-        commitWithCarry(lg, name, stage, clusteredRel.toVector.sorted, marker,
-          parts)
+        val stage = new Stage(head + 1, fresh, parts, Some(schema))
+        publishStage(lg, stage, clusteredRel.toVector.sorted, marker, None, None)
+          .orElse { stage.delete(); None }
       }
     }
   }
@@ -1207,8 +1131,8 @@ final class VersionedTable(spark: SparkSession, root: String) {
 
   /** VACUUM (M4): physically delete the version directories older than
     * the last `keepLast` commits (the log keeps the audit trail). A
-    * directory holds its version's data, stats and change feed, so all
-    * three go together. Reference-counted: a dir is deleted only if (a)
+    * directory holds its version's data, position sets and change feed,
+    * so all three go together. Reference-counted: a dir is deleted only if (a)
     * it lives under THIS table's root — a shallow clone's externally
     * located versions are never touched — and (b) no kept version still
     * references it (a deleteWhere head referencing an old version's
@@ -1244,13 +1168,7 @@ final class VersionedTable(spark: SparkSession, root: String) {
       Fs.writeAtomic(VersionedTable.feedTombstone(root),
         math.max(prev, droppedFeeds.max).toString)
     }
-    removed.foreach { c =>
-      Fs.deleteTree(abs(c))
-      // bloom indexes are per-version derivatives of the removed data
-      bloomConfigs.foreach { case (col, _, _, _) =>
-        Fs.deleteTree(bloomDir(col, c.version))
-      }
-    }
+    removed.foreach(c => Fs.deleteTree(abs(c)))
     // crashed or losing writers' leftovers — a version dir no entry
     // names, a temp entry — but never an IN-FLIGHT writer's: only
     // reclaim what is untouched in its ENTIRE subtree for over an hour
@@ -1325,68 +1243,140 @@ object VersionedTable {
 
   // ---- the log format: read and written here and nowhere else ----
 
+  /** One data file of a version: its path relative to the version
+    * directory, its row count, and per stat column its min and max
+    * (absent: the file holds no non-null value of that column). */
+  private[graft] final case class DataFile(path: String, rows: Long,
+      min: Map[String, Any], max: Map[String, Any])
+
+  /** A version's data files with their pruning statistics; `columns` are
+    * the stat columns with their types, in schema order. */
+  private[graft] final case class FileList(columns: Seq[(String, DataType)],
+      files: Vector[DataFile])
+
   /** One committed version — one `_log/<N>.json` entry. `location` is
     * the directory holding the version's files: root-relative, or
     * absolute for a shallow clone's shared v0. `feed`: the version
-    * staged its own change feed in that directory. */
-  private[maint] final case class Commit(
+    * staged its own change feed in that directory. `files`: its data
+    * files with their stats (None: an entry written before entries
+    * listed them — readers then scan every file). */
+  private[graft] final case class Commit(
       version: Long, operation: String, rows: Long, location: String,
       ts: Option[String] = None,
       feed: Boolean = false,
       deletePredicates: Seq[String] = Nil,
-      partitionBy: Seq[String] = Nil) {
+      partitionBy: Seq[String] = Nil,
+      files: Option[FileList] = None) {
 
-    /** The ONE entry serializer. Every commit path writes entries; the
-      * regex parser is field-order-independent, but hand-rolled copies
-      * had already drifted comma conventions between sites — a new field
-      * gets added here or nowhere. */
+    /** The ONE entry serializer; [[Commit.parse]] is its inverse. One
+      * line of JSON, so any string round-trips (quotes, brackets, line
+      * breaks are escaped). */
     def json: String = {
-      // the ONE serializer is also the ONE validator: the regex parser
-      // does no unescaping, so a '"' in any string field would break
-      // the entry, and strList's [^\]]* would silently truncate a list
-      // element containing ']' (e.g. tags[1]) — logically deleted rows
-      // would resurrect on read. A raw line break is not valid inside a
-      // JSON string either. Reject all three at write time, loudly.
-      val strFields = Seq(operation, location) ++ ts ++ deletePredicates ++ partitionBy
-      require(strFields.forall(s => !s.contains("\"")),
-        s"log string fields must not contain '\"' (unescaped format): $strFields")
-      require(strFields.forall(s => !s.exists(c => c == '\n' || c == '\r')),
-        s"log string fields must not contain line breaks: $strFields")
-      require((deletePredicates ++ partitionBy).forall(s => !s.contains("]")),
-        "log list elements must not contain ']' (regex list parser " +
-          s"would truncate): ${deletePredicates ++ partitionBy}")
-      val sb = new StringBuilder(
-        s"""{"version":$version,"operation":"$operation","rows":$rows""")
-      sb.append(s""","location":"$location"""")
-      ts.foreach(t => sb.append(s""","ts":"$t""""))
-      if (feed) sb.append(""","feed":true""")
+      val o = Json.createObjectNode()
+        .put("version", version).put("operation", operation).put("rows", rows)
+        .put("location", location)
+      ts.foreach(t => o.put("ts", t))
+      if (feed) o.put("feed", true)
       if (deletePredicates.nonEmpty)
-        sb.append(deletePredicates.map(p => s""""$p"""")
-          .mkString(""","deletePredicates":[""", ",", "]"))
-      if (partitionBy.nonEmpty)
-        sb.append(partitionBy.map(c => s""""$c"""")
-          .mkString(""","partitionBy":[""", ",", "]"))
-      sb.append("}\n").toString
+        deletePredicates.foldLeft(o.putArray("deletePredicates"))(_.add(_))
+      if (partitionBy.nonEmpty) partitionBy.foldLeft(o.putArray("partitionBy"))(_.add(_))
+      files.foreach { fl =>
+        val cols = o.putObject("statColumns")
+        fl.columns.foreach { case (c, t) => cols.put(c, t.catalogString) }
+        val arr = o.putArray("files")
+        fl.files.foreach { f =>
+          val fo = arr.addObject().put("path", f.path).put("rows", f.rows)
+          Seq("min" -> f.min, "max" -> f.max).foreach { case (k, bounds) =>
+            val bo = fo.putObject(k)
+            fl.columns.foreach { case (c, t) =>
+              bounds.get(c).foreach(v => bo.replace(c, statToJson(v, t)))
+            }
+          }
+        }
+      }
+      Json.writeValueAsString(o) + "\n"
     }
   }
 
-  private def parse(entry: String): Commit = {
-    // {"version":N,"operation":"...","rows":N,"location":"..."[,"ts":"...",
-    //  "feed":true,"deletePredicates":["...",...],"partitionBy":["...",...]]}
-    def str(field: String): Option[String] =
-      s""""$field":"([^"]*)"""".r.findFirstMatchIn(entry).map(_.group(1))
-    def num(field: String): Long =
-      s""""$field":(\\d+)""".r.findFirstMatchIn(entry).get.group(1).toLong
-    def strList(field: String): Seq[String] =
-      (s""""$field":\\[([^\\]]*)\\]""").r.findFirstMatchIn(entry)
-        .map(_.group(1)).filter(_.nonEmpty)
-        .map(_.split("\",\"").map(_.stripPrefix("\"").stripSuffix("\"")).toSeq)
-        .getOrElse(Seq.empty)
-    Commit(num("version"), str("operation").get, num("rows"), str("location").get,
-      str("ts"), entry.contains(""""feed":true"""),
-      strList("deletePredicates"), strList("partitionBy"))
+  private[graft] object Commit {
+    def parse(entry: String): Commit = {
+      val n = Json.readTree(entry)
+      def strs(f: String) = Option(n.get(f)).toSeq.flatMap(_.asScala.map(_.asText))
+      val files = Option(n.get("files")).map { fs =>
+        val cols = n.get("statColumns").properties().asScala.toSeq
+          .map(e => e.getKey -> DataType.fromDDL(e.getValue.asText))
+        def bounds(o: JsonNode) = cols.collect {
+          case (c, t) if o.has(c) => c -> statFromJson(o.get(c), t)
+        }.toMap
+        FileList(cols, fs.asScala.toVector.map(f => DataFile(f.get("path").asText,
+          f.get("rows").asLong, bounds(f.get("min")), bounds(f.get("max")))))
+      }
+      Commit(n.get("version").asLong, n.get("operation").asText, n.get("rows").asLong,
+        n.get("location").asText, Option(n.get("ts")).map(_.asText),
+        Option(n.get("feed")).exists(_.asBoolean), strs("deletePredicates"),
+        strs("partitionBy"), files)
+    }
   }
 
+  private val Json = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** A stat value as JSON, exact for its type and independent of the JVM
+    * time zone: integral types as numbers, floating point and decimals
+    * as their exact decimal text, dates as ISO days, timestamps as ISO
+    * instants, timestamp_ntz as ISO local date-times. */
+  private def statToJson(v: Any, t: DataType): JsonNode = {
+    val n = com.fasterxml.jackson.databind.node.JsonNodeFactory.instance
+    (t, v) match {
+      case (BooleanType, b: Boolean) => n.booleanNode(b)
+      case (ByteType | ShortType | IntegerType | LongType, x: Number) =>
+        n.numberNode(x.longValue)
+      case (_: DecimalType, d: java.math.BigDecimal) => n.textNode(d.toPlainString)
+      case (DateType, d: java.sql.Date) => n.textNode(d.toLocalDate.toString)
+      case (TimestampType, ts: java.sql.Timestamp) => n.textNode(ts.toInstant.toString)
+      case (_, x) => n.textNode(x.toString) // strings, floats, java.time values
+    }
+  }
+
+  private def statFromJson(n: JsonNode, t: DataType): Any = t match {
+    case BooleanType => n.booleanValue
+    case ByteType => n.asLong.toByte
+    case ShortType => n.asLong.toShort
+    case IntegerType => n.asLong.toInt
+    case LongType => n.asLong
+    case FloatType => n.asText.toFloat
+    case DoubleType => n.asText.toDouble
+    case _: DecimalType => new java.math.BigDecimal(n.asText)
+    case DateType => java.sql.Date.valueOf(java.time.LocalDate.parse(n.asText))
+    case TimestampType => java.sql.Timestamp.from(java.time.Instant.parse(n.asText))
+    case TimestampNTZType => java.time.LocalDateTime.parse(n.asText)
+    case _ => n.asText
+  }
+
+  /** One bloom index's per-file position sets for a version directory:
+    * m bits, k probes, the indexed column's catalog type (probe literals
+    * hash as this type — see [[StatsPruning]]), and each indexed file's
+    * sorted set positions, keyed like the entry's file records. */
+  private[graft] final case class BloomSets(bits: Int, hashes: Int, colType: String,
+      files: Map[String, Seq[Int]]) {
+    def json: String = {
+      val o = Json.createObjectNode()
+        .put("bits", bits).put("hashes", hashes).put("type", colType)
+      val fo = o.putObject("files")
+      files.toSeq.sortBy(_._1).foreach { case (f, ps) =>
+        ps.foldLeft(fo.putArray(f))(_.add(_))
+      }
+      Json.writeValueAsString(o)
+    }
+  }
+
+  private[graft] object BloomSets {
+    def parse(s: String): BloomSets = {
+      val n = Json.readTree(s)
+      BloomSets(n.get("bits").asInt, n.get("hashes").asInt, n.get("type").asText,
+        n.get("files").properties().asScala.map(e =>
+          e.getKey -> e.getValue.asScala.map(_.asInt).toVector).toMap)
+    }
+  }
   private def logDir(root: String): Path = Paths.get(root, "_log")
 
   private def entryPath(root: String, v: Long): Path = logDir(root).resolve(s"$v.json")
@@ -1400,7 +1390,7 @@ object VersionedTable {
     * writer's `.`-prefixed temp never matches the name. */
   private def readLog(root: String): Option[Vector[Commit]] =
     entryNames(root).map(_.map(v =>
-      parse(Files.readString(entryPath(root, v)))))
+      Commit.parse(Files.readString(entryPath(root, v)))))
 
   /** Committed versions, ascending, from the entry NAMES alone (None: no
     * log). */
@@ -1446,17 +1436,16 @@ object VersionedTable {
     * to the aggregation scan). */
   private final class FooterUnsupported extends RuntimeException
 
-  /** Commit-time file statistics derived from the parquet FOOTERS under
-    * `dataDir` — per-file row counts plus min/max for `cols` — as
-    * `Some((totalRows, statsFrame))`, or `None` when any file or column
-    * falls outside the exactly-representable gate (then the caller runs
-    * the one-scan aggregation instead; the two outputs are identical —
-    * VersionedTableSpec pins it).
+  /** Commit-time file records derived from the parquet FOOTERS under
+    * `dataDir` — per-file row counts plus min/max for `cols` — or `None`
+    * when any file or column falls outside the exactly-representable
+    * gate (then the caller runs the one-scan aggregation instead; the two
+    * outputs are identical — VersionedTableSpec pins it).
     *
     * The gate admits only shapes whose chunk statistics reproduce a
     * Spark min/max EXACTLY, because stats here aren't merely advisory
-    * pruning bounds — carry commits union these rows with scan-derived
-    * ones, so the two paths must agree byte-for-byte:
+    * pruning bounds — carry commits join these records with scan-derived
+    * ones in one entry, so the two paths must agree exactly:
     *  - flat files only (a partition dir carries column VALUES in its
     *    path, which footers don't know);
     *  - INT32/INT64-backed ints, longs, dates, decimals (scale-exact),
@@ -1470,7 +1459,7 @@ object VersionedTable {
     *    gate rather than mis-state a bound).
     */
   private[graft] def footerStats(spark: SparkSession, dataDir: String,
-      schema: StructType, cols: Seq[String]): Option[(Long, DataFrame)] = {
+      schema: StructType, cols: Seq[String]): Option[Vector[DataFile]] = {
     import org.apache.parquet.schema.{LogicalTypeAnnotation => LTA}
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     def fail(): Nothing = throw new FooterUnsupported
@@ -1621,27 +1610,13 @@ object VersionedTable {
               }
             }
           }
-          val mins = bounds.zip(cols).map { case (b, c) =>
-            b.map(x => toExternal(x._1, schema(c).dataType)).orNull }
-          val maxs = bounds.zip(cols).map { case (b, c) =>
-            b.map(x => toExternal(x._2, schema(c).dataType)).orNull }
-          (cnt,
-            if (cols.isEmpty) org.apache.spark.sql.Row(rel, cnt)
-            else org.apache.spark.sql.Row(rel, cnt,
-              org.apache.spark.sql.Row(mins: _*), org.apache.spark.sql.Row(maxs: _*)))
+          def external(end: ((Any, Any)) => Any) = cols.zip(bounds).collect {
+            case (c, Some(b)) => c -> toExternal(end(b), schema(c).dataType)
+          }.toMap
+          DataFile(rel, cnt, external(_._1), external(_._2))
         } finally reader.close()
       }
-      val statFields = cols.map(c => StructField(c, schema(c).dataType, nullable = true))
-      val statsSchema = StructType(
-        Seq(StructField("file", StringType, nullable = false),
-          StructField("cnt", LongType, nullable = false)) ++
-          (if (cols.isEmpty) Seq.empty
-           // struct itself non-null (field values may be) — mirrors the
-           // scan path's struct(min(...)) nullability exactly
-           else Seq(StructField("mins", StructType(statFields), nullable = false),
-             StructField("maxs", StructType(statFields), nullable = false))))
-      Some((perFile.map(_._1).sum,
-        spark.createDataFrame(perFile.map(_._2).asJava, statsSchema)))
+      Some(perFile)
     } catch {
       case _: FooterUnsupported => None
     }

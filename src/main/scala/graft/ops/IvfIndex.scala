@@ -93,8 +93,10 @@ object IvfIndex {
     *      atomic commit instead of a torn two-table window, and the
     *      coarse level derives from distinct gids ([[coarseLevel]]).
     * v9: every index table commits through `_log/<N>.json` entries, one
-    *      directory per version (the `_manifest` layout is gone). */
-  private val FormatVersion = 9
+    *      directory per version (the `_manifest` layout is gone).
+    * v10: entries list each version's data files with their stats, and
+    *      bloom position sets sit in the version directory. */
+  private val FormatVersion = 10
 
   // ---------------------------------------------------------------- shared
   // index DEFINITIONS (also used by the live e4/t30 path via
@@ -260,15 +262,6 @@ object IvfIndex {
         dense_rank().over(Window.partitionBy(col("s")).orderBy(col("vec_id"))).as("rnk"),
         col("sv").as("cv"))
 
-  /** Statically unrolled squared L2 over one subspace (SubDim = 4 terms,
-    * left-to-right adds — the oracle's list_sum fold order). element_at
-    * with computed indices stays inside whole-stage codegen; a ragged row
-    * fails loudly under ANSI (the EmbeddingsSpec 64-dim contract). */
-  private def l2sq(a: Column, b: Column): Column =
-    (1 to SubDim).map { i =>
-      (element_at(a, i) - element_at(b, i)) * (element_at(a, i) - element_at(b, i))
-    }.reduce(_ + _)
-
   /** One-row nested codebook [s][rnk] → cv — the broadcastable form the
     * row-local encoder and the per-query LUT fold over. Two tiny
     * aggregations over the NSub × k_cb codebook rows; the codebook is
@@ -300,21 +293,6 @@ object IvfIndex {
     v.crossJoin(broadcast(cbNested(cb)))
       .select(col("vec_id"),
         call_function("pq_encode", col("ne"), col("cbs")).as("codes"))
-
-  /** The join-based encode the kernel replaced — kept as the spec's
-    * bit-parity reference (PqEncodeSpec runs both over the same corpus
-    * sample and asserts identical codes). */
-  private[graft] def encodeCodesJoinForm(v: DataFrame, cb: DataFrame): DataFrame = {
-    val aggs = (1 to NSub).map { si =>
-      min(when(col("s") === si,
-        struct(l2sq(col("sv"), col("cv")).as("d2"), col("rnk")))).as(s"c$si")
-    }
-    subspacesOf(v).join(broadcast(cb), "s")
-      .groupBy(col("vec_id"))
-      .agg(aggs.head, aggs.tail: _*)
-      .select(col("vec_id"),
-        array((1 to NSub).map(si => col(s"c$si").getField("rnk")): _*).as("codes"))
-  }
 
   /** ADC approximation of cos(q, v): Σ_s lut[s][codes[s]] — one native
     * codegen'd loop per (query, vector) pair ([[graft.functions.AdcScore]],

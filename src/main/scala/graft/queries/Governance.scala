@@ -358,7 +358,8 @@ object Governance extends QueryGroup {
 
     // Data-skipping read (Delta file-stats pruning): cluster orders by
     // o_orderdate (range-partition + sort → selective per-file min/max),
-    // then readWhere consults the commit-time stats table and scans ONLY
+    // then readWhere consults the per-file stats in the version's log
+    // entry (on the driver) and scans ONLY
     // the files overlapping the half-year window. `files_pruned` asserts
     // in-plan that the scan touched strictly fewer files than the table
     // holds — the oracle expects literal TRUE, so the PRUNING itself is

@@ -16,6 +16,13 @@ class DedupSpec extends SparkSpec {
   private val unrelated = "one two three four five six seven eight nine ten " +
     "eleven twelve thirteen fourteen fifteen sixteen"
 
+  /** Engine-native winnowing fingerprints (xxhash64 shingle hash) — the
+    * 100 TB pairing for [[winnowFingerprints]]: winnowing's detection
+    * guarantee is hash-agnostic, so the kernel flip changes which
+    * shingles are selected but not whether shared runs are caught. */
+  private def winnowFingerprintsNative(text: org.apache.spark.sql.Column, k: Int = 3,
+      w: Int = 4) = call_function("xx_winnow_fps", shingles(text, k), lit(w))
+
   private def docs = Seq(
     (0L, base), (1L, base), (2L, nearDup), (3L, unrelated))
     .toDF("doc_id", "text")

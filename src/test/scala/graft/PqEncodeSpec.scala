@@ -18,6 +18,29 @@ class PqEncodeSpec extends SparkSpec {
   private val SubDim = 4
   private val K = 23
 
+  /** Statically unrolled squared L2 over one subspace (SubDim = 4 terms,
+    * left-to-right adds — the oracle's list_sum fold order). */
+  private def l2sq(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
+    (1 to SubDim).map { i =>
+      (element_at(a, i) - element_at(b, i)) * (element_at(a, i) - element_at(b, i))
+    }.reduce(_ + _)
+
+  /** The join-based encode the kernel replaced — the bit-parity
+    * reference: per (vector, subspace) the min(struct(d2, rnk)) over a
+    * broadcast join with the codebook. */
+  private def encodeCodesJoinForm(v: org.apache.spark.sql.DataFrame,
+      cb: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val aggs = (1 to NSub).map { si =>
+      min(when(col("s") === si,
+        struct(l2sq(col("sv"), col("cv")).as("d2"), col("rnk")))).as(s"c$si")
+    }
+    IvfIndex.subspacesOf(v).join(broadcast(cb), "s")
+      .groupBy(col("vec_id"))
+      .agg(aggs.head, aggs.tail: _*)
+      .select(col("vec_id"),
+        array((1 to NSub).map(si => col(s"c$si").getField("rnk")): _*).as("codes"))
+  }
+
   private def codesOf(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[Int]] =
     df.collect().map(r =>
       r.getLong(0) -> r.getSeq[Int](1).toList.map(identity)).toMap
@@ -31,7 +54,7 @@ class PqEncodeSpec extends SparkSpec {
       (s, r, Array.fill(SubDim)(rnd.nextDouble() * 2 - 1)))
       .toDF("s", "rnk", "cv")
     val native = codesOf(IvfIndex.encodeCodes(vecs, cb))
-    val joined = codesOf(IvfIndex.encodeCodesJoinForm(vecs, cb))
+    val joined = codesOf(encodeCodesJoinForm(vecs, cb))
     assert(native == joined)
     assert(native.size == 300)
     assert(native.values.forall(c => c.length == NSub && c.forall(x => x >= 1 && x <= K)))
@@ -43,7 +66,7 @@ class PqEncodeSpec extends SparkSpec {
     val cb = (for { s <- 1 to NSub; r <- 1 to 5 } yield
       (s, r, Array.fill(SubDim)(0.25))).toDF("s", "rnk", "cv")
     val native = codesOf(IvfIndex.encodeCodes(vecs, cb))
-    val joined = codesOf(IvfIndex.encodeCodesJoinForm(vecs, cb))
+    val joined = codesOf(encodeCodesJoinForm(vecs, cb))
     assert(native == joined)
     assert(native(1L) == List.fill(NSub)(1))
   }
@@ -59,7 +82,7 @@ class PqEncodeSpec extends SparkSpec {
       (s, r, Array.fill(SubDim)(rnd.nextDouble() * 2 - 1)))
       .toDF("s", "rnk", "cv")
     val native = codesOf(IvfIndex.encodeCodes(vecs, cb))
-    val joined = codesOf(IvfIndex.encodeCodesJoinForm(vecs, cb))
+    val joined = codesOf(encodeCodesJoinForm(vecs, cb))
     assert(native == joined)
     assert(native(1L)(2) == 1, "all-NaN subspace must keep rank 1")
   }

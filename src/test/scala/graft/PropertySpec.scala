@@ -230,9 +230,9 @@ class PropertySpec extends SparkSpec {
       // keys are even; probes (odd) can never be present in any version
       t.write(spark.range(n).select((col("id") * 2).as("k"))
         .repartition(4), s"band_$v")
-      val idx = spark.read.parquet(s"$root/_bloom/k/v=$v")
-      val hdr = idx.select("bits", "hashes").limit(1).collect()(0)
-      val (m, h) = (hdr.getInt(0), hdr.getInt(1))
+      val sets = t.bloomSets(v, "k").get
+      val idx = sets.files.toSeq.toDF("file", "positions")
+      val (m, h) = (sets.bits, sets.hashes)
       // the sizing itself must track n: m within a factor of 2 of the
       // textbook solution for the version's max per-file distinct count
       val nFile = spark.read.parquet(t.versionDir(v).toString)

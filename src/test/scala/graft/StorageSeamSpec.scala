@@ -66,6 +66,24 @@ class StorageSeamSpec extends AnyFunSuite {
     assert(loops.size == 1, s"expected ONE retry loop (retrying):\n${loops.mkString("\n")}")
   }
 
+  test("pruning metadata lives in the log entry and the version dir; pruning reads no data") {
+    // the per-file `_stats` tables and the root-level `_bloom/<col>/v=N`
+    // tree are gone: stats ride in the entry, position sets in
+    // `<version dir>/_bloomsets`
+    val layouts = hits("""(?<=["/])(?:_stats|_bloom/)""", _ => true)
+    assert(layouts.isEmpty,
+      s"`_stats` or `_bloom/` path in a string literal:\n${layouts.mkString("\n")}")
+    val lines = sources.collectFirst { case (f, l) if f == tableFile => l }.get
+    val start = lines.indexWhere(_.contains("private def survivors("))
+    assert(start >= 0, s"no pruning helper `survivors` in $tableFile")
+    val end = lines.indexWhere(_.startsWith("  /**"), start)
+    val reads = (start until (if (end < 0) lines.size else end))
+      .filter(i => lines(i).contains("spark.read"))
+      .map(i => s"$tableFile:${i + 1}: ${lines(i).trim}")
+    assert(reads.isEmpty,
+      s"the pruning helper must not read data:\n${reads.mkString("\n")}")
+  }
+
   test("broadcast guards go through ops/Guards.scala; no op keeps its own cap") {
     val counts = hits("""count\(\)\s*<""", _ != guardsFile)
     assert(counts.isEmpty,

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.maint.VersionedTable
 
 /** Maintenance-surface tests: time travel, history, restore, compaction,
@@ -182,10 +183,13 @@ class VersionedTableSpec extends SparkSpec {
       s"stats did not prune: ${pruned.inputFiles.length} of $total files scanned")
     // an out-of-range predicate prunes everything
     assert(t.readWhere("k", 5000L, 6000L).count() == 0)
-    // a version without stats falls back to a full scan
-    val statsDir = t.versionDir(t.latestVersion.get).resolve("_stats")
-    Files.walk(statsDir).sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => Files.delete(p))
+    // a version without stats falls back to a full scan: forge the entry
+    // an older writer would have left, one that lists no files
+    val entry = java.nio.file.Paths.get(t.detail().collect()(0).getString(0),
+      "_log", s"${t.latestVersion.get}.json")
+    Files.writeString(entry,
+      VersionedTable.Commit.parse(Files.readString(entry)).copy(files = None).json)
+    assert(t.fileList(t.latestVersion.get).isEmpty)
     assert(t.readWhere("k", 100L, 150L).count() == full.count())
   }
 
@@ -304,14 +308,58 @@ class VersionedTableSpec extends SparkSpec {
     assert(kept == Set(2L, 3L), s"NULL-predicate row must survive: $kept")
   }
 
+  test("deleteWhere predicates with ']' and '\"' commit and read back") {
+    val t = freshTable()
+    t.write(Seq((1L, Seq("x", "a")), (2L, Seq("a", "b")), (3L, Seq("y", "z")))
+      .toDF("id", "tags"))
+    t.deleteWhere("""tags[1] = "a"""")
+    assert(t.read().collect().map(_.getLong(0)).sorted.toSeq == Seq(2L, 3L))
+    val reopened = new VersionedTable(spark, t.detail().collect()(0).getString(0))
+    assert(reopened.read().collect().map(_.getLong(0)).sorted.toSeq == Seq(2L, 3L))
+    assert(reopened.read(Some(0)).count() == 3)
+  }
+
+  test("log entries round-trip every stat type exactly") {
+    val cols = Seq("b" -> ByteType, "s" -> ShortType, "i" -> IntegerType,
+      "l" -> LongType, "f" -> FloatType, "d" -> DoubleType,
+      "dec" -> DecimalType(18, 2), "str" -> StringType, "bool" -> BooleanType,
+      "dt" -> DateType, "ts" -> TimestampType, "ntz" -> TimestampNTZType)
+    val lo: Map[String, Any] = Map("b" -> (-8).toByte, "s" -> (-300).toShort,
+      "i" -> Int.MinValue, "l" -> Long.MinValue, "f" -> 0.1f,
+      "d" -> Double.NegativeInfinity, "dec" -> new java.math.BigDecimal("-12.50"),
+      "str" -> "a \"quoted\" ]\nline", "bool" -> false,
+      "dt" -> java.sql.Date.valueOf("1582-10-04"),
+      "ts" -> java.sql.Timestamp.valueOf("1969-12-31 23:59:59.999999"),
+      "ntz" -> java.time.LocalDateTime.parse("2001-09-01T00:00"))
+    val hi: Map[String, Any] = Map("b" -> Byte.MaxValue, "s" -> Short.MaxValue,
+      "i" -> Int.MaxValue, "l" -> Long.MaxValue, "f" -> Float.MaxValue,
+      "d" -> 1.0 / 3, "dec" -> new java.math.BigDecimal("9999999999999999.99"),
+      "str" -> "Ωmega", "bool" -> true, "dt" -> java.sql.Date.valueOf("9999-12-31"),
+      "ts" -> java.sql.Timestamp.valueOf("2038-01-19 03:14:08.123456"),
+      "ntz" -> java.time.LocalDateTime.parse("2001-09-01T12:34:56.789012"))
+    val entry = VersionedTable.Commit(7, "merge \"x\" [y]", 3, "v7-u",
+      ts = Some("2001-09-01 00:00:00"), feed = true,
+      deletePredicates = Seq("""tags[1] = "a"""", "s = ']'\n"), partitionBy = Seq("p"),
+      files = Some(VersionedTable.FileList(cols, Vector(
+        VersionedTable.DataFile("p=a b/part-0.parquet", 2, lo, hi),
+        VersionedTable.DataFile("p=c/part-1.parquet", 1, Map.empty, Map.empty)))))
+    val back = VersionedTable.Commit.parse(entry.json)
+    assert(back == entry)
+    for ((c, _) <- cols; m <- Seq(lo, hi))
+      assert(back.files.get.files.head.min(c).getClass == lo(c).getClass &&
+        back.files.get.files.head.max(c) == hi(c), c)
+    assert(entry.json.count(_ == '\n') == 1, "an entry is one line")
+  }
+
   test("commit recovers from an orphaned v=N dir left by a crashed writer") {
     val t = freshTable()
     t.write(Seq(1).toDF("id"))
-    // forge the crash state: a version-1 dir with data and stats fully
-    // staged, no log entry naming it
+    // forge the crash state: a version-1 dir with data and position sets
+    // fully staged, no log entry naming it
     val root = t.detail().collect()(0).getString(0)
     Seq(99).toDF("id").write.parquet(s"$root/v1-crashed")
-    Seq(99).toDF("id").write.parquet(s"$root/v1-crashed/_stats")
+    val sets = Files.createDirectories(java.nio.file.Paths.get(root, "v1-crashed", "_bloomsets"))
+    Files.writeString(sets.resolve("id"), """{"bits":64,"hashes":1,"type":"int","files":{}}""")
     assert(t.latestVersion.contains(0L))
     val v1 = t.write(Seq(1, 2).toDF("id"))
     assert(v1 == 1L && t.read().count() == 2, "orphan must not block the commit")
@@ -809,9 +857,10 @@ class VersionedTableSpec extends SparkSpec {
     assert(alive.collect().map(_.getLong(0)).toSeq == Seq(399L))
     assert(alive.inputFiles.length < total, "deleteWhere head lost bloom pruning")
     // vacuum drops the old versions' index dirs with their data
+    val v0Sets = t.versionDir(0).resolve("_bloomsets")
+    assert(Files.exists(v0Sets))
     t.vacuum(keepLast = 1)
-    assert(!new java.io.File(
-      t.detail().collect()(0).getString(0) + "/_bloom/id/v=0").exists())
+    assert(!Files.exists(v0Sets))
   }
 
   test("readFiltered equals full-scan filter for 60 random predicates (seeded)") {
@@ -1116,9 +1165,9 @@ class VersionedTableSpec extends SparkSpec {
       cfgLines.head.contains(""""hashes":3"""), cfgLines.head)
     // commit-time maintenance of the NEXT version uses the new parameters
     t.write(spark.range(200).toDF("id").withColumn("v", col("id") * 2))
-    val idx = spark.read.parquet(s"$rootDir/_bloom/id/v=1")
-    val hdr = idx.select("bits", "hashes").distinct().collect()
-    assert(hdr.length == 1 && hdr(0).getInt(0) == 256 && hdr(0).getInt(1) == 3,
+    val idx = t.bloomSets(1, "id").get
+    val hdr = Seq((idx.bits, idx.hashes))
+    assert(hdr.length == 1 && hdr(0)._1 == 256 && hdr(0)._2 == 3,
       s"maintained index kept stale sizing: ${hdr.mkString(",")}")
     // and the index still prunes correctly
     val got = t.readFiltered("id = 150").collect()
@@ -1210,14 +1259,9 @@ class VersionedTableSpec extends SparkSpec {
     val t = freshTable()
     t.write(spark.range(0, 2000).toDF("id").repartition(4))
     t.buildBloomIndex("id")
-    val root = t.detail().collect()(0).getString(0)
-    val before = spark.read.parquet(s"$root/_bloom/id/v=0")
-      .select("file", "positions").collect()
-      .map(r => r.getString(0) -> r.getSeq[Int](1)).toMap
+    val before = t.bloomSets(0, "id").get.files
     t.append(spark.range(2000, 2100).toDF("id").coalesce(1)) // v1
-    val after = spark.read.parquet(s"$root/_bloom/id/v=1")
-      .select("file", "positions").collect()
-      .map(r => r.getString(0) -> r.getSeq[Int](1)).toMap
+    val after = t.bloomSets(1, "id").get.files
     // carried files keep their EXACT position sets (not recomputed under
     // different sizing), and the appended file gains a row
     before.foreach { case (f, pos) =>
@@ -1444,21 +1488,6 @@ class VersionedTableSpec extends SparkSpec {
       "stats skipping lost rows after the race")
   }
 
-  test("manifest serializer rejects quotes, ']' and line breaks before anything is written") {
-    // the manifest is line-oriented JSON parsed by regex with no
-    // unescaping: '\"' breaks the line, ']' truncates list fields, and a
-    // newline SPLITS the entry — the fragment would fail the version
-    // regex on every later read and brick the table. All three must be
-    // rejected at write time, with the table left readable.
-    val t = freshTable()
-    t.write(Seq((1, "a")).toDF("id", "v"))
-    for (bad <- Seq("v = 'a\"b'", "tags[1] = 'x'", "v = 'a\nb'", "v = 'a\rb'")) {
-      intercept[IllegalArgumentException](t.deleteWhere(bad))
-    }
-    assert(t.read().count() == 1 && t.versions == Seq(0L),
-      "rejected predicates must leave the table untouched")
-  }
-
   test("a crashed commit's temp entry and dir stay invisible; vacuum sweeps them") {
     // a writer that died inside the commit of version 2: its dir fully
     // staged, its entry written to the temp but never linked into place
@@ -1515,7 +1544,7 @@ class VersionedTableSpec extends SparkSpec {
     val statCols = readBack.schema.fields.map(_.name).toSeq
     val foot = VersionedTable.footerStats(spark, v0.toString, readBack.schema, statCols)
     assert(foot.isDefined, "footer fast path must engage for this mixed-type table")
-    assert(foot.get._1 == 4L, s"footer row count: ${foot.get._1}")
+    assert(foot.get.map(_.rows).sum == 4L, s"footer row count: ${foot.get.map(_.rows).sum}")
     val file = url_decode(regexp_replace(
       regexp_replace(input_file_name(), s"^.*/${v0.getFileName}/", ""), "\\+", "%2B"))
     val scan = readBack.groupBy(file.as("file"))
@@ -1523,8 +1552,9 @@ class VersionedTableSpec extends SparkSpec {
         struct(statCols.map(c => min(col(c)).as(c)): _*).as("mins"),
         struct(statCols.map(c => max(col(c)).as(c)): _*).as("maxs"))
       .orderBy("file").collect().toSeq
-    val stored = spark.read.parquet(v0.resolve("_stats").toString)
-      .orderBy("file").collect().toSeq
+    val stored = t.fileList(0).get.files.sortBy(_.path).map(f => org.apache.spark.sql.Row(
+      f.path, f.rows, org.apache.spark.sql.Row.fromSeq(statCols.map(f.min.getOrElse(_, null))),
+      org.apache.spark.sql.Row.fromSeq(statCols.map(f.max.getOrElse(_, null)))))
     assert(stored == scan,
       s"footer stats must equal scan stats:\n  stored=$stored\n  scan  =$scan")
 
@@ -1538,8 +1568,8 @@ class VersionedTableSpec extends SparkSpec {
     val rb2 = spark.read.parquet(t2v0)
     assert(VersionedTable.footerStats(spark, t2v0, rb2.schema, Seq("l", "d")).isEmpty,
       "NaN chunk must fail the footer gate")
-    val s2 = spark.read.parquet(s"$t2v0/_stats")
-    assert(s2.agg(sum(col("cnt"))).collect()(0).getLong(0) == 2L)
+    val s2 = t2.fileList(0).get.files
+    assert(s2.map(_.rows).sum == 2L)
   }
 }
 

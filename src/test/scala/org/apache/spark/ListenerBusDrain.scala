@@ -1,0 +1,8 @@
+package org.apache.spark
+
+/** Test access to the listener bus: block until every posted event has
+  * reached the listeners, so status-tracker counts taken afterwards are
+  * complete. */
+object ListenerBusDrain {
+  def apply(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty(10000L)
+}
